@@ -370,13 +370,7 @@ def _bucket_pairs(
     """
     keys = list(key_cols)
     if max_bucket_size is not None:
-        banded = (
-            banded.withColumn(
-                "__n", F.count(F.lit(1)).over(Window.partitionBy(*keys))
-            )
-            .filter(F.col("__n") <= max_bucket_size)
-            .drop("__n")
-        )
+        banded = cap_groups(banded, keys, max_bucket_size)
     members = banded.groupBy(*keys).agg(
         F.array_sort(
             F.collect_list(F.struct(id_col, *payload_cols))
@@ -532,22 +526,39 @@ def banded_buckets(
     )
 
 
-def cap_buckets(b: DataFrame, max_bucket_size: int) -> DataFrame:
-    """Drop rows in degenerate buckets (> max occupancy). No n > 1
-    floor — in a CROSS-corpus join a singleton bucket still pairs
-    with the other side's occupants (the self-join candidate path
-    applies its own floor separately).
+def _free_col(df: DataFrame, name: str) -> str:
+    """``name``, prefixed with underscores until no column of ``df``
+    carries it (compared case-insensitively, as the analyzer does) —
+    an internal column that can never shadow or drop a caller's."""
+    taken = {c.lower() for c in df.columns}
+    while name.lower() in taken:
+        name = "_" + name
+    return name
 
-    Window count, not groupBy + re-join: one pass over the bucket
-    rows, shuffled by the same (band, bucket) key the downstream
-    bucket join uses (guide §2.4; row retention identical)."""
+
+def cap_groups(df: DataFrame, keys, max_size: int) -> DataFrame:
+    """Drop every row of a ``keys`` group holding more than
+    ``max_size`` rows — the occupancy gate of every bucket join.
+
+    Window count, not groupBy + re-join: one pass over the rows,
+    shuffled by the same key the downstream bucket join or
+    aggregation uses (guide §2.4; row retention identical), and the
+    per-group buffer spills. The count column is named free of
+    ``df``'s columns, so caller columns pass through untouched."""
+    n = _free_col(df, "__n")
     return (
-        b.withColumn(
-            "__n", F.count(F.lit(1)).over(Window.partitionBy("band", "bucket"))
-        )
-        .filter(F.col("__n") <= max_bucket_size)
-        .drop("__n")
+        df.withColumn(n, F.count(F.lit(1)).over(Window.partitionBy(*keys)))
+        .filter(F.col(n) <= max_size)
+        .drop(n)
     )
+
+
+def cap_buckets(b: DataFrame, max_bucket_size: int) -> DataFrame:
+    """Drop rows in degenerate (band, bucket) buckets (> max
+    occupancy). No n > 1 floor — in a CROSS-corpus join a singleton
+    bucket still pairs with the other side's occupants (the self-join
+    candidate path applies its own floor separately)."""
+    return cap_groups(b, ("band", "bucket"), max_bucket_size)
 
 
 def minhash_join_signatures(
@@ -1230,7 +1241,7 @@ def simhash_banded(
         F.col("bb.key").alias("key"),
     )
     if max_bucket_size is not None:
-        # r14 (guide §2.4, the cap_buckets shape): occupancy gate as a
+        # r14 (guide §2.4, cap_groups): occupancy gate as a
         # window count over the SAME key the downstream band join
         # shuffles on — one pass on a shared exchange instead of a
         # size profile + re-join that shuffled the banded rows twice.
@@ -1238,14 +1249,7 @@ def simhash_banded(
         # an inner equi-join on these keys, which drops NULL-key rows
         # in both shapes; no n > 1 floor — cross-corpus singletons
         # still pair with the other side).
-        keys = extra + ["band", "key"]
-        b = (
-            b.withColumn(
-                "__n", F.count(F.lit(1)).over(Window.partitionBy(*keys))
-            )
-            .filter(F.col("__n") <= max_bucket_size)
-            .drop("__n")
-        )
+        b = cap_groups(b, extra + ["band", "key"], max_bucket_size)
     return b
 
 

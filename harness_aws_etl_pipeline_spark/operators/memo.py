@@ -21,6 +21,10 @@ least-recently-used entry beyond ``capacity`` — storage is bounded by
 ``capacity × intermediate size`` per operator family, not by the
 number of distinct inputs the session ever processed.
 
+:meth:`PlanMemo.get_or_value` holds a driver-side value instead (a
+collected model, say) under the same keying and eviction — nothing is
+persisted, but the job that collects it is skipped on a hit.
+
 Hit validation is two-layer, mirroring what Spark's own CacheManager
 does: the 32-bit canonical ``semanticHash`` is only the index; a hit
 must also pass ``sameResult`` against the stored analyzed plan (a
@@ -57,15 +61,20 @@ def _analyzed(df: DataFrame):
 
 
 class _Entry:
-    __slots__ = ("df", "plan", "pin")
+    __slots__ = ("df", "plan", "pin", "persisted")
 
-    def __init__(self, df: DataFrame, plan, pin):
-        self.df = df
+    def __init__(self, df, plan, pin, persisted: bool = True):
+        self.df = df  # the held frame, or a driver-side value
         self.plan = plan  # analyzed plan for sameResult confirmation
         # `pin` keeps identity-keyed fallback objects alive: an id()
         # key is only unambiguous while the object it came from cannot
         # be garbage-collected and its id recycled
         self.pin = pin
+        self.persisted = persisted  # df is a persisted frame to unpersist
+
+    def release(self) -> None:
+        if self.persisted:
+            self.df.unpersist()
 
 
 def _session_live(df: DataFrame) -> bool:
@@ -96,9 +105,22 @@ class PlanMemo:
         IVF quantizer's seeding collect + Lloyd steps), where keying
         on the output would memoize the storage but still pay the
         derivation on every call."""
+        return self._by_input(key_df, extra_key, compute, persist=True)
+
+    def get_or_value(self, key_df: DataFrame, extra_key, compute):
+        """Like :meth:`get_or_compute`, for a driver-side VALUE derived
+        from ``key_df`` (e.g. a collected k×dim model): held as
+        returned, nothing persisted — repeated calls skip the Spark
+        job(s) that derive it. Same keying, validation and staleness
+        contract as the frame entries."""
+        return self._by_input(key_df, extra_key, compute, persist=False)
+
+    def _by_input(self, key_df: DataFrame, extra_key, compute, persist: bool):
         plan = _analyzed(key_df)
         base = plan.semanticHash() if plan is not None else id(key_df)
-        return self._lookup((base, extra_key), plan, compute, pin=key_df)
+        return self._lookup(
+            (base, extra_key), plan, compute, pin=key_df, persist=persist
+        )
 
     def _hit_valid(self, entry: _Entry, plan) -> bool:
         if entry.plan is not None and plan is not None:
@@ -109,10 +131,10 @@ class PlanMemo:
                 return False
         return True
 
-    def _lookup(self, key, plan, compute, pin) -> DataFrame:
+    def _lookup(self, key, plan, compute, pin, persist: bool = True):
         with self._lock:
             hit = self._entries.get(key)
-            if hit is not None and not _session_live(hit.df):
+            if hit is not None and not _session_live(hit.pin):
                 # the session every held frame belonged to is gone —
                 # drop them all (no unpersist possible on a dead JVM)
                 self._entries.clear()
@@ -121,7 +143,7 @@ class PlanMemo:
                 self._entries.move_to_end(key)
                 return hit.df
         # compute outside the lock — it may launch Spark jobs
-        persisted = compute().persist()
+        persisted = compute().persist() if persist else compute()
         evicted = []
         with self._lock:
             race = self._entries.get(key)
@@ -135,12 +157,12 @@ class PlanMemo:
                 stale = self._entries.pop(key, None)
                 if stale is not None:  # collided entry being replaced
                     evicted.append(stale)
-                self._entries[key] = _Entry(persisted, plan, pin)
+                self._entries[key] = _Entry(persisted, plan, pin, persist)
                 while len(self._entries) > self._capacity:
                     _, old = self._entries.popitem(last=False)
                     evicted.append(old)
         for old in evicted:
-            old.df.unpersist()
+            old.release()
         return persisted
 
     def __len__(self) -> int:
@@ -152,7 +174,7 @@ class PlanMemo:
             self._entries.clear()
         for e in entries:
             try:
-                e.df.unpersist()
+                e.release()
             except Exception:
                 pass  # session may already be gone
 

@@ -42,7 +42,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from harness_aws_etl_pipeline_spark.operators.similarity import (
+    _cent_arrays,
     _dim_of,
+    _probe_order,
+    _unit_rows,
     _vec_matrix,
 )
 
@@ -60,13 +63,6 @@ __all__ = [
     "sq_encode",
     "sq_decode",
 ]
-
-
-def _unit_rows(mat):
-    import numpy as np
-
-    n = np.linalg.norm(mat, axis=1)
-    return mat / np.where(n == 0.0, 1.0, n)[:, None]
 
 
 def _kmeans_1sub(x, k: int, iters: int) -> "object":
@@ -421,21 +417,6 @@ def ivfpq_index(
     )
 
 
-def _cent_arrays(centroids: DataFrame):
-    """Collected, id-sorted, unit-normalized centroid arrays —
-    the one coarse-quantizer representation every residual-path
-    function shares (assignment, residual subtraction, query bias
-    all use THIS normalization or the geometry silently drifts)."""
-    import numpy as np
-
-    crows = centroids.orderBy("centroid_id").collect()
-    if not crows:
-        raise ValueError("empty centroid set")
-    cids = np.array([r["centroid_id"] for r in crows], dtype=np.int64)
-    cmat = np.asarray([r["centroid"] for r in crows], dtype=np.float64)
-    return cids, _unit_rows(cmat)
-
-
 def _encode_residual(
     assigned: DataFrame,
     model: dict,
@@ -651,12 +632,9 @@ def ivfpq_topk(
     qids = [r[0] for r in qrows]
     qunit = _unit_rows(qmat)
 
-    crows = centroids.orderBy("centroid_id").collect()
-    if not crows:
+    cids, cunit = _cent_arrays(centroids)
+    if not len(cids):
         raise ValueError("empty centroid set")
-    cids = np.array([r["centroid_id"] for r in crows], dtype=np.int64)
-    cmat = np.asarray([r["centroid"] for r in crows], dtype=np.float64)
-    cunit = _unit_rows(cmat)
 
     residual = bool(model.get("residual"))
     occ: dict[int, int] | None = None
@@ -670,8 +648,8 @@ def ivfpq_topk(
             .collect()
         }
     kept_qids, luts, probes = [], [], []
-    nprobe = min(nprobe, len(crows))
-    cap = min(nprobe_max or len(crows), len(crows))
+    nprobe = min(nprobe, len(cids))
+    cap = min(nprobe_max or len(cids), len(cids))
     for i, ok in enumerate(qvalid):
         if not ok:
             continue
@@ -681,8 +659,7 @@ def ivfpq_topk(
                 [books[s] @ qunit[i, s * dsub : (s + 1) * dsub] for s in range(m)]
             )
         )
-        sims = cunit @ qunit[i]
-        order = np.lexsort((cids, -sims))
+        sims, order = _probe_order(qunit[i], cids, cunit)
         if occ is None:
             order = order[:nprobe]
         else:
@@ -830,12 +807,9 @@ def calibrate_nprobe(
     if not pairs:
         raise ValueError("calibration sample produced no exact neighbors")
 
-    crows = centroids.orderBy("centroid_id").collect()
-    if not crows:
+    cids, cunit = _cent_arrays(centroids)
+    if not len(cids):
         raise ValueError("empty centroid set")
-    cids = np.array([r["centroid_id"] for r in crows], dtype=np.int64)
-    cmat = np.asarray([r["centroid"] for r in crows], dtype=np.float64)
-    cunit = _unit_rows(cmat)
     nlist = len(cids)
 
     need = sorted({n for _, n in pairs})
@@ -863,7 +837,7 @@ def calibrate_nprobe(
         nv = np.linalg.norm(v)
         if not np.isfinite(nv) or nv == 0:
             continue
-        order = np.lexsort((cids, -(cunit @ (v / nv))))
+        order = _probe_order(v / nv, cids, cunit)[1]
         probe_order[r[id_col]] = order
         positions[r[id_col]] = {int(cids[j]): p for p, j in enumerate(order)}
 

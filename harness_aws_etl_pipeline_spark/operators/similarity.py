@@ -43,6 +43,13 @@ _FLAT_MEMO = PlanMemo()
 # source per pass, and the projection keeps the entry at id + vector
 # width.
 _IVF_SRC_MEMO = PlanMemo()
+# the IVF "add" step: a corpus's inverted lists (id, vec, centroid_id)
+# under one quantizer, built once and read by every search against the
+# same (corpus, quantizer) — see ivf_topk
+_LISTS_MEMO = PlanMemo()
+# the collected (ids, unit rows) arrays of a centroid frame, per frame
+# plan: a search reads its quantizer without a Spark job
+_MODEL_MEMO = PlanMemo()
 
 
 def _ivf_src(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -88,6 +95,135 @@ def _vec_matrix(values, dim: int):
     return mat, valid
 
 
+def _unit_rows(mat):
+    import numpy as np
+
+    n = np.linalg.norm(mat, axis=1)
+    return mat / np.where(n == 0.0, 1.0, n)[:, None]
+
+
+def _cent_arrays(centroids: DataFrame):
+    """Collected, id-sorted, unit-normalized centroid arrays —
+    the one coarse-quantizer representation every residual-path
+    function shares (assignment, residual subtraction, query bias,
+    probe order all use THIS normalization or the geometry silently
+    drifts). An empty centroid set gives empty arrays. The k rows are
+    sorted on the driver: a Spark ``orderBy`` would add a sampling job
+    and a shuffle to every collect of the model."""
+    import numpy as np
+
+    crows = sorted(centroids.collect(), key=lambda r: r["centroid_id"])
+    cids = np.array([r["centroid_id"] for r in crows], dtype=np.int64)
+    if not crows:
+        return cids, np.zeros((0, 0))
+    cmat = np.asarray([r["centroid"] for r in crows], dtype=np.float64)
+    return cids, _unit_rows(cmat)
+
+
+def _probe_order(q_unit, cids, cunit):
+    """One query's inverted lists in probe order: ``(sims, order)``,
+    the query's cosine to every centroid and the list positions
+    sorted by ``(-sim, centroid_id)``. Every IVF search picks its
+    probes here, so plain IVF and IVF-PQ probe the same lists."""
+    import numpy as np
+
+    sims = cunit @ q_unit
+    return sims, np.lexsort((cids, -sims))
+
+
+def _query_batch(queries: DataFrame, id_col: str, vec_col: str, dim: int | None = None):
+    """Collect the query batch — the small side of every search — as
+    ``(ids, float64 matrix)``. NULL vectors and vectors whose length is
+    not ``dim`` (default: the first non-NULL vector's) are dropped: they
+    get no result rows."""
+    import numpy as np
+
+    rows = [
+        r for r in queries.select(id_col, vec_col).collect() if r[vec_col] is not None
+    ]
+    if dim is None and rows:
+        dim = len(rows[0][vec_col])
+    rows = [r for r in rows if len(r[vec_col]) == dim]
+    ids = np.array([r[id_col] for r in rows])
+    mat = np.array([list(r[vec_col]) for r in rows], dtype=np.float64)
+    return ids, mat.reshape(len(rows), dim or 0)
+
+
+def _local_topk(q_ids, q_mat, k: int, id_col: str, vec_col: str, lists=None):
+    """The Arrow top-k kernel (a ``mapInPandas`` function) behind the
+    exact-cosine searches. Per candidate batch: one (batch × queries)
+    cosine matrix by BLAS, then each query's LOCAL top-k by
+    ``(-cosine, id)`` — the expression path's deterministic tie-break —
+    with the query itself excluded. Only O(batches × queries × k) rows
+    leave the kernel; :func:`_global_topk` merges them.
+
+    ``lists = (cids, probed)`` restricts each query to the inverted
+    lists it probes: ``probed`` is a (queries × lists) bool matrix over
+    the sorted ``cids``, and batches carry ``centroid_id``."""
+    from collections.abc import Iterator as _Iter
+
+    import numpy as np
+    import pandas as pd
+
+    dim = q_mat.shape[1]
+    q_norm = np.linalg.norm(q_mat, axis=1)
+    q_norm[q_norm == 0] = 1.0
+
+    def _score(batches: "_Iter[pd.DataFrame]") -> "_Iter[pd.DataFrame]":
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            c_mat, valid = _vec_matrix(pdf[vec_col], dim)
+            c_ids = pdf[id_col].to_numpy()[valid]
+            c_mat = c_mat[valid]
+            if not len(c_mat):  # batch was all NULL/ragged vectors
+                continue
+            if lists is not None:
+                cids, probed = lists
+                pos = np.searchsorted(cids, pdf["centroid_id"].to_numpy()[valid])
+                allowed = probed[:, pos]  # queries × batch rows
+            c_norm = np.linalg.norm(c_mat, axis=1)
+            c_norm[c_norm == 0] = 1.0
+            sims = (c_mat @ q_mat.T) / c_norm[:, None] / q_norm[None, :]
+            out_q, out_n, out_s = [], [], []
+            for j, qid in enumerate(q_ids):
+                mask = c_ids != qid
+                if lists is not None:
+                    mask &= allowed[j]
+                ids_j, sims_j = c_ids[mask], sims[mask, j]
+                if not len(ids_j):
+                    continue
+                order = np.lexsort((ids_j, -sims_j))[:k]
+                out_q.extend([qid] * len(order))
+                out_n.extend(ids_j[order].tolist())
+                out_s.extend(sims_j[order].tolist())
+            yield pd.DataFrame(
+                {"query_id": out_q, "neighbor_id": out_n, "cosine": out_s}
+            )
+
+    return _score
+
+
+def _global_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The final window every cosine top-k ends with: rank by
+    ``(cosine desc, neighbor_id)`` per query, keep ``k``, round the
+    cosine to 6 dp. Returns (query_id, rank, neighbor_id, cosine)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", F.round("cosine", 6).alias("cosine"))
+    )
+
+
+def _empty_topk(spark, id_type: str = "long") -> DataFrame:
+    return spark.createDataFrame(
+        [], f"query_id {id_type}, rank int, neighbor_id {id_type}, cosine double"
+    )
+
+
 def brute_force_topk(
     candidates: DataFrame,
     queries: DataFrame,
@@ -113,14 +249,7 @@ def brute_force_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cosine", cosine_similarity("q_vec", "c_vec"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("cosine", 6).alias("cosine"))
-    )
+    return _global_topk(scored, k)
 
 
 def brute_force_topk_arrow(
@@ -142,66 +271,14 @@ def brute_force_topk_arrow(
     matrix. Identical results to brute_force_topk (same ordering and
     tie-break).
     """
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-
-    q_rows = [
-        r
-        for r in queries.select(id_col, vec_col).collect()
-        if r[vec_col] is not None
-    ]
-    if not q_rows:  # no (valid) queries → empty result, right schema
-        return candidates.sparkSession.createDataFrame(
-            [], "query_id long, rank int, neighbor_id long, cosine double"
-        )
-    dim = len(q_rows[0][vec_col])
-    q_rows = [r for r in q_rows if len(r[vec_col]) == dim]
-    q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([list(r[vec_col]) for r in q_rows], dtype=np.float64)
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    q_norm[q_norm == 0] = 1.0
-
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            c_mat, valid = _vec_matrix(pdf[vec_col], dim)
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)[valid]
-            c_mat = c_mat[valid]
-            if not len(c_mat):  # batch was all NULL/ragged vectors
-                continue
-            c_norm = np.linalg.norm(c_mat, axis=1)
-            c_norm[c_norm == 0] = 1.0
-            sims = (c_mat @ q_mat.T) / c_norm[:, None] / q_norm[None, :]
-            out_q, out_n, out_s = [], [], []
-            for j, qid in enumerate(q_ids):
-                col = sims[:, j]
-                mask = c_ids != qid
-                ids_j, sims_j = c_ids[mask], col[mask]
-                if not len(ids_j):
-                    continue
-                # local top-k: sort by (-sim, id) for the same
-                # deterministic tie-break as the expression version
-                order = np.lexsort((ids_j, -sims_j))[:k]
-                out_q.extend([qid] * len(order))
-                out_n.extend(ids_j[order].tolist())
-                out_s.extend(sims_j[order].tolist())
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "cosine": out_s}
-            )
-
+    q_ids, q_mat = _query_batch(queries, id_col, vec_col)
+    if not len(q_ids):  # no (valid) queries → empty result, right schema
+        return _empty_topk(candidates.sparkSession)
     local = candidates.select(id_col, vec_col).mapInPandas(
-        _score, "query_id long, neighbor_id long, cosine double"
+        _local_topk(q_ids, q_mat, k, id_col, vec_col),
+        "query_id long, neighbor_id long, cosine double",
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("cosine", 6).alias("cosine"))
-    )
+    return _global_topk(local, k)
 
 
 def _hyperplane(seed: int, dim: int) -> list[float]:
@@ -333,14 +410,8 @@ def lsh_bucketed_topk(
         .select("query_id", "q_vec", "neighbor_id", "c_vec")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        cands.withColumn("cosine", cosine_similarity("q_vec", "c_vec"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("cosine", 6).alias("cosine"))
+    return _global_topk(
+        cands.withColumn("cosine", cosine_similarity("q_vec", "c_vec")), k
     )
 
 
@@ -367,10 +438,15 @@ def ivf_centroids(
     doesn't.
 
     Each Lloyd step: assign every vector to its nearest centroid
-    (k-way scored join against the broadcast centroid set), then
-    average per cluster. Centroids are a model of size k×dim —
-    legitimately driver-resident; everything over the data stays
-    distributed. Returns (centroid_id, centroid array<double>).
+    (Arrow matmul against the centroid set in the task closure), then
+    average per cluster. Everything over the data stays distributed.
+
+    EAGER: the call runs Spark jobs before it returns — the sampling
+    collect, each Lloyd step's collect of the current centroids, and
+    one collect of the final centroids. The returned frame is built
+    from those driver-side rows: the k×dim model (k rows of ``dim``
+    doubles) stays on the driver for the frame's life, so k×dim must
+    fit driver memory. Returns (centroid_id, centroid array<double>).
     """
     import numpy as np
 
@@ -493,18 +569,13 @@ def _assign_nearest(
 
     from pyspark.sql.types import LongType, StructField, StructType
 
-    rows = centroids.orderBy("centroid_id").collect()
+    cids, cunit = _cent_arrays(centroids)
     out_schema = StructType(
         list(df.schema.fields) + [StructField("centroid_id", LongType())]
     )
-    if not rows:
+    if not len(cids):
         return df.limit(0).withColumn("centroid_id", F.lit(None).cast("long"))
-    cids = np.array([r["centroid_id"] for r in rows], dtype=np.int64)
-    cmat = np.array([r["centroid"] for r in rows], dtype=np.float64)
-    cnorm = np.linalg.norm(cmat, axis=1)
-    cunit = cmat / np.where(cnorm == 0.0, 1.0, cnorm)[:, None]
-
-    dim = cmat.shape[1]
+    dim = cunit.shape[1]
 
     def _assign(batches: "_Iter[pd.DataFrame]") -> "_Iter[pd.DataFrame]":
         for pdf in batches:
@@ -563,37 +634,107 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF approximate top-k: coarse-quantize candidates into
     ``n_centroids`` inverted lists, probe the ``nprobe`` nearest lists
-    per query, exact cosine only within probed lists.
-
-    The scale path for large corpora: candidate work per query drops
-    to ~nprobe/n_centroids of the corpus, and the join key is the
-    centroid id (int), never the vector. Returns
+    per query, exact cosine only within probed lists. Returns
     (query_id, rank, neighbor_id, cosine).
 
     ``centroids`` injects a pretrained quantizer — (centroid_id,
-    centroid array<double>) — skipping the k-means training entirely:
-    the standard production IVF shape (train the quantizer once on a
-    sample, reuse it across queries and incremental loads; FAISS's
-    train/add split). ``assign_arrow=False`` routes assignment through
-    the expression fold instead of the numpy matmul so a SQL oracle
-    can reproduce the inverted lists bit-for-bit."""
+    centroid array<double>) — skipping the k-means training; without
+    it the quantizer is trained once per corpus plan and memoized.
+
+    The default path is train / add / search:
+
+    - **add**, once per (corpus, quantizer): the corpus's ``(id, vec)``
+      projection is assigned to its nearest centroids and held as
+      inverted lists ``(id, vec, centroid_id)`` in a plan memo keyed on
+      the corpus plan, the column names and a SHA-256 digest of the
+      collected centroid arrays — a different quantizer never reads
+      another quantizer's lists. Invalid vectors are in no list.
+    - **search**, per call: the query batch is COLLECTED to the driver
+      at call time (it must be the small side, as in
+      :func:`brute_force_topk_arrow`); each query's ``nprobe`` lists are
+      picked there by ``(-cosine, centroid_id)``; one ``mapInPandas``
+      pass over the probed lists only computes every query's local
+      top-k (:func:`_local_topk`) and a window keeps the global top-k.
+      NULL/ragged query vectors get no rows. The collected centroid
+      arrays are memoized per centroid-frame plan, so a repeated search
+      runs no job to read its quantizer.
+
+    Staleness: like every plan memo, the lists and the centroid arrays
+    assume their inputs are immutable for the session — corpus (or
+    centroid) files rewritten in place serve the old lists until
+    :func:`clear_all_memos`.
+
+    ``assign_arrow=False`` keeps the all-expression route: assignment
+    by the cosine fold, probes by a broadcast cross join + window,
+    cosine by zip_with/aggregate, nothing memoized — the route a SQL
+    oracle reproduces bit-for-bit."""
     if centroids is not None:
         cents = centroids
     else:
-        # k×dim model table, read by assignment and the probe broadcast
-        # — memoized on the INPUT corpus plan, so repeated queries
-        # against the same corpus skip the seeding collect + Lloyd
-        # steps entirely
+        # k×dim model table — memoized on the INPUT corpus plan, so
+        # repeated queries against the same corpus skip the seeding
+        # collect + Lloyd steps entirely
         cents = _CENT_MEMO.get_or_compute(
             candidates,
             ("ivf_centroids", n_centroids, id_col, vec_col),
             lambda: ivf_centroids(candidates, n_centroids, id_col, vec_col),
         )
-    assign = _assign_nearest if assign_arrow else _assign_nearest_expr
-    c_assigned = assign(candidates, cents, id_col, vec_col)
+    if not assign_arrow:
+        return _ivf_topk_expr(candidates, queries, cents, k, nprobe, id_col, vec_col)
 
-    q_scored = queries.crossJoin(F.broadcast(cents)).withColumn(
-        "__sim", cosine_similarity(vec_col, "centroid")
+    import hashlib
+
+    import numpy as np
+
+    id_type = candidates.schema[id_col].dataType.simpleString()
+    cids, cunit = _MODEL_MEMO.get_or_value(
+        cents, "cent_arrays", lambda: _cent_arrays(cents)
+    )
+    if not len(cids):  # empty corpus → empty quantizer → no neighbors
+        return _empty_topk(candidates.sparkSession, id_type)
+    q_ids, q_mat = _query_batch(queries, id_col, vec_col, dim=cunit.shape[1])
+    if not len(q_ids):
+        return _empty_topk(candidates.sparkSession, id_type)
+
+    digest = hashlib.sha256(cids.tobytes() + cunit.tobytes()).hexdigest()
+    lists = _LISTS_MEMO.get_or_compute(
+        candidates,
+        ("ivf_lists", id_col, vec_col, digest),
+        lambda: _assign_nearest(
+            _ivf_src(candidates, id_col, vec_col), cents, id_col, vec_col
+        ).filter(F.col("centroid_id").isNotNull()),
+    )
+
+    probed = np.zeros((len(q_ids), len(cids)), dtype=bool)
+    for j, q in enumerate(_unit_rows(q_mat)):
+        probed[j, _probe_order(q, cids, cunit)[1][:nprobe]] = True
+    scan = lists.filter(
+        F.col("centroid_id").isin([int(c) for c in cids[probed.any(axis=0)]])
+    )
+    local = scan.mapInPandas(
+        _local_topk(q_ids, q_mat, k, id_col, vec_col, lists=(cids, probed)),
+        f"query_id {id_type}, neighbor_id {id_type}, cosine double",
+    )
+    return _global_topk(local, k)
+
+
+def _ivf_topk_expr(
+    candidates: DataFrame,
+    queries: DataFrame,
+    cents: DataFrame,
+    k: int,
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """:func:`ivf_topk` in expressions only (``assign_arrow=False``)."""
+    c_assigned = _assign_nearest_expr(
+        candidates.select(id_col, vec_col), cents, id_col, vec_col
+    )
+    q_scored = (
+        queries.select(id_col, vec_col)
+        .crossJoin(F.broadcast(cents))
+        .withColumn("__sim", cosine_similarity(vec_col, "centroid"))
     )
     wq = Window.partitionBy(id_col).orderBy(F.col("__sim").desc(), F.col("centroid_id"))
     q_probes = (
@@ -605,20 +746,14 @@ def ivf_topk(
             "centroid_id",
         )
     )
-
     cands = c_assigned.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"), "centroid_id"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
+    return _global_topk(
         cands.join(F.broadcast(q_probes), "centroid_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", cosine_similarity("q_vec", "c_vec"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("cosine", 6).alias("cosine"))
+        .withColumn("cosine", cosine_similarity("q_vec", "c_vec")),
+        k,
     )
 
 
@@ -722,6 +857,8 @@ def embedding_join(
     (a degenerate bucket costs at most cap² per table, never corpus²,
     and no within-side pairs are generated just to be discarded).
     """
+    from harness_aws_etl_pipeline_spark.operators.dedup_fuzzy import cap_groups
+
     if dim is None:
         dim = _dim_of(left, vec_col)
 
@@ -734,7 +871,7 @@ def embedding_join(
                 F.posexplode("buckets").alias("tbl", "bucket"),
             )
         )
-        # r14 (guide §2.4, the cap_buckets shape): occupancy gate as a
+        # r14 (guide §2.4, cap_groups): occupancy gate as a
         # window count over the SAME (tbl, bucket) key the downstream
         # cross join shuffles on — one pass on a shared exchange
         # instead of a size profile + re-join that shuffled the flat
@@ -742,14 +879,7 @@ def embedding_join(
         # bucket still pairs with the OTHER side's occupants. Row
         # retention identical (the inner cross join below drops
         # NULL-key rows in both shapes).
-        f = (
-            f.withColumn(
-                "__n",
-                F.count(F.lit(1)).over(Window.partitionBy("tbl", "bucket")),
-            )
-            .filter(F.col("__n") <= max_bucket_size)
-            .drop("__n")
-        )
+        f = cap_groups(f, ("tbl", "bucket"), max_bucket_size)
         return f.select(
             "tbl", "bucket", F.col("id").alias(out_id), F.col("vec").alias(vec_out)
         )

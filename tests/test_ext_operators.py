@@ -113,6 +113,34 @@ class TestNgramJaccard:
         assert got.columns == ["text"]
         memo.clear()
 
+    def test_memo_value_entries(self, spark, docs):
+        # get_or_value holds a driver-side value per input plan: the
+        # derivation runs once per plan, nothing enters the cache
+        # manager, and eviction/clear just drop the value
+        from harness_aws_etl_pipeline_spark.operators.memo import (
+            PlanMemo,
+            clear_all_memos,
+        )
+
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        clear_all_memos()
+        memo = PlanMemo(capacity=1)
+        calls = []
+
+        def derive(df):
+            calls.append(df)
+            return [tuple(r) for r in df.collect()]
+
+        ids = docs.select("doc_id")
+        first = memo.get_or_value(ids, "ids", lambda: derive(ids))
+        again = memo.get_or_value(docs.select("doc_id"), "ids", lambda: derive(ids))
+        assert again is first and len(calls) == 1
+        texts = docs.select("text")
+        memo.get_or_value(texts, "ids", lambda: derive(texts))  # evicts
+        assert len(memo) == 1 and len(calls) == 2
+        memo.clear()
+        assert len(memo) == 0 and cache.isEmpty()
+
     def test_finds_planted_near_dup(self, docs):
         pairs = {
             (r["doc_a"], r["doc_b"]): r["jaccard"]
@@ -367,6 +395,35 @@ class TestNearDupClusters:
         )
         assert {(r["a"], r["b"]) for r in rows} == {(7, 9)}
         assert len(rows) == 2  # join multiplicity, no (7,7)
+
+    def test_occupancy_gate_keeps_caller_n_column(self, spark):
+        from harness_aws_etl_pipeline_spark.operators.dedup_fuzzy import (
+            _bucket_pairs,
+            cap_buckets,
+        )
+
+        # the gate's internal count column must not overwrite, filter
+        # on, or drop a caller column that happens to be called __n
+        b = spark.createDataFrame(
+            [(1, 0, 5, 100), (2, 0, 5, 200), (3, 0, 5, 300), (4, 0, 6, 400)],
+            "doc_id long, band int, bucket long, __n long",
+        )
+        got = cap_buckets(b, 2)
+        assert got.columns == b.columns
+        assert [tuple(r) for r in got.collect()] == [(4, 0, 6, 400)]
+
+        banded = b.withColumnRenamed("bucket", "key")
+        pairs = _bucket_pairs(banded, "doc_id", "__n", max_bucket_size=3)
+        got = {
+            (r["a"], r["na"], r["b"], r["nb"])
+            for r in pairs.select(
+                F.col("p.a.doc_id").alias("a"),
+                F.col("p.a.__n").alias("na"),
+                F.col("p.b.doc_id").alias("b"),
+                F.col("p.b.__n").alias("nb"),
+            ).collect()
+        }
+        assert got == {(1, 100, 2, 200), (1, 100, 3, 300), (2, 200, 3, 300)}
 
     def test_bucket_pairs_cap_gates_before_collect_list(self, spark):
         from harness_aws_etl_pipeline_spark.operators.dedup_fuzzy import (

@@ -103,6 +103,102 @@ class TestIvf:
         recall = len(exact & approx) / len(exact)
         assert recall >= 0.5  # probing 3/4 cells on random data
 
+    @staticmethod
+    def _corpus(spark, n=120, dim=6, seed=13):
+        import random
+
+        rnd = random.Random(seed)
+        vecs = [(i, [rnd.uniform(-1, 1) for _ in range(dim)]) for i in range(n)]
+        return spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
+
+    @staticmethod
+    def _axis_centroids(spark, axes, dim=6):
+        rows = [
+            (j, [1.0 if d == a else 0.0 for d in range(dim)])
+            for j, a in enumerate(axes)
+        ]
+        return spark.createDataFrame(rows, "centroid_id long, centroid array<double>")
+
+    def test_repeated_search_reuses_one_lists_entry(self, spark):
+        from harness_aws_etl_pipeline_spark.operators.memo import clear_all_memos
+        from harness_aws_etl_pipeline_spark.operators.similarity import _LISTS_MEMO
+
+        clear_all_memos()
+        df = self._corpus(spark)
+        cents = ivf_centroids(df, k=4)
+        first = ivf_topk(df, df.filter(F.col("vec_id") < 3), k=5, nprobe=2, centroids=cents)
+        first = sorted(map(tuple, first.collect()))
+        lists = next(iter(_LISTS_MEMO._entries.values())).df
+        for lo in (3, 6):  # new query batches, same (corpus, quantizer)
+            q = df.filter(F.col("vec_id").between(lo, lo + 2))
+            assert ivf_topk(df, q, k=5, nprobe=2, centroids=cents).count() == 15
+        assert len(_LISTS_MEMO) == 1
+        assert next(iter(_LISTS_MEMO._entries.values())).df is lists
+        again = ivf_topk(df, df.filter(F.col("vec_id") < 3), k=5, nprobe=2, centroids=cents)
+        assert sorted(map(tuple, again.collect())) == first
+
+    def test_other_quantizer_misses_and_gets_its_own_lists(self, spark):
+        from harness_aws_etl_pipeline_spark.operators.memo import clear_all_memos
+        from harness_aws_etl_pipeline_spark.operators.similarity import _LISTS_MEMO
+
+        df = self._corpus(spark)
+        q = df.filter(F.col("vec_id") < 4)
+        a = self._axis_centroids(spark, (0, 1, 2))
+        b = self._axis_centroids(spark, (3, 4, 5))
+
+        def search(cents):
+            got = ivf_topk(df, q, k=5, nprobe=1, centroids=cents)
+            return sorted(map(tuple, got.collect()))
+
+        clear_all_memos()
+        fresh_b = search(b)
+        clear_all_memos()
+        got_a = search(a)
+        got_b = search(b)
+        assert len(_LISTS_MEMO) == 2  # b missed: it holds its own lists
+        assert got_b == fresh_b
+        assert got_a != got_b
+        # each answer matches its quantizer's expression-route lists
+        for cents, got in ((a, got_a), (b, got_b)):
+            ref = ivf_topk(df, q, k=5, nprobe=1, centroids=cents, assign_arrow=False)
+            assert {(r[0], r[2]) for r in got} == {
+                (r["query_id"], r["neighbor_id"]) for r in ref.collect()
+            }
+
+    def test_clear_all_memos_empties_lists(self, spark):
+        from harness_aws_etl_pipeline_spark.operators.memo import clear_all_memos
+        from harness_aws_etl_pipeline_spark.operators.similarity import (
+            _LISTS_MEMO,
+            _MODEL_MEMO,
+        )
+
+        df = self._corpus(spark)
+        ivf_topk(df, df.limit(2), k=3, n_centroids=3, nprobe=1).collect()
+        assert len(_LISTS_MEMO) >= 1 and len(_MODEL_MEMO) >= 1
+        clear_all_memos()
+        assert len(_LISTS_MEMO) == 0 and len(_MODEL_MEMO) == 0
+
+    def test_corpus_with_centroid_id_column(self, spark):
+        # an earlier IVF assignment (or ivfpq_index output) already
+        # carries centroid_id; searching it must neither fail with an
+        # ambiguous reference nor read that column
+        from harness_aws_etl_pipeline_spark.operators.similarity import _assign_nearest
+
+        df = self._corpus(spark)
+        cents = ivf_centroids(df, k=4)
+        assigned = _assign_nearest(df, cents, "vec_id", "embedding")
+        stale = df.withColumn("centroid_id", F.lit(99).cast("long"))
+        q = df.filter(F.col("vec_id") < 3)
+        for arrow in (True, False):
+            want = sorted(
+                map(tuple, ivf_topk(df, q, k=4, nprobe=2, centroids=cents,
+                                    assign_arrow=arrow).collect())
+            )
+            for corpus in (assigned, stale):
+                got = ivf_topk(corpus, q, k=4, nprobe=2, centroids=cents,
+                               assign_arrow=arrow)
+                assert sorted(map(tuple, got.collect())) == want
+
 
 class TestCompaction:
     def test_compacts_many_files(self, spark, tmp_path):

@@ -8,10 +8,12 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from harness_aws_etl_pipeline_spark.plans.catalog import CATALOG
 from harness_aws_etl_pipeline_spark.session import get_spark
@@ -79,7 +81,7 @@ def main() -> None:
     out.extend(_bucketed_section(spark, sf))
     out.extend(_snaptable_section(spark))
 
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as fh:
         fh.write("\n".join(out))
     print("wrote PLANS.md")
 

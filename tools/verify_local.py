@@ -21,9 +21,16 @@ nanosAsLong/timezone class of bug must be handled inside
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, not whatever copy is on the path
+# — for this process and for the Python workers Spark starts
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 import duckdb
 import pyarrow as pa
