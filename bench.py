@@ -1148,6 +1148,8 @@ def _bench_lake(spark, sf_dir: str) -> dict:
             "rows_ok": scanned == n_rows,
             "commits_replayed": 9,  # v11..v19 after the v10 checkpoint
             "layout_write_s": round(write_s, 3),
+            # the writer shape behind layout_write_s (changed in r14)
+            "write_shape": "repartition(32)+maxRecordsPerFile",
             "fold_s": round(min(fold_samples), 3),
             "fold_runs": [round(s, 3) for s in fold_samples],
             "scan_s": round(scan_s, 3),
@@ -1511,11 +1513,11 @@ def _bench_streaming(spark, sf_dir: str) -> dict:
         write_delta,
     )
     from harness_aws_etl_pipeline_spark.sources.deltaread import read_delta
-    from harness_aws_etl_pipeline_spark.sources.deltastream import (
-        register_delta_stream,
+    from harness_aws_etl_pipeline_spark.sources.lakestream import (
+        register_lake_streams,
     )
 
-    register_delta_stream(spark)
+    register_lake_streams(spark)
     li = (
         tables(spark, sf_dir)["lineitem"]
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")

@@ -138,7 +138,13 @@ def audio_near_dup_pairs(
     max_bucket_size: int = 2000,
 ) -> DataFrame:
     """Audio near-duplicate pairs via the shared banded Hamming join.
-    Returns (doc_a, doc_b, hamming ≤ max_hamming)."""
+    Returns (doc_a, doc_b, hamming ≤ max_hamming).
+
+    Staleness: the sketch rows are memoized per input plan and assume
+    their inputs are immutable for the session — payload files
+    rewritten in place serve the old sketches until
+    :func:`clear_all_memos`.
+    """
     from harness_aws_etl_pipeline_spark.operators.dedup_fuzzy import (
         _bucket_pairs,
         _check_simhash_bands,

@@ -188,6 +188,11 @@ def image_near_dup_pairs(
 
     NULL sketches (undecodable images) are dropped before banding —
     they cannot be judged and must not congregate in a NULL bucket.
+
+    Staleness: the sketch rows are memoized per input plan and assume
+    their inputs are immutable for the session — payload files
+    rewritten in place serve the old sketches until
+    :func:`clear_all_memos`.
     """
     from harness_aws_etl_pipeline_spark.operators.dedup_fuzzy import (
         _bucket_pairs,

@@ -144,7 +144,13 @@ def media_near_dup_pairs(
 ) -> DataFrame:
     """(doc_a, doc_b, modality, hamming) — near-dup pairs within each
     modality; the band join key is (modality, band, key) so sketches
-    from different spaces can never pair."""
+    from different spaces can never pair.
+
+    Staleness: the sketch rows are memoized per input plan and assume
+    their inputs are immutable for the session — payload files
+    rewritten in place serve the old sketches until
+    :func:`clear_all_memos`.
+    """
     from harness_aws_etl_pipeline_spark.operators.dedup_fuzzy import (
         _bucket_pairs,
         _check_simhash_bands,

@@ -177,7 +177,7 @@ def delta_snapshot(
                 actions_from_checkpoint.append(r.asDict(recursive=True))
         else:
             # no JVM — e.g. inside a Python DataSource worker
-            # (sources/deltastream.py): checkpoint parquet via pyarrow
+            # (sources/lakestream.py): checkpoint parquet via pyarrow
             import pyarrow.parquet as pq
 
             def _fix(d):

@@ -1,56 +1,84 @@
-"""Iceberg and Hudi tables as STRUCTURED STREAMING SOURCES — no jar:
-Spark 4 Python DataSources completing the streaming interop trio
-(``sources/deltastream.py`` is the Delta leg).
+"""Delta, Iceberg and Hudi tables as STRUCTURED STREAMING SOURCES — no
+jar: Spark 4 Python DataSources (``pyspark.sql.datasource``) completing
+the interop loop (``stream_to_delta`` is the exactly-once sink).
 
     register_lake_streams(spark)
+    spark.readStream.format("delta_nojar").option("path", p).load()
     spark.readStream.format("iceberg_nojar").option("path", p).load()
     spark.readStream.format("hudi_nojar").option("path", p).load()
 
-- **iceberg_nojar**: the offset is ``{"sid": "<snapshot-id>"}`` — the
-  newest snapshot emitted (``None`` before the first batch). Snapshot
-  ids are STABLE across ``iceberg_expire_snapshots``, unlike list
-  positions: a checkpointed stream resuming after expiration resolves
-  its id against the current snapshot log and fails loudly if that
-  snapshot was expired (legacy positional ``{"idx": N}`` offsets are
-  still accepted). A micro-batch is the data files ADDED between two
+Each format contributes only its offset, its window planner and its
+table-schema lookup; the file partition, the Arrow conformer, the
+reader base and the DataSource base are shared.
+
+- **delta_nojar** (Delta PROTOCOL.md): the offset is
+  ``{"version": N}`` — the newest log version whose adds have been
+  emitted (``startingVersion``, default ``-1`` → include version 0). A
+  micro-batch ``(start, end]`` is the data files ADDED by the commits
+  in that window. Every commit in the window needs its JSON file: a
+  version folded into a checkpoint and log-cleaned raises, naming it,
+  rather than silently skipping its rows. A ``remove`` with
+  ``dataChange`` or a deletion-vector re-add raises (the
+  ``delta_changes`` rule); ``dataChange=false`` compaction re-adds pass
+  over. Partition columns are reattached as typed literals from
+  ``add.partitionValues`` (string/numeric/boolean/date — exotic types
+  reject at planning time). COLUMN-MAPPED tables resolve file columns
+  by physical name (name mode) or parquet field id (id mode) and
+  partitionValues by physical key; NESTED mapped columns reject.
+- **iceberg_nojar** (Iceberg table spec): the offset is
+  ``{"sid": "<snapshot-id>"}`` — the newest snapshot emitted (``None``
+  before the first batch; ``startingIdx`` counts snapshots to skip).
+  Snapshot ids are STABLE across ``iceberg_expire_snapshots``, unlike
+  list positions: a stream resuming after expiration resolves its id
+  against the current snapshot log and fails loudly if that snapshot
+  was expired (legacy positional ``{"idx": N}`` offsets are still
+  accepted). A micro-batch is the data files ADDED between two
   snapshots; windows that drop files or touch the delete-file sets
-  raise (append-only capture, the ``iceberg_changes`` rule).
-- **hudi_nojar**: the offset is ``{"instant": "..."}`` — the newest
-  completed instant emitted. A micro-batch is the file GROUPS that
-  first appeared in the window; rewrites of existing groups,
-  replacecommits, and MOR log files raise (the ``hudi_changes``
+  raise (the ``iceberg_changes`` rule), except operation-``replace``
+  compactions, which pass over.
+- **hudi_nojar** (Hudi tech-specs): the offset is
+  ``{"instant": "..."}`` — the newest completed instant emitted
+  (``startingInstant``, default ``"0"``). A micro-batch is the file
+  GROUPS that first appeared in the window; rewrites of existing
+  groups, replacecommits and MOR log files raise (the ``hudi_changes``
   rule).
 
-``readChangeFeed=true`` (round 13) switches BOTH sources to CHANGE
-ROW consumption — the delta_nojar mirror for the other two formats.
-The schema gains ``_change_type`` / ``_commit_version``; within one
-commit version deletes apply BEFORE inserts (the upsert changelog
-order):
+``readChangeFeed=true`` switches a source to CHANGE ROW consumption;
+the schema gains ``_change_type`` / ``_commit_version``:
 
+- Delta: per commit, ``cdc`` actions (written by the CDF-emitting DML
+  in ``sinks/deltadml``) are the authoritative change rows, pure
+  appends surface as ``insert`` rows, compactions contribute nothing,
+  and a rewrite WITHOUT change data raises. ``_commit_version`` is the
+  log version.
 - Iceberg: an ``iceberg_upsert`` surfaces as key-only ``delete`` rows
   (the equality-delete file) + ``insert`` rows (the new data files);
   an ``iceberg_delete_where`` replays the referenced PREIMAGE rows as
   full-value ``delete`` rows (position deletes resolved in-task);
-  ``iceberg_compact`` snapshots (operation ``replace``) contribute
-  nothing; other file-dropping snapshots reject loudly.
-  ``_commit_version`` is the snapshot's sequence number.
-- Hudi: brand-new file groups are ``insert`` rows; MOR deltacommit
-  log files ARE the change data (avro blocks → ``upsert`` rows,
-  delete blocks → key-only ``delete`` rows on
-  ``_hoodie_record_key``); base-slice rewrites (CoW upserts, MOR
-  compaction) reject loudly — restart the change stream from a fresh
-  checkpoint after them. ``_commit_version`` is the instant as a
-  long.
+  compactions contribute nothing; other file-dropping snapshots reject.
+  ``_commit_version`` is the snapshot's sequence number, and within one
+  version deletes apply BEFORE inserts (the upsert changelog order).
+- Hudi: brand-new file groups are ``insert`` rows; MOR deltacommit log
+  files ARE the change data (avro blocks → ``upsert`` rows, delete
+  blocks → key-only ``delete`` rows on ``_hoodie_record_key``);
+  base-slice rewrites (CoW upserts, MOR compaction) reject — restart
+  the change stream from a fresh checkpoint after them.
+  ``_commit_version`` is the instant as a long.
 
-Both plan offsets driver-side from table metadata (what every client
-does) and read one file per task via pyarrow in the executors'
-Python workers — local/posix paths, like the Delta leg.
+Scale shape: offsets are planned driver-side from table metadata (what
+every client does; the planner runs in a JVM-less Python worker, which
+is why ``delta_snapshot``'s checkpoint replay has a pyarrow path), and
+data is read one file per task via pyarrow in the executors' Python
+workers, emitted as whole Arrow RecordBatches cast to the target
+schema (the Spark 4 Python-DataSource fast path). Local/posix paths;
+an object-store deployment plugs a pyarrow filesystem in here.
 """
 
 from __future__ import annotations
 
+import json
 import posixpath
-import re
+from urllib.parse import unquote
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -59,58 +87,83 @@ from pyspark.sql.datasource import (
 )
 
 __all__ = [
+    "DeltaStreamDataSource",
     "HudiStreamDataSource",
     "IcebergStreamDataSource",
     "register_lake_streams",
 ]
 
 
-class _FilePartition(InputPartition):
-    def __init__(
-        self, path: str, columns: list, arrow_schema=None, change=None
-    ):
-        self.path = path
-        self.columns = columns
-        # target arrow schema (picklable): read() emits whole
-        # RecordBatches — the Spark 4 Python-DataSource fast path
-        self.arrow_schema = arrow_schema
-        # readChangeFeed: ("insert"|"delete"|"upsert", commit_version)
-        # emitted as constant _change_type/_commit_version columns
-        self.change = change
-
-
-def _pad_to_schema(tbl, arrow_schema, change=None):
-    """File columns cast to the target schema; missing columns null
-    out; the change columns (when asked) fill as constants."""
+def _conform(tbl, arrow_schema, change=None, pvalues=None, colmap=None,
+             cm_mode="none"):
+    """``tbl`` as a table of ``arrow_schema``. Each target column is, in
+    order of precedence: a change constant (``change`` is
+    ``(change_type, commit_version)``; a ``None`` change type leaves
+    ``_change_type`` to the file, as Delta cdc files carry it); the file
+    column, cast (Delta column mapping resolves it by parquet field id
+    in id mode or by physical name in name mode); a partition literal
+    from ``pvalues`` (a file column wins, as Delta cdc files carry
+    partition columns inline); else nulls."""
     import pyarrow as pa
 
     n = tbl.num_rows
-    names = set(tbl.column_names)
     consts = {}
     if change is not None:
-        consts = {"_change_type": change[0], "_commit_version": change[1]}
+        if change[0] is not None:
+            consts["_change_type"] = change[0]
+        consts["_commit_version"] = change[1]
+    src = {name: i for i, name in enumerate(tbl.column_names)}
+    if colmap:
+        phys = src
+        if cm_mode == "id":
+            phys = {}
+            for i, fld in enumerate(tbl.schema):
+                fid = (fld.metadata or {}).get(b"PARQUET:field_id")
+                if fid is not None:
+                    phys[int(fid)] = i
+        src = {c: i for c, i in src.items() if c not in colmap} | {
+            c: phys[k] for c, k in colmap.items() if k in phys
+        }
+    pvalues = pvalues or {}
     cols = []
     for field in arrow_schema:
-        if field.name in names:
-            cols.append(tbl.column(field.name).cast(field.type))
-        elif field.name in consts:
-            cols.append(pa.array([consts[field.name]] * n, type=field.type))
+        c = field.name
+        if c in consts:
+            cols.append(pa.array([consts[c]] * n, field.type))
+        elif c in src:
+            cols.append(tbl.column(src[c]).cast(field.type))
+        elif c in pvalues:
+            cols.append(pa.array([pvalues[c]] * n, field.type))
         else:
             cols.append(pa.nulls(n, field.type))
     return pa.table(cols, schema=arrow_schema).combine_chunks()
 
 
-def _read_parquet_rows(partition: _FilePartition):
-    """Arrow-batch read — no per-row Python tuples."""
-    import pyarrow.parquet as pq
+class _FilePartition(InputPartition):
+    """One plain parquet data (or cdc / equality-delete) file. The
+    target arrow schema is picklable, so ``rows()`` emits whole
+    RecordBatches instead of per-row tuples."""
 
-    tbl = pq.read_table(partition.path.removeprefix("file:"))
-    if tbl.num_rows == 0:
-        return
-    out = _pad_to_schema(
-        tbl, partition.arrow_schema, getattr(partition, "change", None)
-    )
-    yield from out.to_batches()
+    def __init__(self, path: str, arrow_schema, change=None, pvalues=None,
+                 colmap=None, cm_mode: str = "none"):
+        self.path = path
+        self.arrow_schema = arrow_schema
+        self.change = change  # readChangeFeed: see _conform
+        self.pvalues = pvalues  # partition column name -> typed value
+        # Delta column mapping: logical name -> physical name (name
+        # mode) or -> delta.columnMapping.id (id mode)
+        self.colmap = colmap
+        self.cm_mode = cm_mode
+
+    def rows(self):
+        import pyarrow.parquet as pq
+
+        tbl = pq.read_table(self.path.removeprefix("file:"))
+        if tbl.num_rows:
+            yield from _conform(
+                tbl, self.arrow_schema, self.change, self.pvalues,
+                self.colmap, self.cm_mode,
+            ).to_batches()
 
 
 class _PosDeletePartition(InputPartition):
@@ -125,31 +178,29 @@ class _PosDeletePartition(InputPartition):
         self.arrow_schema = arrow_schema
         self.version = version
 
+    def rows(self):
+        import pyarrow.parquet as pq
 
-def _read_pos_delete_rows(partition: _PosDeletePartition):
-    import pyarrow.parquet as pq
-
-    dt = pq.read_table(
-        partition.path.removeprefix("file:"), columns=["file_path", "pos"]
-    )
-    by_file: dict[str, list[int]] = {}
-    for fp, pos in zip(
-        dt.column("file_path").to_pylist(), dt.column("pos").to_pylist()
-    ):
-        by_file.setdefault(fp, []).append(int(pos))
-    for fp in sorted(by_file):
-        local = partition.local_of.get(fp)
-        if local is None:
-            raise ValueError(
-                f"position-delete file references {fp!r}, which is not "
-                "a live data file of the prior snapshot"
-            )
-        tbl = pq.read_table(local.removeprefix("file:"))
-        sel = tbl.take(sorted(by_file[fp]))
-        out = _pad_to_schema(
-            sel, partition.arrow_schema, ("delete", partition.version)
+        dt = pq.read_table(
+            self.path.removeprefix("file:"), columns=["file_path", "pos"]
         )
-        yield from out.to_batches()
+        by_file: dict[str, list[int]] = {}
+        for fp, pos in zip(
+            dt.column("file_path").to_pylist(), dt.column("pos").to_pylist()
+        ):
+            by_file.setdefault(fp, []).append(int(pos))
+        for fp in sorted(by_file):
+            local = self.local_of.get(fp)
+            if local is None:
+                raise ValueError(
+                    f"position-delete file references {fp!r}, which is "
+                    "not a live data file of the prior snapshot"
+                )
+            tbl = pq.read_table(local.removeprefix("file:"))
+            sel = tbl.take(sorted(by_file[fp]))
+            yield from _conform(
+                sel, self.arrow_schema, ("delete", self.version)
+            ).to_batches()
 
 
 class _HudiLogPartition(InputPartition):
@@ -163,68 +214,323 @@ class _HudiLogPartition(InputPartition):
         self.instants = set(instants)
         self.key_col = key_col
 
+    def rows(self):
+        import pyarrow as pa
 
-def _read_hudi_log_changes(partition: _HudiLogPartition):
-    import pyarrow as pa
+        from harness_aws_etl_pipeline_spark.sources.hudilog import (
+            decode_log_blocks,
+        )
 
-    from harness_aws_etl_pipeline_spark.sources.hudilog import (
-        decode_log_blocks,
-    )
-
-    with open(partition.path.removeprefix("file:"), "rb") as fh:
-        blocks = decode_log_blocks(fh.read())
-    asch = partition.arrow_schema
-    data_names = [
-        f.name
-        for f in asch
-        if f.name not in ("_change_type", "_commit_version")
-    ]
-    for blk in blocks:
-        inst = blk.get("instant")
-        if inst not in partition.instants:
-            continue
-        version = int(inst)
-        if blk["type"] == "avro":
-            recs = blk["records"]
-            if not recs:
+        with open(self.path.removeprefix("file:"), "rb") as fh:
+            blocks = decode_log_blocks(fh.read())
+        asch = self.arrow_schema
+        data_names = [
+            f.name
+            for f in asch
+            if f.name not in ("_change_type", "_commit_version")
+        ]
+        for blk in blocks:
+            inst = blk.get("instant")
+            if inst not in self.instants:
                 continue
-            tbl = pa.table(
-                {
+            if blk["type"] == "avro" and blk["records"]:
+                recs = blk["records"]
+                tbl = pa.table({
                     n: pa.array(
-                        [r.get(n) for r in recs],
-                        type=asch.field(n).type,
+                        [r.get(n) for r in recs], type=asch.field(n).type
                     )
                     for n in data_names
-                }
-            )
-            out = _pad_to_schema(tbl, asch, ("upsert", version))
-            yield from out.to_batches()
-        elif blk["type"] == "delete":
-            dels = blk["deletes"]
-            if not dels:
-                continue
-            tbl = pa.table(
-                {
-                    partition.key_col: pa.array(
-                        [k for k, _p in dels],
-                        type=asch.field(partition.key_col).type,
+                })
+                change = ("upsert", int(inst))
+            elif blk["type"] == "delete" and blk["deletes"]:
+                tbl = pa.table({
+                    self.key_col: pa.array(
+                        [k for k, _p in blk["deletes"]],
+                        type=asch.field(self.key_col).type,
                     )
-                }
+                })
+                change = ("delete", int(inst))
+            else:
+                continue
+            yield from _conform(tbl, asch, change).to_batches()
+
+
+class _LakeStreamReader(DataSourceStreamReader):
+    """Shared reader state and the executor-side ``read`` dispatch;
+    ``commit`` stays the inherited no-op (the table is not ours to
+    trim). Subclasses plan offsets and partitions."""
+
+    def __init__(self, path: str, schema, start, cdf: bool):
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        self._base = path.rstrip("/")
+        self._asch = to_arrow_schema(schema)
+        self._start = start
+        self._cdf = cdf
+
+    def read(self, partition):
+        return partition.rows()
+
+
+class _LakeStreamSource(DataSource):
+    """Shared ``DataSource`` surface: the ``path`` check, the
+    ``readChangeFeed`` schema extension and the reader construction.
+    Subclasses set the start option and provide ``_table_schema``."""
+
+    _reader: type
+    _start_option: tuple  # (option name, parse, default)
+
+    def _cdf(self) -> bool:
+        return (
+            str(self.options.get("readChangeFeed", "false")).lower()
+            == "true"
+        )
+
+    def _table_schema(self, path: str):
+        raise NotImplementedError
+
+    def schema(self):
+        from pyspark.sql import types as T
+
+        path = self.options.get("path")
+        if not path:
+            raise ValueError(f"{self.name()} needs .option('path', ...)")
+        sch = self._table_schema(path)
+        if not self._cdf():
+            return sch
+        return T.StructType(
+            list(sch.fields)
+            + [
+                T.StructField("_change_type", T.StringType()),
+                T.StructField("_commit_version", T.LongType()),
+            ]
+        )
+
+    def streamReader(self, schema) -> DataSourceStreamReader:
+        opt, parse, default = self._start_option
+        return self._reader(
+            self.options["path"],
+            schema,
+            parse(self.options.get(opt, default)),
+            self._cdf(),
+        )
+
+
+# --------------------------------------------------------------- Delta
+
+
+def _typed_partition_value(raw: str | None, dt) -> object:
+    if raw is None:
+        return None
+    t = dt.typeName()
+    if t in ("byte", "short", "integer", "long"):
+        return int(raw)
+    if t in ("float", "double"):
+        return float(raw)
+    if t == "boolean":
+        return raw.lower() == "true"
+    if t == "string":
+        return raw
+    if t == "date":
+        import datetime as _dt
+
+        return _dt.date.fromisoformat(raw)
+    raise ValueError(
+        f"partition column type {t!r} is not supported by the "
+        "delta_nojar stream source"
+    )
+
+
+class _DeltaStreamReader(_LakeStreamReader):
+    def __init__(self, path: str, schema, start: int, cdf: bool):
+        from harness_aws_etl_pipeline_spark.sources.deltaread import (
+            delta_snapshot,
+        )
+
+        super().__init__(path, schema, start, cdf)
+        snap = delta_snapshot(None, self._base)
+        cm = snap.get("column_mapping") or {}
+        self._phys = cm.get("physical") or {}
+        self._cm_mode = cm.get("mode") or "none"
+        self._colmap = self._column_map(snap["schema"]) if self._phys else None
+        self._pcols = snap["partition_columns"]
+        self._ptypes = {
+            f.name: f.dataType for f in schema.fields if f.name in self._pcols
+        }
+        self._latest = snap["version"]
+
+    def _column_map(self, table_schema) -> dict:
+        """logical name -> physical name (name mode) or field id (id
+        mode). NESTED mapped columns would need struct surgery in
+        Arrow; reject those loudly."""
+        from pyspark.sql.types import StructType
+
+        from harness_aws_etl_pipeline_spark.sources.deltaread import (
+            _phys_below,
+        )
+
+        colmap: dict = {}
+        for f in table_schema.fields:
+            md = f.metadata or {}
+            if _phys_below(f.dataType) or (
+                isinstance(f.dataType, StructType)
+                and any(
+                    (sf.metadata or {}).get("delta.columnMapping.physicalName")
+                    for sf in f.dataType.fields
+                )
+            ):
+                raise ValueError(
+                    "delta_nojar streaming on tables with NESTED "
+                    f"mapped columns (column {f.name!r}) is not supported"
+                )
+            if self._cm_mode == "id":
+                cid = md.get("delta.columnMapping.id")
+                if cid is None:
+                    raise ValueError(
+                        "Delta id-mode column mapping: field "
+                        f"{f.name!r} carries no delta.columnMapping.id"
+                    )
+                colmap[f.name] = int(cid)
+            else:
+                colmap[f.name] = (
+                    md.get("delta.columnMapping.physicalName") or f.name
+                )
+        return colmap
+
+    def _commits(self):
+        from harness_aws_etl_pipeline_spark.sinks.fs import get_fs
+        from harness_aws_etl_pipeline_spark.sources.deltaread import (
+            _commit_files,
+        )
+
+        fs = get_fs(self._base, None)
+        return fs, _commit_files(fs, posixpath.join(self._base, "_delta_log"))
+
+    def initialOffset(self) -> dict:
+        return {"version": self._start}
+
+    def latestOffset(self) -> dict:
+        _fs, commits = self._commits()
+        self._latest = max(commits) if commits else self._latest
+        return {"version": self._latest}
+
+    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
+        fs, commits = self._commits()
+        parts: list[InputPartition] = []
+        for v in range(int(start["version"]) + 1, int(end["version"]) + 1):
+            p = commits.get(v)
+            if p is None:
+                raise ValueError(
+                    f"commit {v} is folded into a checkpoint (its JSON "
+                    "commit was log-cleaned); streaming needs every JSON "
+                    "commit in the window — set startingVersion at or "
+                    "after the checkpoint"
+                )
+            acts = [
+                json.loads(line)
+                for line in fs.read_bytes(p).decode("utf-8").splitlines()
+                if line.strip()
+            ]
+            plan = self._cdf_commit if self._cdf else self._append_commit
+            parts += plan(v, acts)
+        return parts
+
+    def _file(self, action: dict, change=None) -> _FilePartition:
+        pv = action.get("partitionValues") or {}
+        return _FilePartition(
+            posixpath.join(self._base, unquote(action["path"])),
+            self._asch,
+            change,
+            {
+                c: _typed_partition_value(
+                    pv.get(self._phys.get(c, c)), self._ptypes[c]
+                )
+                for c in self._pcols
+            },
+            self._colmap,
+            self._cm_mode,
+        )
+
+    def _append_commit(self, v: int, acts: list) -> list:
+        parts = []
+        for a in acts:
+            rem = a.get("remove")
+            if rem and rem.get("dataChange", True):
+                raise ValueError(
+                    f"commit {v} removes data file {rem.get('path')!r}"
+                    " — an update/delete window is not representable"
+                    " as a stream of appended rows"
+                )
+            add = a.get("add")
+            if not add or not add.get("path"):
+                continue
+            if add.get("dataChange", True) is False:
+                continue  # compaction re-add: rows already emitted
+            if (add.get("deletionVector") or {}).get("storageType"):
+                raise ValueError(
+                    f"commit {v} adds a deletion-vector'd file — "
+                    "not representable as appended rows"
+                )
+            parts.append(self._file(add))
+        return parts
+
+    def _cdf_commit(self, v: int, acts: list) -> list:
+        cdc = [a["cdc"] for a in acts if (a.get("cdc") or {}).get("path")]
+        if cdc:
+            # authoritative change rows (the file carries _change_type);
+            # the commit's add/remove pairs (DV re-adds, merge data
+            # files) are bookkeeping for the same change
+            return [self._file(c, (None, v)) for c in cdc]
+        if any(
+            (a.get("remove") or {}).get("path")
+            and a["remove"].get("dataChange", True)
+            for a in acts
+        ):
+            raise ValueError(
+                f"commit {v} rewrites or deletes files without "
+                "change data; CDF streaming cannot represent it — "
+                "enable change data on the writer"
             )
-            out = _pad_to_schema(tbl, asch, ("delete", version))
-            yield from out.to_batches()
+        adds = [
+            a["add"]
+            for a in acts
+            if (a.get("add") or {}).get("path")
+            and a["add"].get("dataChange", True)
+        ]
+        for add in adds:
+            if (add.get("deletionVector") or {}).get("storageType"):
+                raise ValueError(
+                    f"commit {v} adds a deletion-vector'd file "
+                    "without change data — not representable"
+                )
+        return [self._file(add, ("insert", v)) for add in adds]
+
+
+class DeltaStreamDataSource(_LakeStreamSource):
+    """``spark.readStream.format("delta_nojar").option("path", ...)``."""
+
+    _reader = _DeltaStreamReader
+    _start_option = ("startingVersion", int, -1)
+
+    @classmethod
+    def name(cls) -> str:
+        return "delta_nojar"
+
+    def _table_schema(self, path: str):
+        from harness_aws_etl_pipeline_spark.sources.deltaread import (
+            delta_snapshot,
+        )
+
+        sch = delta_snapshot(None, path)["schema"]
+        if sch is None:
+            raise ValueError("Delta table has no schema in its metadata")
+        return sch
 
 
 # ------------------------------------------------------------- Iceberg
 
 
-class _IcebergStreamReader(DataSourceStreamReader):
-    def __init__(self, path: str, schema, starting_idx: int, cdf=False):
-        self._base = path.rstrip("/")
-        self._schema = schema
-        self._start = starting_idx
-        self._cdf = cdf
-
+class _IcebergStreamReader(_LakeStreamReader):
     def _snap_ids(self) -> list[int]:
         from harness_aws_etl_pipeline_spark.sources.icebergread import (
             iceberg_snapshots,
@@ -234,29 +540,6 @@ class _IcebergStreamReader(DataSourceStreamReader):
             s["snapshot_id"]
             for s in iceberg_snapshots(None, self._base)  # type: ignore[arg-type]
         ]
-
-    def _snap_meta(self) -> dict:
-        """snapshot-id → {"seq", "op"} from the table metadata (the
-        change feed labels rows with the snapshot's SEQUENCE NUMBER —
-        durable and monotonic, unlike log positions)."""
-        import json
-
-        from harness_aws_etl_pipeline_spark.sinks.fs import get_fs
-        from harness_aws_etl_pipeline_spark.sources.icebergread import (
-            _latest_metadata,
-        )
-
-        fs = get_fs(self._base, None)
-        md = json.loads(
-            fs.read_bytes(_latest_metadata(fs, self._base)).decode("utf-8")
-        )
-        return {
-            s["snapshot-id"]: {
-                "seq": int(s.get("sequence-number") or 0),
-                "op": (s.get("summary") or {}).get("operation"),
-            }
-            for s in md.get("snapshots") or []
-        }
 
     def initialOffset(self) -> dict:
         if self._start <= 0:
@@ -297,16 +580,21 @@ class _IcebergStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
         from harness_aws_etl_pipeline_spark.sources.icebergread import (
+            _snapshot_meta,
             iceberg_snapshot,
         )
 
         ids = self._snap_ids()
         lo, hi = self._resolve(start, ids), self._resolve(end, ids)
-        cols = [f.name for f in self._schema.fields]
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        asch = to_arrow_schema(self._schema)
-        meta = self._snap_meta() if self._cdf else None
+        asch = self._asch
+        # snapshot-id → {"seq", "op"}: the change feed labels rows with
+        # the snapshot's SEQUENCE NUMBER (durable and monotonic, unlike
+        # log positions)
+        meta = (
+            _snapshot_meta(None, self._base)  # type: ignore[arg-type]
+            if self._cdf
+            else None
+        )
         parts: list[InputPartition] = []
         prev = (
             iceberg_snapshot(None, self._base, ids[lo - 1])  # type: ignore[arg-type]
@@ -333,7 +621,7 @@ class _IcebergStreamReader(DataSourceStreamReader):
                     # rewrites, so the append stream passes over it
                     # (the delta_nojar dataChange=false rule)
                     if meta is None:
-                        meta = self._snap_meta()
+                        meta = _snapshot_meta(None, self._base)  # type: ignore[arg-type]
                     if (meta.get(ids[i]) or {}).get("op") == "replace":
                         prev = cur
                         continue
@@ -350,8 +638,7 @@ class _IcebergStreamReader(DataSourceStreamReader):
                         "file(s); append-only streaming cannot represent "
                         "it"
                     )
-                for f in new_data:
-                    parts.append(_FilePartition(f, cols, arrow_schema=asch))
+                parts += [_FilePartition(f, asch) for f in new_data]
                 prev = cur
                 continue
 
@@ -387,84 +674,35 @@ class _IcebergStreamReader(DataSourceStreamReader):
                         _PosDeletePartition(dfp, local_of, asch, version)
                     )
             for efp in sorted(cur_eq - prev_eq):
-                parts.append(
-                    _FilePartition(
-                        efp, cols, arrow_schema=asch,
-                        change=("delete", version),
-                    )
-                )
+                parts.append(_FilePartition(efp, asch, ("delete", version)))
             for f in new_data:
-                parts.append(
-                    _FilePartition(
-                        f, cols, arrow_schema=asch,
-                        change=("insert", version),
-                    )
-                )
+                parts.append(_FilePartition(f, asch, ("insert", version)))
             prev = cur
         return parts
 
-    def read(self, partition):
-        if isinstance(partition, _PosDeletePartition):
-            return _read_pos_delete_rows(partition)
-        return _read_parquet_rows(partition)
 
-    def commit(self, end: dict) -> None:
-        pass
-
-
-class IcebergStreamDataSource(DataSource):
+class IcebergStreamDataSource(_LakeStreamSource):
     """``spark.readStream.format("iceberg_nojar").option("path", …)``."""
+
+    _reader = _IcebergStreamReader
+    _start_option = ("startingIdx", int, 0)
 
     @classmethod
     def name(cls) -> str:
         return "iceberg_nojar"
 
-    def _cdf(self) -> bool:
-        return (
-            str(self.options.get("readChangeFeed", "false")).lower()
-            == "true"
-        )
-
-    def schema(self):
-        from pyspark.sql import types as T
-
+    def _table_schema(self, path: str):
         from harness_aws_etl_pipeline_spark.sources.icebergread import (
             iceberg_snapshot,
         )
 
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("iceberg_nojar needs .option('path', ...)")
-        base = iceberg_snapshot(None, path)["schema"]  # type: ignore[arg-type]
-        if not self._cdf():
-            return base
-        return T.StructType(
-            list(base.fields)
-            + [
-                T.StructField("_change_type", T.StringType()),
-                T.StructField("_commit_version", T.LongType()),
-            ]
-        )
-
-    def streamReader(self, schema) -> DataSourceStreamReader:
-        return _IcebergStreamReader(
-            self.options["path"],
-            schema,
-            int(self.options.get("startingIdx", 0)),
-            cdf=self._cdf(),
-        )
+        return iceberg_snapshot(None, path)["schema"]  # type: ignore[arg-type]
 
 
 # ---------------------------------------------------------------- Hudi
 
 
-class _HudiStreamReader(DataSourceStreamReader):
-    def __init__(self, path: str, schema, starting_instant: str, cdf=False):
-        self._base = path.rstrip("/")
-        self._schema = schema
-        self._start = starting_instant
-        self._cdf = cdf
-
+class _HudiStreamReader(_LakeStreamReader):
     def initialOffset(self) -> dict:
         return {"instant": self._start}
 
@@ -509,10 +747,7 @@ class _HudiStreamReader(DataSourceStreamReader):
                     out[(posixpath.dirname(rel), m.group("fid"))] = p
             return out
 
-        cols = [f.name for f in self._schema.fields]
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        asch = to_arrow_schema(self._schema)
+        asch = self._asch
 
         if self._cdf:
             # ---- CHANGE FEED: brand-new file groups' base files are
@@ -574,10 +809,7 @@ class _HudiStreamReader(DataSourceStreamReader):
                             "checkpoint after compaction"
                         )
                     parts.append(
-                        _FilePartition(
-                            hi_g[k], cols, arrow_schema=asch,
-                            change=("insert", version),
-                        )
+                        _FilePartition(hi_g[k], asch, ("insert", version))
                     )
                 prev_inst = inst
             snap_hi = hudi_snapshot(None, self._base, hi)  # type: ignore[arg-type]
@@ -612,50 +844,33 @@ class _HudiStreamReader(DataSourceStreamReader):
                 "cannot represent it"
             )
         return [
-            _FilePartition(hi_g[k], cols, arrow_schema=asch)
+            _FilePartition(hi_g[k], asch)
             for k in sorted(hi_g)
             if k not in lo_g
         ]
 
-    def read(self, partition):
-        if isinstance(partition, _HudiLogPartition):
-            return _read_hudi_log_changes(partition)
-        return _read_parquet_rows(partition)
 
-    def commit(self, end: dict) -> None:
-        pass
-
-
-class HudiStreamDataSource(DataSource):
+class HudiStreamDataSource(_LakeStreamSource):
     """``spark.readStream.format("hudi_nojar").option("path", …)``."""
+
+    _reader = _HudiStreamReader
+    _start_option = ("startingInstant", str, "0")
 
     @classmethod
     def name(cls) -> str:
         return "hudi_nojar"
 
-    def _cdf(self) -> bool:
-        return (
-            str(self.options.get("readChangeFeed", "false")).lower()
-            == "true"
-        )
-
-    def schema(self):
+    def _table_schema(self, path: str):
         from harness_aws_etl_pipeline_spark.sources.hudiread import (
+            hudi_recorded_schema,
             hudi_snapshot,
         )
 
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("hudi_nojar needs .option('path', ...)")
         snap = hudi_snapshot(None, path)  # type: ignore[arg-type]
-        from harness_aws_etl_pipeline_spark.sources.hudiread import (
-            hudi_recorded_schema,
-        )
-
         rec = hudi_recorded_schema(None, path, snap.get("instant"))
         if rec is not None:
-            sch = rec
-        elif snap["files"]:
+            return rec
+        if snap["files"]:
             import pyarrow as pa
             import pyarrow.parquet as pq
             from pyspark.sql.pandas.types import from_arrow_schema
@@ -672,8 +887,8 @@ class HudiStreamDataSource(DataSource):
                 )
             except TypeError:  # older pyarrow: no promote_options
                 unified = pa.unify_schemas(schemas)
-            sch = from_arrow_schema(unified)
-        elif snap.get("log_files"):
+            return from_arrow_schema(unified)
+        if snap.get("log_files"):
             # log-only MOR table (hudi_upsert-created): the avro
             # block's schema is the table schema. POSIX open — log
             # files are dot-prefixed and Hadoop FS reads of hidden
@@ -695,33 +910,15 @@ class HudiStreamDataSource(DataSource):
                     "cannot derive a schema: the first Hudi log file "
                     "has no avro data block"
                 )
-            sch = avro_spark_schema(avro_blocks[0]["schema"])
-        else:
-            raise ValueError(
-                "Hudi table has no base files to derive a schema from"
-            )
-        if not self._cdf():
-            return sch
-        from pyspark.sql import types as T
-
-        return T.StructType(
-            list(sch.fields)
-            + [
-                T.StructField("_change_type", T.StringType()),
-                T.StructField("_commit_version", T.LongType()),
-            ]
-        )
-
-    def streamReader(self, schema) -> DataSourceStreamReader:
-        return _HudiStreamReader(
-            self.options["path"],
-            schema,
-            str(self.options.get("startingInstant", "0")),
-            cdf=self._cdf(),
+            return avro_spark_schema(avro_blocks[0]["schema"])
+        raise ValueError(
+            "Hudi table has no base files to derive a schema from"
         )
 
 
 def register_lake_streams(spark) -> None:
-    """Register both sources on a session (idempotent)."""
-    spark.dataSource.register(IcebergStreamDataSource)
-    spark.dataSource.register(HudiStreamDataSource)
+    """Register the three sources on a session (idempotent)."""
+    for source in (
+        DeltaStreamDataSource, IcebergStreamDataSource, HudiStreamDataSource
+    ):
+        spark.dataSource.register(source)

@@ -59,8 +59,8 @@ class TestDeltaOptimize:
         from harness_aws_etl_pipeline_spark.sources.deltaread import (
             delta_changes,
         )
-        from harness_aws_etl_pipeline_spark.sources.deltastream import (
-            register_delta_stream,
+        from harness_aws_etl_pipeline_spark.sources.lakestream import (
+            register_lake_streams,
         )
 
         t = str(tmp_path / "t")
@@ -68,7 +68,7 @@ class TestDeltaOptimize:
             spark, spark.range(20).withColumn("v", F.lit("a")).repartition(4),
             t,
         )
-        register_delta_stream(spark)
+        register_lake_streams(spark)
         df = spark.readStream.format("delta_nojar").option("path", t).load()
         out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
         q = (

@@ -1,4 +1,4 @@
-"""Delta as a Structured Streaming SOURCE (sources/deltastream.py):
+"""Delta as a Structured Streaming SOURCE (sources/lakestream.py):
 Spark 4 Python DataSource with log versions as offsets — batch
 boundaries, checkpoint resume without duplicates, partitioned tables,
 append-only and deletion-vector guards, startingVersion."""
@@ -9,8 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from harness_aws_etl_pipeline_spark.sinks.deltawrite import write_delta
-from harness_aws_etl_pipeline_spark.sources.deltastream import (
-    register_delta_stream,
+from harness_aws_etl_pipeline_spark.sources.lakestream import (
+    register_lake_streams,
 )
 
 
@@ -27,7 +27,7 @@ def _drain(df, out, cp):
 
 class TestDeltaStreamSource:
     def test_stream_then_resume_exactly_once(self, spark, tmp_path):
-        register_delta_stream(spark)
+        register_lake_streams(spark)
         t, out, cp = (
             str(tmp_path / "t"), str(tmp_path / "out"), str(tmp_path / "cp")
         )
@@ -53,7 +53,7 @@ class TestDeltaStreamSource:
         assert len(got) == len(set(got))
 
     def test_partitioned_values_typed(self, spark, tmp_path):
-        register_delta_stream(spark)
+        register_lake_streams(spark)
         t, out, cp = (
             str(tmp_path / "t"), str(tmp_path / "out"), str(tmp_path / "cp")
         )
@@ -70,7 +70,7 @@ class TestDeltaStreamSource:
         }
 
     def test_starting_version_skips_history(self, spark, tmp_path):
-        register_delta_stream(spark)
+        register_lake_streams(spark)
         t, out, cp = (
             str(tmp_path / "t"), str(tmp_path / "out"), str(tmp_path / "cp")
         )
@@ -90,7 +90,7 @@ class TestDeltaStreamSource:
         assert got == {(3, "new"), (4, "new")}
 
     def test_remove_in_window_rejected(self, spark, tmp_path):
-        register_delta_stream(spark)
+        register_lake_streams(spark)
         t, out, cp = (
             str(tmp_path / "t"), str(tmp_path / "out"), str(tmp_path / "cp")
         )
@@ -117,7 +117,7 @@ class TestDeltaStreamSource:
             delta_delete_where,
         )
 
-        register_delta_stream(spark)
+        register_lake_streams(spark)
         t, out, cp = (
             str(tmp_path / "t"), str(tmp_path / "out"), str(tmp_path / "cp")
         )
@@ -146,7 +146,7 @@ class TestDeltaStreamSource:
             read_delta,
         )
 
-        register_delta_stream(spark)
+        register_lake_streams(spark)
         src, dst, cp = (
             str(tmp_path / "src"), str(tmp_path / "dst"), str(tmp_path / "cp")
         )
@@ -159,6 +159,43 @@ class TestDeltaStreamSource:
         q = stream_to_delta(df, dst, app_id="relay", checkpoint_location=cp)
         q.start().awaitTermination(120)
         assert read_delta(spark, dst).count() == 7
+
+    def test_checkpoint_folded_commits_raise(self, spark, tmp_path):
+        """Commits folded into a checkpoint and log-cleaned have no JSON
+        adds to replay: the stream raises, naming the first missing
+        version, instead of emitting fewer rows than the snapshot."""
+        import os
+
+        from pyspark.errors.exceptions.captured import StreamingQueryException
+
+        from harness_aws_etl_pipeline_spark.sources.deltaread import (
+            read_delta,
+        )
+
+        register_lake_streams(spark)
+        t, out, cp = (
+            str(tmp_path / "t"), str(tmp_path / "out"), str(tmp_path / "cp")
+        )
+        for i in range(4):
+            write_delta(
+                spark,
+                spark.range(3 * i, 3 * i + 3).withColumn("v", F.lit(i)),
+                t,
+                checkpoint_interval=2,
+            )
+        for v in (0, 1):  # a foreign writer's log cleanup
+            os.remove(os.path.join(t, "_delta_log", f"{v:020d}.json"))
+        assert read_delta(spark, t).count() == 12
+        df = spark.readStream.format("delta_nojar").option("path", t).load()
+        q = (
+            df.writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", cp)
+            .trigger(availableNow=True)
+            .start()
+        )
+        with pytest.raises(StreamingQueryException, match="commit 0 is"):
+            q.awaitTermination(120)
 
 
 class TestChangeFeedStream:
@@ -173,7 +210,7 @@ class TestChangeFeedStream:
             delta_delete_where,
         )
 
-        register_delta_stream(spark)
+        register_lake_streams(spark)
         t, out, cp = (
             str(tmp_path / "t"), str(tmp_path / "out"), str(tmp_path / "cp")
         )
@@ -216,12 +253,50 @@ class TestChangeFeedStream:
             (r.id, r.v, r._change_type, r._commit_version) for r in rows
         }
 
+    def test_cdf_stream_partitioned(self, spark, tmp_path):
+        """The cdc file carries the partition column inline; the stream
+        still yields the typed partition value on every change row."""
+        from harness_aws_etl_pipeline_spark.sinks.deltadml import (
+            delta_delete_where,
+        )
+
+        register_lake_streams(spark)
+        t, out, cp = (
+            str(tmp_path / "t"), str(tmp_path / "out"), str(tmp_path / "cp")
+        )
+        write_delta(
+            spark,
+            spark.createDataFrame(
+                [(i, i % 2) for i in range(6)], "id long, g int"
+            ),
+            t,
+            partition_by=["g"],
+        )
+        delta_delete_where(spark, t, "id = 3", change_data=True)
+        df = (
+            spark.readStream.format("delta_nojar")
+            .option("path", t)
+            .option("readChangeFeed", "true")
+            .load()
+        )
+        _drain(df, out, cp)
+        back = spark.read.parquet(out)
+        assert dict(back.dtypes)["g"] == "int"
+        got = [
+            (r.id, r.g, r._change_type, r._commit_version)
+            for r in back.collect()
+        ]
+        assert sorted(got) == sorted(
+            [(i, i % 2, "insert", 0) for i in range(6)]
+            + [(3, 1, "delete", 1)]
+        )
+
     def test_cdf_merge_labels_stream_through(self, spark, tmp_path):
         from harness_aws_etl_pipeline_spark.sinks.deltadml import (
             delta_merge,
         )
 
-        register_delta_stream(spark)
+        register_lake_streams(spark)
         t, out, cp = (
             str(tmp_path / "t"), str(tmp_path / "out"), str(tmp_path / "cp")
         )
@@ -263,7 +338,7 @@ class TestChangeFeedStream:
             delta_delete_where,
         )
 
-        register_delta_stream(spark)
+        register_lake_streams(spark)
         t, out, cp = (
             str(tmp_path / "t"), str(tmp_path / "out"), str(tmp_path / "cp")
         )
@@ -356,7 +431,7 @@ class TestColumnMappedStream:
         return t
 
     def test_name_mapped_append_stream(self, spark, tmp_path):
-        register_delta_stream(spark)
+        register_lake_streams(spark)
         t = self._name_mapped(spark, tmp_path)
         out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
         df = (
@@ -372,7 +447,7 @@ class TestColumnMappedStream:
             delta_update_where,
         )
 
-        register_delta_stream(spark)
+        register_lake_streams(spark)
         t = self._name_mapped(spark, tmp_path, cdf=True)
         out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
         delta_update_where(spark, t, "id = 1", {"v": "'up'"})
@@ -399,7 +474,7 @@ class TestColumnMappedStream:
 
         from pyspark.sql import types as T
 
-        register_delta_stream(spark)
+        register_lake_streams(spark)
         t = str(tmp_path / "t")
         schema = _json.dumps({
             "type": "struct",

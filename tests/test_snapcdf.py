@@ -190,11 +190,11 @@ class TestChangeFeedStreamFromExport:
     def test_readChangeFeed_consumes_snaptable_rewrites(
         self, spark, tmp_path
     ):
-        from harness_aws_etl_pipeline_spark.sources.deltastream import (
-            register_delta_stream,
+        from harness_aws_etl_pipeline_spark.sources.lakestream import (
+            register_lake_streams,
         )
 
-        register_delta_stream(spark)
+        register_lake_streams(spark)
         table = SnapTable(spark, str(tmp_path / "t"))
         out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
         table.write(
