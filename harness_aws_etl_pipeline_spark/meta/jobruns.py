@@ -16,7 +16,10 @@ the concern, and a Delta MERGE is the upgrade path if row-level mutable
 semantics are ever required.
 
 Writes go through the driver-side SparkSession eagerly (these are
-engine bookkeeping records, not data-plane rows).
+engine bookkeeping records, not data-plane rows). Each append costs one
+Spark job with one task and no Python worker: the row enters the JVM as
+a one-row local relation (``session.local_frame``) and is written as
+one parquet file.
 """
 
 from __future__ import annotations
@@ -34,6 +37,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from harness_aws_etl_pipeline_spark.session import local_frame
 
 JOB_RUNS_SCHEMA = StructType(
     [
@@ -66,7 +71,7 @@ class JobRuns:
             json.dumps(fields.get("trigger")) if fields.get("trigger") else None,
             (fields.get("error") or None),
         )
-        df = self.spark.createDataFrame([row], JOB_RUNS_SCHEMA)
+        df = local_frame(self.spark, [row], JOB_RUNS_SCHEMA)
         df.coalesce(1).write.mode("append").parquet(self.path)
 
     def start(self, job_id: str, trigger: dict | None = None) -> None:

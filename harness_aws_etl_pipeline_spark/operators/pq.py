@@ -48,6 +48,7 @@ from harness_aws_etl_pipeline_spark.operators.similarity import (
     _unit_rows,
     _vec_matrix,
 )
+from harness_aws_etl_pipeline_spark.session import local_frame
 
 __all__ = [
     "train_pq",
@@ -683,8 +684,8 @@ def ivfpq_topk(
 
     spark = index.sparkSession
     id_type = index.schema[id_col].dataType.simpleString()
-    probe_df = spark.createDataFrame(
-        probes, f"query_id {id_type}, centroid_id long, __bias double"
+    probe_df = local_frame(
+        spark, probes, f"query_id {id_type}, centroid_id long, __bias double"
     )
     cand = index.join(F.broadcast(probe_df), "centroid_id")
 

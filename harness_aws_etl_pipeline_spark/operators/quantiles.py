@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from harness_aws_etl_pipeline_spark.session import local_frame
+
 __all__ = ["exact_quantiles", "quantile_check", "quantile_bucket"]
 
 
@@ -105,9 +107,7 @@ def exact_quantiles(
             else:
                 break
         targets.append((float(q), k, pid, k - start))
-    tdf = spark.createDataFrame(
-        targets, "q double, rank long, __pid int, __lrank long"
-    )
+    tdf = local_frame(spark, targets, "q double, rank long, __pid int, __lrank long")
     w = Window.partitionBy("__pid").orderBy("__v")
     picked = (
         ranged.withColumn("__lrank", F.row_number().over(w) - F.lit(1))
@@ -150,7 +150,8 @@ def quantile_check(
         hi = exact[min(1.0, q + rel_err)]
         ok = ok and (float(lo) <= float(a) <= float(hi))
     spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(len(set(qs)), bool(ok))],
         "quantiles_checked long, approx_within_band boolean",
     )

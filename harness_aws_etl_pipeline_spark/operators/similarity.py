@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from harness_aws_etl_pipeline_spark.functions.vectors import cosine_similarity, l2_norm
 from harness_aws_etl_pipeline_spark.operators.memo import PlanMemo
+from harness_aws_etl_pipeline_spark.session import local_frame
 
 # bounded plan-keyed reuse of the expensive per-corpus intermediates —
 # see operators/memo.py and dedup_fuzzy's memos for the rationale
@@ -219,8 +220,8 @@ def _global_topk(scored: DataFrame, k: int) -> DataFrame:
 
 
 def _empty_topk(spark, id_type: str = "long") -> DataFrame:
-    return spark.createDataFrame(
-        [], f"query_id {id_type}, rank int, neighbor_id {id_type}, cosine double"
+    return local_frame(
+        spark, [], f"query_id {id_type}, rank int, neighbor_id {id_type}, cosine double"
     )
 
 
@@ -470,9 +471,7 @@ def ivf_centroids(
         .collect()
     )
     if not sample:  # empty candidate set → empty quantizer
-        return df.sparkSession.createDataFrame(
-            [], "centroid_id long, centroid array<double>"
-        )
+        return local_frame(df.sparkSession, [], "centroid_id long, centroid array<double>")
     # tolerate ragged corpora: seed from the first-seen dimension only
     dim0 = len(sample[0]["__v"])
     sample = [r for r in sample if len(r["__v"]) == dim0]
@@ -490,8 +489,8 @@ def ivf_centroids(
         chosen.append(pick)
         np.maximum(best_sim, unit @ unit[pick], out=best_sim)
     seed_rows = [(j, [float(x) for x in vecs[i]]) for j, i in enumerate(chosen)]
-    centroids = df.sparkSession.createDataFrame(
-        seed_rows, "centroid_id long, centroid array<double>"
+    centroids = local_frame(
+        df.sparkSession, seed_rows, "centroid_id long, centroid array<double>"
     )
 
     # cluster mean via applyInPandas: Arrow-batched numpy per cluster
@@ -534,14 +533,15 @@ def ivf_centroids(
     # the whole Lloyd chain, i.e. ``iterations`` extra full corpus
     # scans + mean shuffles per extra consumer. Materializing here
     # runs the final mean pass exactly once; values are identical
-    # (collected doubles round-trip exactly through createDataFrame).
+    # (collected doubles round-trip exactly through Arrow). The frame is
+    # a LocalRelation (session.local_frame), so collecting it runs no
+    # Spark job — pinned by tests/test_local_frame.py
+    # (test_ivf_centroids_collect_runs_no_job).
     rows = [
         (int(r["centroid_id"]), [float(x) for x in r["centroid"]])
         for r in centroids.collect()
     ]
-    return df.sparkSession.createDataFrame(
-        rows, "centroid_id long, centroid array<double>"
-    )
+    return local_frame(df.sparkSession, rows, "centroid_id long, centroid array<double>")
 
 
 def _dim_of(df: DataFrame, vec_col: str) -> int:
@@ -928,7 +928,8 @@ def load_ivf(path: str, spark) -> DataFrame:
     doc = json.loads(get_fs(path, spark).read_bytes(path).decode("utf-8"))
     if doc.get("format") != "ivf-model-v1":
         raise ValueError(f"not an ivf model file: {path}")
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(cid, vec) for cid, vec in doc["centroids"]],
         "centroid_id int, centroid array<double>",
     )

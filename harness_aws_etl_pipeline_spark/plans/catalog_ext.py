@@ -1529,9 +1529,10 @@ _PR_SCALE = 10**12
 _PR_DAMP = 85
 # one-row result of the planted-fixture pagerank, cached driver-side
 # after the first panel call: the fixture is a process-lifetime
-# constant, and a PlanMemo can't key it (createDataFrame LocalRelations
-# are never semantically equal across calls — each call would insert a
-# fresh entry and evict the shared pairs entry). The operator itself is
+# constant, and a PlanMemo can't key it (createDataFrame over a Python
+# list plans a LogicalRDD, a fresh RDD on every call, so two calls' plans
+# are never semantically equal — each call would insert a fresh entry
+# and evict the shared pairs entry). The operator itself is
 # timed at scale by the bench pagerank leg, not by this panel.
 _PR_ROW: tuple | None = None
 # HITS legs on the SAME planted graph: 2 full hub/auth rounds at an
@@ -1540,7 +1541,7 @@ _PR_ROW: tuple | None = None
 # plan) and the un-cut tree grows ~4× per round — at 3 rounds Catalyst
 # ANALYSIS alone cost ~12 s of the panel's first call; 2 rounds still
 # exercise both propagate directions from a non-uniform vector. Cached
-# driver-side for the same PlanMemo-can't-key-LocalRelations reason as
+# driver-side for the same PlanMemo-can't-key-LogicalRDDs reason as
 # ``_PR_ROW``.
 _HITS_ITERS = 2
 _HITS_SCALE = 10**9

@@ -9,13 +9,18 @@ pandas interchange.
 
 Local test/bench runs use ``local[N]``; on a real cluster the same
 builder config applies unchanged (master comes from spark-submit).
+
+:func:`local_frame` is how driver-held rows become a frame: one Arrow
+table, planned as a ``LocalRelation``.
 """
 
 from __future__ import annotations
 
 import os
+from datetime import timezone
+from decimal import ROUND_HALF_UP, Decimal
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -78,3 +83,51 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A frame over rows the driver already holds, as a ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>)`` plans a ``LogicalRDD`` of pickled
+    rows, so every action on it is a Spark job that starts Python
+    workers. Here the rows go into the JVM as one Arrow table instead:
+    collecting the frame runs no Spark job, and writing it runs one
+    job with no Python worker (pinned by ``tests/test_local_frame.py``).
+
+    ``rows`` are tuples in ``schema`` order; ``schema`` is a DDL string
+    or a ``StructType``. Values are those ``createDataFrame(rows,
+    schema)`` gives: a naive ``datetime`` in a timestamp column is read
+    in Python's local zone (as ``time.mktime`` does there, whatever
+    ``spark.sql.session.timeZone`` says), a ``Decimal`` is rounded
+    half-up to its column's scale, and a NULL in a non-nullable column
+    raises ``ValueError``.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import (
+        DecimalType,
+        StructType,
+        TimestampType,
+        _parse_datatype_string,
+    )
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for values, field, arrow_field in zip(columns, schema.fields, arrow_schema):
+        if isinstance(field.dataType, TimestampType):
+            values = [
+                v.astimezone(timezone.utc) if v is not None and v.tzinfo is None else v
+                for v in values
+            ]
+        elif isinstance(field.dataType, DecimalType):
+            step = Decimal(1).scaleb(-field.dataType.scale)
+            values = [
+                v if v is None else v.quantize(step, ROUND_HALF_UP)
+                for v in values
+            ]
+        arrays.append(pa.array(values, type=arrow_field.type))
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from harness_aws_etl_pipeline_spark.session import local_frame
+
 SUPPORTED_FORMATS = ("csv", "json", "jsonl", "parquet", "orc")
 
 _EXT_TO_FORMAT = {
@@ -166,7 +168,7 @@ def read_paths(
     one scan over all files, merging schemas for parquet / unioning
     columns for csv+json inference."""
     if not paths:
-        return spark.createDataFrame([], schema or StructType([]))
+        return local_frame(spark, [], schema or StructType([]))
     return _reader(spark, fmt, schema, infer_schema)(paths)
 
 

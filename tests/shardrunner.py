@@ -71,6 +71,35 @@ def _workers() -> int:
     return min(7, max(2, cpus // 4))
 
 
+def _driver_mem(workers: int, meminfo: str = "/proc/meminfo") -> str | None:
+    """Per-shard ``spark.driver.memory`` so that ``workers`` JVM heaps
+    together stay under 60 % of MemTotal (each JVM's RSS runs past its
+    heap; at the session default of 8g, two shards on a 16 GB host
+    lost a JVM mid-run). Never above that 8g default, never below 1g;
+    ``None`` when MemTotal cannot be read."""
+    try:
+        with open(meminfo) as fh:
+            kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return None
+    mb = int(kb / 1024 * 0.6 / workers)
+    return f"{min(8192, max(1024, mb))}m"
+
+
+def _shard_env(base, warehouse: str, workers: int) -> dict:
+    """A shard child's environment: ``base`` plus the child guard, its
+    own warehouse dir and, unless the caller set one, a driver heap
+    from :func:`_driver_mem`."""
+    env = dict(base)
+    env[_CHILD_ENV] = "1"
+    env["SPARK_GRAFT_WAREHOUSE"] = warehouse
+    if "SPARK_GRAFT_DRIVER_MEM" not in env:
+        mem = _driver_mem(workers)
+        if mem:
+            env["SPARK_GRAFT_DRIVER_MEM"] = mem
+    return env
+
+
 def pytest_runtestloop(session):
     if os.environ.get(_CHILD_ENV):
         return None
@@ -133,9 +162,7 @@ def pytest_runtestloop(session):
             fh.write("\n".join(Path(p).name for p in b) + "\n")
     line(f"shardrunner: bin composition under {tmproot}/shard_N.files")
     for i, b in enumerate(bins):
-        env = dict(os.environ)
-        env[_CHILD_ENV] = "1"
-        env["SPARK_GRAFT_WAREHOUSE"] = os.path.join(tmproot, f"wh_{i}")
+        env = _shard_env(os.environ, os.path.join(tmproot, f"wh_{i}"), len(bins))
         cmd = [
             sys.executable, "-m", "pytest", "-q", "--no-header",
             "-p", "no:cacheprovider",

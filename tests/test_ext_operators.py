@@ -453,13 +453,24 @@ class TestNearDupClusters:
         # the gate is in-plan below the aggregate: a window count over
         # the bucket key feeding a <= cap filter, not a post-agg
         # size(members) filter
-        plan = out._jdf.queryExecution().optimizedPlan().toString()
-        assert "windowspecdefinition" in plan
-        agg_pos = plan.find("collect_list")
-        win_pos = plan.find("windowspecdefinition")
-        # optimizedPlan prints consumers above producers: the window
-        # gate must appear BELOW (after, in print order) the aggregate
-        assert agg_pos != -1 and win_pos > agg_pos
+        def nodes(plan):
+            kids = plan.children()
+            yield plan
+            for i in range(kids.size()):
+                yield from nodes(kids.apply(i))
+
+        plan = out._jdf.queryExecution().optimizedPlan()
+        aggs = [
+            n for n in nodes(plan)
+            if n.nodeName() == "Aggregate"
+            and "collect_list" in n.aggregateExpressions().toString()
+        ]
+        assert len(aggs) == 1
+        # the window gate sits BELOW the aggregate (it is a producer
+        # of the aggregate's input), and no window sits anywhere else
+        below = [n for n in nodes(aggs[0]) if n.nodeName() == "Window"]
+        everywhere = [n for n in nodes(plan) if n.nodeName() == "Window"]
+        assert below and len(below) == len(everywhere)
 
     def test_warns_when_not_converged(self, spark):
         import warnings

@@ -74,3 +74,35 @@ class TestSummaryParsing:
         assert got["passed"] == 996
         assert got["skipped"] == 41
         assert got["deselected"] == 2
+
+
+class TestDriverMem:
+    @staticmethod
+    def _meminfo(tmp_path, kb):
+        p = tmp_path / "meminfo"
+        p.write_text(f"MemTotal:       {kb} kB\nMemFree:        1000 kB\n")
+        return str(p)
+
+    def test_heaps_fit_sixty_percent_of_memtotal(self, tmp_path):
+        # 16 GB host, 2 shards: 16384 MB * 0.6 / 2 = 4915 MB each
+        mi = self._meminfo(tmp_path, 16 * 1024 * 1024)
+        assert sr._driver_mem(2, mi) == "4915m"
+        assert sr._driver_mem(3, mi) == "3276m"
+
+    def test_clamped_to_session_default_and_floor(self, tmp_path):
+        assert sr._driver_mem(2, self._meminfo(tmp_path, 64 * 1024 * 1024)) == "8192m"
+        assert sr._driver_mem(7, self._meminfo(tmp_path, 4 * 1024 * 1024)) == "1024m"
+
+    def test_unreadable_meminfo_sets_nothing(self, tmp_path, monkeypatch):
+        assert sr._driver_mem(2, str(tmp_path / "missing")) is None
+        monkeypatch.setattr(sr, "_driver_mem", lambda workers: None)
+        env = sr._shard_env({}, "/wh", 2)
+        assert "SPARK_GRAFT_DRIVER_MEM" not in env
+        assert env["SPARK_GRAFT_WAREHOUSE"] == "/wh"
+        assert env[sr._CHILD_ENV] == "1"
+
+    def test_shard_env_sets_heap_unless_caller_did(self, monkeypatch):
+        monkeypatch.setattr(sr, "_driver_mem", lambda workers: f"{workers}000m")
+        assert sr._shard_env({}, "/wh", 3)["SPARK_GRAFT_DRIVER_MEM"] == "3000m"
+        env = sr._shard_env({"SPARK_GRAFT_DRIVER_MEM": "6g"}, "/wh", 3)
+        assert env["SPARK_GRAFT_DRIVER_MEM"] == "6g"
