@@ -1852,6 +1852,37 @@ def _bench_cold_sf01(spark, sf_dir: str) -> dict:
     return out
 
 
+#: (BENCH_DETAIL key, leg) in run order. Each leg is
+#: ``leg(spark, sf_dir) -> dict``; sf1 also takes the headline timings
+#: it scales from. cold_sf01 runs LAST so its memo busting cannot
+#: disturb any other leg.
+LEGS = [
+    ("bucketed", _bench_bucketed_g2),
+    ("snaptable", _bench_snaptable_merge),
+    ("incremental_dedup", _bench_incremental_dedup),
+    ("corpus_prep", _bench_corpus_prep),
+    ("drift_legs", _bench_drift_legs),
+    ("skew_join", _bench_skew_join),
+    ("pq", _bench_pq),
+    ("lake", _bench_lake),
+    ("writers", _bench_writers),
+    ("web_prep", _bench_web_prep),
+    ("pagerank", _bench_pagerank),
+    ("bloom_join", _bench_bloom),
+    ("tpch_pack", _bench_tpch),
+    ("fuzzy_join", _bench_fuzzy),
+    ("lattice", _bench_lattice),
+    ("transitions", _bench_transitions),
+    ("bfs", _bench_bfs),
+    ("sq", _bench_sq),
+    ("maintenance", _bench_maintenance),
+    ("streaming", _bench_streaming),
+    ("sf1", _bench_sf1),
+    ("scaling", _bench_scaling),
+    ("cold_sf01", _bench_cold_sf01),
+]
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -1914,168 +1945,17 @@ def main() -> None:
             file=sys.stderr,
         )
 
-    # bucketed fact-join demonstration leg — reported OUTSIDE
-    # "queries" so the headline total stays comparable round-over-round
-    try:
-        bucketed = _bench_bucketed_g2(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001 - keep the headline JSON alive
-        bucketed = {"error": str(exc)[:500]}
-    print(f"# bucketed: {bucketed}", file=sys.stderr)
-
-    # transactional-merge demonstration leg — also outside "queries"
-    try:
-        snap = _bench_snaptable_merge(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001 - keep the headline JSON alive
-        snap = {"error": str(exc)[:500]}
-    print(f"# snaptable: {snap}", file=sys.stderr)
-
-    # incremental-dedup demonstration leg — also outside "queries"
-    try:
-        incdd = _bench_incremental_dedup(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001 - keep the headline JSON alive
-        incdd = {"error": str(exc)[:500]}
-    print(f"# incremental_dedup: {incdd}", file=sys.stderr)
-
-    # corpus-prep demonstration leg — also outside "queries"
-    try:
-        prep = _bench_corpus_prep(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001 - keep the headline JSON alive
-        prep = {"error": str(exc)[:500]}
-    print(f"# corpus_prep: {prep}", file=sys.stderr)
-
-    # drift-attribution leg timings (see _bench_drift_legs docstring)
-    try:
-        drift = _bench_drift_legs(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001 - keep the headline JSON alive
-        drift = {"error": str(exc)[:500]}
-    print(f"# drift_legs: {drift}", file=sys.stderr)
-
-    # AQE skew-join demonstration leg — also outside "queries"
-    try:
-        skew = _bench_skew_join(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001 - keep the headline JSON alive
-        skew = {"error": str(exc)[:500]}
-    print(f"# skew_join: {skew}", file=sys.stderr)
-
-    # product-quantization ANN leg — also outside "queries"
-    try:
-        pq = _bench_pq(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001 - keep the headline JSON alive
-        pq = {"error": str(exc)[:500]}
-    print(f"# pq: {pq}", file=sys.stderr)
-
-    # lakehouse interop leg (round 10) — also outside "queries"
-    try:
-        lake = _bench_lake(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001 - keep the headline JSON alive
-        lake = {"error": str(exc)[:500]}
-    print(f"# lake: {lake}", file=sys.stderr)
-
-    # writer-tier leg (round 10) — also outside "queries"
-    try:
-        writers = _bench_writers(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001 - keep the headline JSON alive
-        writers = {"error": str(exc)[:500]}
-    print(f"# writers: {writers}", file=sys.stderr)
-
-    # web-corpus extraction leg (round 6) — also outside "queries"
-    try:
-        web = _bench_web_prep(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001 - keep the headline JSON alive
-        web = {"error": str(exc)[:500]}
-    print(f"# web_prep: {web}", file=sys.stderr)
-
-    # pagerank leg (round 6) — also outside "queries"
-    try:
-        pr = _bench_pagerank(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001 - keep the headline JSON alive
-        pr = {"error": str(exc)[:500]}
-    print(f"# pagerank: {pr}", file=sys.stderr)
-
-    # bloom-join semi-join-reduction leg (round 7) — also outside "queries"
-    try:
-        bloom = _bench_bloom(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001 - keep the headline JSON alive
-        bloom = {"error": str(exc)[:500]}
-    print(f"# bloom_join: {bloom}", file=sys.stderr)
-
-    # TPC-H parity-pack leg (round 7) — also outside "queries"
-    try:
-        tpch = _bench_tpch(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001 - keep the headline JSON alive
-        tpch = {"error": str(exc)[:500]}
-    print(f"# tpch_pack: {tpch}", file=sys.stderr)
-
-    # fuzzy-join blocking work-check leg (round 8) — also outside "queries"
-    try:
-        fuzzy = _bench_fuzzy(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001 - keep the headline JSON alive
-        fuzzy = {"error": str(exc)[:500]}
-    print(f"# fuzzy_join: {fuzzy}", file=sys.stderr)
-
-    # grouping-lattice leg (round 9) — also outside "queries"
-    try:
-        lat = _bench_lattice(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001 - keep the headline JSON alive
-        lat = {"error": str(exc)[:500]}
-    print(f"# lattice: {lat}", file=sys.stderr)
-
-    # event-sequence leg (round 8) — also outside "queries"
-    try:
-        trans = _bench_transitions(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001 - keep the headline JSON alive
-        trans = {"error": str(exc)[:500]}
-    print(f"# transitions: {trans}", file=sys.stderr)
-
-    # BFS frontier-expansion leg (round 8) — also outside "queries"
-    try:
-        bfs = _bench_bfs(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001 - keep the headline JSON alive
-        bfs = {"error": str(exc)[:500]}
-    print(f"# bfs: {bfs}", file=sys.stderr)
-
-    # scalar-quantization recall leg (round 8) — also outside "queries"
-    try:
-        sq = _bench_sq(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001 - keep the headline JSON alive
-        sq = {"error": str(exc)[:500]}
-    print(f"# sq: {sq}", file=sys.stderr)
-
-    # maintenance-tier leg (round 11) — also outside "queries"
-    try:
-        maint = _bench_maintenance(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001 - keep the headline JSON alive
-        maint = {"error": str(exc)[:500]}
-    print(f"# maintenance: {maint}", file=sys.stderr)
-
-    # streaming-interop relay leg (round 12) — also outside "queries"
-    try:
-        streaming = _bench_streaming(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001 - keep the headline JSON alive
-        streaming = {"error": str(exc)[:500]}
-    print(f"# streaming: {streaming}", file=sys.stderr)
-
-    # sf1 scale-evidence leg (round 11) — also outside "queries"
-    try:
-        sf1 = _bench_sf1(spark, sf_dir, timings)
-    except Exception as exc:  # noqa: BLE001 - keep the headline JSON alive
-        sf1 = {"error": str(exc)[:500]}
-    print(f"# sf1: {sf1}", file=sys.stderr)
-
-    # data-path scaling leg (round 14) — also outside "queries"
-    try:
-        scaling = _bench_scaling(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001 - keep the headline JSON alive
-        scaling = {"error": str(exc)[:500]}
-    print(f"# scaling: {scaling}", file=sys.stderr)
-
-    # cold sf0.1 heavies (round 14) — also outside "queries"; LAST so
-    # the memo busting cannot disturb any other leg
-    try:
-        cold_sf01 = _bench_cold_sf01(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001 - keep the headline JSON alive
-        cold_sf01 = {"error": str(exc)[:500]}
-    print(f"# cold_sf01: {cold_sf01}", file=sys.stderr)
+    # every leg is reported OUTSIDE "queries" so the headline total
+    # stays comparable round-over-round; a failing leg records its
+    # error and the run goes on
+    legs: dict[str, dict] = {}
+    for key, leg in LEGS:
+        try:
+            args = (spark, sf_dir, timings) if key == "sf1" else (spark, sf_dir)
+            legs[key] = leg(*args)
+        except Exception as exc:  # noqa: BLE001 - keep the headline JSON alive
+            legs[key] = {"error": str(exc)[:500]}
+        print(f"# {key}: {legs[key]}", file=sys.stderr)
 
     total = round(sum(timings.values()), 3)
     detail = {
@@ -2087,29 +1967,7 @@ def main() -> None:
         "queries_p10": p10s,
         "runs": runs,
         "value_p50": round(sum(p50s.values()), 3),
-        "bucketed": bucketed,
-        "snaptable": snap,
-        "incremental_dedup": incdd,
-        "corpus_prep": prep,
-        "drift_legs": drift,
-        "skew_join": skew,
-        "web_prep": web,
-        "pagerank": pr,
-        "pq": pq,
-        "lake": lake,
-        "writers": writers,
-        "bloom_join": bloom,
-        "tpch_pack": tpch,
-        "fuzzy_join": fuzzy,
-        "lattice": lat,
-        "transitions": trans,
-        "bfs": bfs,
-        "sq": sq,
-        "sf1": sf1,
-        "scaling": scaling,
-        "cold_sf01": cold_sf01,
-        "maintenance": maint,
-        "streaming": streaming,
+        **legs,
         # Round-over-round comparability: several headline names carry
         # MORE work than in BENCH_r03 because 1-row panels were fused
         # to keep the driver's 50-entry correctness window full of

@@ -24,6 +24,10 @@ number of distinct inputs the session ever processed.
 :meth:`PlanMemo.get_or_value` holds a driver-side value instead (a
 collected model, say) under the same keying and eviction — nothing is
 persisted, but the job that collects it is skipped on a hit.
+:meth:`PlanMemo.get_or_key` holds a value under an explicit key (the
+catalog's table readers, build-time collects and fixture rows). One
+registry covers every cache in the package, under one staleness
+contract, and :func:`clear_all_memos` drains them all.
 
 Hit validation is two-layer, mirroring what Spark's own CacheManager
 does: the 32-bit canonical ``semanticHash`` is only the index; a hit
@@ -115,6 +119,14 @@ class PlanMemo:
         contract as the frame entries."""
         return self._by_input(key_df, extra_key, compute, persist=False)
 
+    def get_or_key(self, key, compute):
+        """A value held under an explicit hashable ``key``: nothing is
+        persisted, no plan is validated and no session is pinned, so a
+        key whose value depends on the session must carry its
+        ``applicationId``. Same LRU bound and :func:`clear_all_memos`
+        reach as every other entry."""
+        return self._lookup(key, None, compute, pin=None, persist=False)
+
     def _by_input(self, key_df: DataFrame, extra_key, compute, persist: bool):
         plan = _analyzed(key_df)
         base = plan.semanticHash() if plan is not None else id(key_df)
@@ -134,9 +146,10 @@ class PlanMemo:
     def _lookup(self, key, plan, compute, pin, persist: bool = True):
         with self._lock:
             hit = self._entries.get(key)
-            if hit is not None and not _session_live(hit.pin):
+            if hit is not None and hit.pin is not None and not _session_live(hit.pin):
                 # the session every held frame belonged to is gone —
-                # drop them all (no unpersist possible on a dead JVM)
+                # drop them all (no unpersist possible on a dead JVM);
+                # get_or_key entries pin nothing and are never checked
                 self._entries.clear()
                 hit = None
             if hit is not None and self._hit_valid(hit, plan):

@@ -95,9 +95,6 @@ FROM documents GROUP BY source ORDER BY source
 """
 
 
-_LANG_VALUES: dict[str, list] = {}
-
-
 def q_lang_id(spark: SparkSession, sf: str) -> DataFrame:
     """[EXT] marker-word language ID over documents, counts by
     (actual lang column, predicted).
@@ -113,16 +110,16 @@ def q_lang_id(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     docs = _t(spark, sf, "documents")
-    # the observed lang values collect at BUILD time — cache per sf so
-    # repeated builds scan once per process
-    vals = _LANG_VALUES.get(sf)
-    if vals is None:
-        vals = [
+    # the observed lang values collect at BUILD time — memoized per
+    # (session, sf) so repeated builds scan once
+    vals = _VALUE_MEMO.get_or_key(
+        ("lang_values", spark.sparkContext.applicationId, sf),
+        lambda: [
             r[0]
             for r in docs.select("lang").distinct().collect()
             if r[0] is not None
-        ]
-        _LANG_VALUES[sf] = vals
+        ],
+    )
     oh = one_hot(docs, "lang", values=vals)
     ind = sorted(c for c in oh.columns if c.startswith("lang__"))
     oh_strs = F.array_sort(
@@ -1527,30 +1524,27 @@ _PR_EDGES = (
 _PR_ITERS = 3
 _PR_SCALE = 10**12
 _PR_DAMP = 85
-# one-row result of the planted-fixture pagerank, cached driver-side
-# after the first panel call: the fixture is a process-lifetime
-# constant, and a PlanMemo can't key it (createDataFrame over a Python
-# list plans a LogicalRDD, a fresh RDD on every call, so two calls' plans
-# are never semantically equal — each call would insert a fresh entry
-# and evict the shared pairs entry). The operator itself is
-# timed at scale by the bench pagerank leg, not by this panel.
-_PR_ROW: tuple | None = None
+# one-row result of the planted-fixture pagerank, held in the catalog's
+# value memo under an explicit key after the first panel call: the
+# fixture is sf-independent, and keying it on its input plan cannot
+# work (createDataFrame over a Python list plans a LogicalRDD, a fresh
+# RDD on every call, so two calls' plans are never semantically equal).
+# The operator itself is timed at scale by the bench pagerank leg, not
+# by this panel.
 # HITS legs on the SAME planted graph: 2 full hub/auth rounds at an
 # int64-safe scale (scale² × Σw < 9e18 with Σw = 8 caps scale at
 # ~1.06e9). Two rounds, not three: the fixture runs lazy (one nested
 # plan) and the un-cut tree grows ~4× per round — at 3 rounds Catalyst
 # ANALYSIS alone cost ~12 s of the panel's first call; 2 rounds still
-# exercise both propagate directions from a non-uniform vector. Cached
-# driver-side for the same PlanMemo-can't-key-LogicalRDDs reason as
-# ``_PR_ROW``.
+# exercise both propagate directions from a non-uniform vector. Held
+# in the value memo like the pagerank row.
 _HITS_ITERS = 2
 _HITS_SCALE = 10**9
-_HITS_ROW: tuple | None = None
 # triangle/clustering legs (fused round 8): a planted graph with two
 # triangles sharing an edge, a 4-clique (4 more), a pendant, an
 # isolated edge, AND deliberately messy rows — a reversed duplicate,
 # a parallel duplicate, a self-loop — pinning the simple-graph
-# collapse cross-engine. Cached driver-side like _PR_ROW.
+# collapse cross-engine. Held in the value memo like the pagerank row.
 _TRI_EDGES = (
     ("A", "B"), ("B", "C"), ("A", "C"),
     ("B", "D"), ("C", "D"),
@@ -1561,7 +1555,6 @@ _TRI_EDGES = (
     ("P", "Q"),
     ("X", "Y"),
 )
-_TRI_ROW: tuple | None = None
 
 # r14 (ADVICE): distinguishes "stats not probed yet" (default) from an
 # explicit ``stats=None`` meaning "the caller already probed and the
@@ -1594,7 +1587,6 @@ def q_near_dup_clusters(
         near_dup_clusters,
         near_dup_panel_stats,
     )
-    from harness_aws_etl_pipeline_spark.operators.linkgraph import pagerank
 
     docs = _t(spark, sf, "documents")
     # read by clustering, dedup, and the summary legs — memoized so
@@ -1668,94 +1660,9 @@ def q_near_dup_clusters(
                 + F.col("cluster_cnt")
             ).alias("survivor_cnt"),
         )
-    global _PR_ROW
-    if _PR_ROW is None:
-        # lazy mode: the 3 iterations compile into ONE nested plan (no
-        # persists/checkpoints to schedule) — right for a 6-node fixture
-        pr = pagerank(
-            spark.createDataFrame(list(_PR_EDGES), "src string, dst string"),
-            iterations=_PR_ITERS,
-            damping_pct=_PR_DAMP,
-            scale=_PR_SCALE,
-            partitions=2,
-            lazy=True,
-        )
-        row = pr.agg(
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.array_sort(
-                        F.collect_list(
-                            F.concat_ws(
-                                ":", "node", F.col("rank_scaled").cast("string")
-                            )
-                        )
-                    ),
-                )
-            ).alias("pr_rank_md5"),
-            F.sum("rank_scaled").cast("long").alias("pr_mass"),
-            F.max(F.struct("rank_scaled", "node"))["node"].alias("pr_top_node"),
-        ).first()
-        _PR_ROW = (row["pr_rank_md5"], row["pr_mass"], row["pr_top_node"])
-    global _HITS_ROW
-    if _HITS_ROW is None:
-        from harness_aws_etl_pipeline_spark.operators.linkgraph import hits
-
-        ht = hits(
-            spark.createDataFrame(list(_PR_EDGES), "src string, dst string"),
-            iterations=_HITS_ITERS,
-            scale=_HITS_SCALE,
-            partitions=2,
-            lazy=True,
-        )
-        hrow = ht.agg(
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.array_sort(
-                        F.collect_list(
-                            F.concat_ws(
-                                ":",
-                                "node",
-                                F.col("hub_scaled").cast("string"),
-                                F.col("auth_scaled").cast("string"),
-                            )
-                        )
-                    ),
-                )
-            ).alias("hits_md5"),
-            F.max(F.struct("hub_scaled", "node"))["node"].alias("hits_top_hub"),
-            F.max(F.struct("auth_scaled", "node"))["node"].alias("hits_top_auth"),
-        ).first()
-        _HITS_ROW = (hrow["hits_md5"], hrow["hits_top_hub"], hrow["hits_top_auth"])
-    global _TRI_ROW
-    if _TRI_ROW is None:
-        from harness_aws_etl_pipeline_spark.operators.linkgraph import (
-            triangles,
-        )
-
-        tr = triangles(
-            spark.createDataFrame(list(_TRI_EDGES), "src string, dst string")
-        )
-        trow = tr.agg(
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.array_sort(
-                        F.collect_list(
-                            F.concat_ws(
-                                ":",
-                                "node",
-                                F.col("deg").cast("string"),
-                                F.col("tri_cnt").cast("string"),
-                            )
-                        )
-                    ),
-                )
-            ).alias("tri_md5"),
-            (F.sum("tri_cnt") / 3).cast("long").alias("tri_total"),
-        ).first()
-        _TRI_ROW = (trow["tri_md5"], trow["tri_total"])
+    pr_row = _VALUE_MEMO.get_or_key("pr_row", lambda: _pr_row(spark))
+    hits_row = _VALUE_MEMO.get_or_key("hits_row", lambda: _hits_row(spark))
+    tri_row = _VALUE_MEMO.get_or_key("tri_row", lambda: _tri_row(spark))
     # the fixture rows are plain Python values once computed — ride as
     # literal columns (zero joins, zero broadcast jobs), same schema as
     # the former createDataFrame + crossJoin(broadcast(...)) chain
@@ -1763,15 +1670,108 @@ def q_near_dup_clusters(
         "clustered_docs",
         "cluster_cnt",
         "survivor_cnt",
-        F.lit(_PR_ROW[0]).alias("pr_rank_md5"),
-        F.lit(_PR_ROW[1]).cast("long").alias("pr_mass"),
-        F.lit(_PR_ROW[2]).alias("pr_top_node"),
-        F.lit(_HITS_ROW[0]).alias("hits_md5"),
-        F.lit(_HITS_ROW[1]).alias("hits_top_hub"),
-        F.lit(_HITS_ROW[2]).alias("hits_top_auth"),
-        F.lit(_TRI_ROW[0]).alias("tri_md5"),
-        F.lit(_TRI_ROW[1]).cast("long").alias("tri_total"),
+        F.lit(pr_row[0]).alias("pr_rank_md5"),
+        F.lit(pr_row[1]).cast("long").alias("pr_mass"),
+        F.lit(pr_row[2]).alias("pr_top_node"),
+        F.lit(hits_row[0]).alias("hits_md5"),
+        F.lit(hits_row[1]).alias("hits_top_hub"),
+        F.lit(hits_row[2]).alias("hits_top_auth"),
+        F.lit(tri_row[0]).alias("tri_md5"),
+        F.lit(tri_row[1]).cast("long").alias("tri_total"),
     )
+
+
+def _pr_row(spark: SparkSession) -> tuple:
+    from harness_aws_etl_pipeline_spark.operators.linkgraph import pagerank
+
+    # lazy mode: the 3 iterations compile into ONE nested plan (no
+    # persists/checkpoints to schedule) — right for a 6-node fixture
+    pr = pagerank(
+        spark.createDataFrame(list(_PR_EDGES), "src string, dst string"),
+        iterations=_PR_ITERS,
+        damping_pct=_PR_DAMP,
+        scale=_PR_SCALE,
+        partitions=2,
+        lazy=True,
+    )
+    row = pr.agg(
+        F.md5(
+            F.concat_ws(
+                "|",
+                F.array_sort(
+                    F.collect_list(
+                        F.concat_ws(
+                            ":", "node", F.col("rank_scaled").cast("string")
+                        )
+                    )
+                ),
+            )
+        ).alias("pr_rank_md5"),
+        F.sum("rank_scaled").cast("long").alias("pr_mass"),
+        F.max(F.struct("rank_scaled", "node"))["node"].alias("pr_top_node"),
+    ).first()
+    return (row["pr_rank_md5"], row["pr_mass"], row["pr_top_node"])
+
+
+def _hits_row(spark: SparkSession) -> tuple:
+    from harness_aws_etl_pipeline_spark.operators.linkgraph import hits
+
+    ht = hits(
+        spark.createDataFrame(list(_PR_EDGES), "src string, dst string"),
+        iterations=_HITS_ITERS,
+        scale=_HITS_SCALE,
+        partitions=2,
+        lazy=True,
+    )
+    hrow = ht.agg(
+        F.md5(
+            F.concat_ws(
+                "|",
+                F.array_sort(
+                    F.collect_list(
+                        F.concat_ws(
+                            ":",
+                            "node",
+                            F.col("hub_scaled").cast("string"),
+                            F.col("auth_scaled").cast("string"),
+                        )
+                    )
+                ),
+            )
+        ).alias("hits_md5"),
+        F.max(F.struct("hub_scaled", "node"))["node"].alias("hits_top_hub"),
+        F.max(F.struct("auth_scaled", "node"))["node"].alias("hits_top_auth"),
+    ).first()
+    return (hrow["hits_md5"], hrow["hits_top_hub"], hrow["hits_top_auth"])
+
+
+def _tri_row(spark: SparkSession) -> tuple:
+    from harness_aws_etl_pipeline_spark.operators.linkgraph import (
+        triangles,
+    )
+
+    tr = triangles(
+        spark.createDataFrame(list(_TRI_EDGES), "src string, dst string")
+    )
+    trow = tr.agg(
+        F.md5(
+            F.concat_ws(
+                "|",
+                F.array_sort(
+                    F.collect_list(
+                        F.concat_ws(
+                            ":",
+                            "node",
+                            F.col("deg").cast("string"),
+                            F.col("tri_cnt").cast("string"),
+                        )
+                    )
+                ),
+            )
+        ).alias("tri_md5"),
+        (F.sum("tri_cnt") / 3).cast("long").alias("tri_total"),
+    ).first()
+    return (trow["tri_md5"], trow["tri_total"])
 
 
 ORACLE_NEAR_DUP_CLUSTERS = r"""
@@ -3050,9 +3050,6 @@ def _ivf_fixed_centroids(spark: SparkSession, k: int = 8, dim: int = 64):
     return spark.createDataFrame(rows, "centroid_id long, centroid array<double>")
 
 
-_SQ_MODELS: dict[str, dict] = {}
-
-
 def q_ann_topk_verify(spark: SparkSession, sf: str) -> DataFrame:
     """[EXT] value-level verification panel for the approximate-NN
     family: both ANN paths produce their full (query, rank, neighbor,
@@ -3147,17 +3144,17 @@ def q_ann_topk_verify(spark: SparkSession, sf: str) -> DataFrame:
     # whole corpus (operators/pq.py:sq_train/sq_encode — exact bounds,
     # fixed affine chain) ride the panel schema as one row per dim:
     # query_id = dim, neighbor_id = Σcodes, cosine = mean code / 255.
-    # The bounds model collects dim rows at BUILD time — cached per sf
-    # so repeated builds (tests, driver passes) train once per process.
+    # The bounds model collects dim rows at BUILD time — memoized per
+    # (session, sf) so repeated builds (tests, driver passes) train once.
     from harness_aws_etl_pipeline_spark.operators.pq import (
         sq_encode,
         sq_train,
     )
 
-    sq_model = _SQ_MODELS.get(sf)
-    if sq_model is None:
-        sq_model = sq_train(emb)
-        _SQ_MODELS[sf] = sq_model
+    sq_model = _VALUE_MEMO.get_or_key(
+        ("sq_model", spark.sparkContext.applicationId, sf),
+        lambda: sq_train(emb),
+    )
     sq_rows = (
         sq_encode(emb, sq_model)
         .select(F.posexplode("sq_codes").alias("i", "c"))
@@ -4342,7 +4339,10 @@ FROM toks
 """
 
 
-from harness_aws_etl_pipeline_spark.plans.catalog import QuerySpec  # noqa: E402
+from harness_aws_etl_pipeline_spark.plans.catalog import (  # noqa: E402
+    _VALUE_MEMO,
+    QuerySpec,
+)
 
 
 # ---- round-10 fusions: free driver-window slots for the ni_* split ----

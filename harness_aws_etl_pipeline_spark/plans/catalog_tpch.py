@@ -42,7 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from harness_aws_etl_pipeline_spark.plans.catalog import dsum, sql_dsum, tables
+from harness_aws_etl_pipeline_spark.plans.catalog import _VALUE_MEMO, tables
+from harness_aws_etl_pipeline_spark.plans.catalog import dsum, sql_dsum
 
 __all__ = [
     "tpch_q4_priority_exists",
@@ -699,10 +700,6 @@ GROUP BY 1
 
 _PS_FANOUT = 4
 
-# supplier count per sf dir — one bounded collect, shared by the five
-# pack builders that synthesize partsupp in the same panel build
-_S_CNT_MEMO: dict[str, int] = {}
-
 
 def synth_partsupp(spark: SparkSession, sf: str) -> DataFrame:
     """``(ps_partkey, ps_suppkey, ps_availqty, ps_cost_scaled)`` —
@@ -713,9 +710,12 @@ def synth_partsupp(spark: SparkSession, sf: str) -> DataFrame:
     cheaply via the join in every consumer: non-existent keys would
     drop identically in both engines anyway)."""
     t = tables(spark, sf)
-    if sf not in _S_CNT_MEMO:
-        _S_CNT_MEMO[sf] = t["supplier"].count()
-    s_cnt = _S_CNT_MEMO[sf]
+    # one supplier count per (session, sf), shared by the five pack
+    # builders that synthesize partsupp in the same panel build
+    s_cnt = _VALUE_MEMO.get_or_key(
+        ("supplier_count", spark.sparkContext.applicationId, sf),
+        t["supplier"].count,
+    )
     sk = (F.col("p_partkey") * 7 + F.col("i") * 13) % s_cnt
     return (
         t["part"]

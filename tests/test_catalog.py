@@ -72,33 +72,30 @@ class TestCatalogContract:
         The sf-INDEPENDENT fixture legs (incremental hh/quantile
         streams, pagerank/HITS/triangle/BFS planted graphs) run real
         multi-job folds at build time and are VALUE-tested by their
-        own suites + the driver oracle — seed their per-process
-        caches with placeholder rows here so this guard measures
-        plan construction, not ~45 s of fixture jobs, then restore so
-        any later value-sensitive consumer recomputes the real rows.
+        own suites + the driver oracle — seed their value-memo keys
+        with placeholder rows here so this guard measures plan
+        construction, not ~45 s of fixture jobs, then clear the memo
+        so any later value-sensitive consumer recomputes the real rows.
         """
-        import harness_aws_etl_pipeline_spark.plans.catalog as cat
-        import harness_aws_etl_pipeline_spark.plans.catalog_ext as ext
+        from harness_aws_etl_pipeline_spark.plans.catalog import _VALUE_MEMO
 
-        saved = (
-            cat._IHH_ROW, cat._IQ_ROW, cat._BFS_ROW,
-            ext._PR_ROW, ext._HITS_ROW, ext._TRI_ROW,
-        )
-        cat._IHH_ROW = cat._IHH_ROW or (1, True, True, True, "k", True)
-        cat._IQ_ROW = cat._IQ_ROW or (1, 1, True, True, True, True)
-        cat._BFS_ROW = cat._BFS_ROW or (1, "x")
-        ext._PR_ROW = ext._PR_ROW or ("x", 1, "n")
-        ext._HITS_ROW = ext._HITS_ROW or ("x", "h", "a")
-        ext._TRI_ROW = ext._TRI_ROW or ("x", 1)
+        placeholders = {
+            "ihh_row": (1, True, True, True, "k", True),
+            "iq_row": (1, 1, True, True, True, True),
+            "bfs_row": (1, "x"),
+            "pr_row": ("x", 1, "n"),
+            "hits_row": ("x", "h", "a"),
+            "tri_row": ("x", 1),
+        }
+        for key, row in placeholders.items():
+            # inserts only where the key is absent
+            _VALUE_MEMO.get_or_key(key, lambda row=row: row)
         try:
             for name, spec in CATALOG.items():
                 df = spec.builder(spark, SF)
                 assert df.columns, f"{name} produced no columns"
         finally:
-            (
-                cat._IHH_ROW, cat._IQ_ROW, cat._BFS_ROW,
-                ext._PR_ROW, ext._HITS_ROW, ext._TRI_ROW,
-            ) = saved
+            _VALUE_MEMO.clear()
 
     def test_entry_contract(self, spark):
         import __spark_entry__ as entry_mod
