@@ -2,57 +2,84 @@
 reference's local harness (scripts/run_local.py:127-246: parse args,
 invoke the handler in-process, print the result).
 
-    python -m harness_aws_etl_pipeline_spark.cli run \
-        --source data/sales.csv --output out/silver [--format parquet]
-    python -m harness_aws_etl_pipeline_spark.cli sweep \
-        --prefix landing/ --output out/silver --job-runs out/job_runs
-    python -m harness_aws_etl_pipeline_spark.cli sql \
-        --sf-dir /root/testdata/sf0.001 --query "SELECT COUNT(*) FROM lineitem"
-    python -m harness_aws_etl_pipeline_spark.cli status \
-        --job-runs out/job_runs --output out/silver
-    python -m harness_aws_etl_pipeline_spark.cli clean --path out/silver --force
+    python -m harness_aws_etl_pipeline_spark.cli <command> [options]
+    python -m harness_aws_etl_pipeline_spark.cli <command> --help
 
-``status`` is the engine's scripts/status_check.py (recent jobs +
-per-status counts from the metadata table, sink storage footprint);
-``clean`` is scripts/cleanup.py (refuses without --force, the
-confirmation-prompt equivalent).
+Dispatch contract: every subcommand has one handler, registered on its
+subparser with ``set_defaults(func=...)``; ``main`` builds the parser
+(:func:`build_parser`), parses, and calls ``args.func(args)``.
+
+- A handler returns the JSON-able dict the command reports; ``main``
+  prints it as one JSON line and exits 0.
+- A handler that must exit non-zero returns ``(dict, code)``.
+- A handler that prints its own output (``sql`` rows, the ``explain``
+  plan) returns None.
+- A bad flag combination raises :class:`UsageError`, which ``main``
+  reports through the parser (usage on stderr, exit 2).
+
+Handlers open the Spark session themselves (:func:`_spark`), so the
+commands that need none — both ``clean`` modes, ``video``, ``--help``
+— never start a JVM.
 """
 
 from __future__ import annotations
 
 import argparse
+import functools
+import importlib
 import json
 import sys
+from typing import NamedTuple
 
 from harness_aws_etl_pipeline_spark.operators import dedup_api
 
 
+class UsageError(Exception):
+    """A flag combination argparse cannot reject by itself."""
+
+
 def main(argv: list[str] | None = None) -> int:
+    parser = build_parser()
+    args = parser.parse_args(argv)
+    try:
+        out = args.func(args)
+    except UsageError as exc:
+        parser.error(str(exc))
+    payload, code = out if isinstance(out, tuple) else (out, 0)
+    if payload is not None:
+        print(json.dumps(payload, default=str))
+    return code
+
+
+def _command(sub, func, name: str, **kwargs) -> argparse.ArgumentParser:
+    sp = sub.add_parser(name, **kwargs)
+    sp.set_defaults(func=func)
+    return sp
+
+
+def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="harness_aws_etl_pipeline_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
 
-    run = sub.add_parser("run", help="E→T→L one source file")
-    run.add_argument("--source", required=True)
-    run.add_argument("--output", required=True)
-    run.add_argument("--format", default="parquet", choices=["parquet", "csv", "json", "snaptable"])
-    run.add_argument("--null-handling", default=None, choices=["drop", "fill", "flag"])
-    run.add_argument("--job-runs", default=None, help="job_runs table path")
+    for name, func, source, help in (
+        ("run", _run, "--source", "E→T→L one source file"),
+        ("sweep", _sweep, "--prefix", "E→T→L every pending file under a prefix"),
+    ):
+        etl = _command(sub, func, name, help=help)
+        etl.add_argument(source, required=True)
+        etl.add_argument("--output", required=True)
+        etl.add_argument("--format", default="parquet", choices=["parquet", "csv", "json", "snaptable"])
+        etl.add_argument("--null-handling", default=None, choices=["drop", "fill", "flag"])
+        etl.add_argument("--job-runs", default=None, help="job_runs table path")
 
-    sweep = sub.add_parser("sweep", help="E→T→L every pending file under a prefix")
-    sweep.add_argument("--prefix", required=True)
-    sweep.add_argument("--output", required=True)
-    sweep.add_argument("--format", default="parquet", choices=["parquet", "csv", "json", "snaptable"])
-    sweep.add_argument("--null-handling", default=None, choices=["drop", "fill", "flag"])
-    sweep.add_argument("--job-runs", default=None)
-
-    sql = sub.add_parser("sql", help="ad-hoc SQL over the test tables")
+    sql = _command(sub, _sql, "sql", help="ad-hoc SQL over the test tables")
     sql.add_argument("--sf-dir", required=True)
     sql.add_argument("--query", required=True)
     sql.add_argument("--limit", type=int, default=20)
 
     # reference scripts/status_check.py: recent jobs + per-status
     # counts from the metadata table, storage footprint of the sinks
-    status = sub.add_parser("status", help="job + storage health report")
+    status = _command(sub, _status, "status", help="job + storage health report")
     status.add_argument("--job-runs", required=True, help="job_runs table path")
     status.add_argument("--output", default=None, help="sink path to size")
     status.add_argument("--recent", type=int, default=10)
@@ -61,8 +88,8 @@ def main(argv: list[str] | None = None) -> int:
     # (explicit --force, like cleanup.py's confirmation prompt);
     # --expired is the lifecycle-rule equivalent (config.yaml:35-37):
     # age-based per-file expiry instead of whole-path delete
-    clean = sub.add_parser(
-        "clean", help="delete a pipeline output path, or expire old files"
+    clean = _command(
+        sub, _clean, "clean", help="delete a pipeline output path, or expire old files"
     )
     clean.add_argument("--path", default=None)
     clean.add_argument("--force", action="store_true")
@@ -85,8 +112,9 @@ def main(argv: list[str] | None = None) -> int:
 
     # snaptable maintenance — the transactional-table ops surface
     # (history/compact/vacuum/expire), Delta-utilities-shaped
-    snap = sub.add_parser(
-        "snap", help="snapshot-table maintenance (history/compact/vacuum/expire)"
+    snap = _command(
+        sub, _snap, "snap",
+        help="snapshot-table maintenance (history/compact/vacuum/expire)",
     )
     snap.add_argument(
         "action",
@@ -142,8 +170,8 @@ def main(argv: list[str] | None = None) -> int:
     # training-corpus toolkit: the dedup/decontam/filter/tokenize ops
     # as batch jobs over a parquet corpus (text column contract:
     # doc_id + text, embedding tables: vec_id + embedding)
-    corpus = sub.add_parser(
-        "corpus", help="corpus prep: dedup / decontam / filter / tokenize"
+    corpus = _command(
+        sub, _corpus, "corpus", help="corpus prep: dedup / decontam / filter / tokenize"
     )
     corpus.add_argument(
         "action",
@@ -240,8 +268,8 @@ def main(argv: list[str] | None = None) -> int:
         help="takedown: md5(text) content-hash rule (repeatable)",
     )
 
-    warc = sub.add_parser(
-        "warc", help="ingest WARC crawl files into a documents parquet"
+    warc = _command(
+        sub, _warc, "warc", help="ingest WARC crawl files into a documents parquet"
     )
     warc.add_argument("--input", required=True, help="WARC file/dir")
     warc.add_argument("--output", required=True, help="documents parquet path")
@@ -257,16 +285,17 @@ def main(argv: list[str] | None = None) -> int:
         help="add a text column via the HTML extraction chain",
     )
 
-    probe = sub.add_parser(
-        "probe", help="media container metadata (mp4/mp3/wav/images), no decode"
+    probe = _command(
+        sub, _probe, "probe",
+        help="media container metadata (mp4/mp3/wav/images), no decode",
     )
     probe.add_argument("--input", required=True, help="media parquet path")
     probe.add_argument("--output", default=None, help="metadata parquet path")
     probe.add_argument("--id-col", default="media_id")
     probe.add_argument("--payload-col", default="payload")
 
-    rank = sub.add_parser(
-        "rank", help="PageRank/HITS over a link graph (edges or docs+links)"
+    rank = _command(
+        sub, _rank, "rank", help="PageRank/HITS over a link graph (edges or docs+links)"
     )
     rank.add_argument("--input", required=True, help="input parquet path")
     rank.add_argument(
@@ -299,8 +328,8 @@ def main(argv: list[str] | None = None) -> int:
     rank.add_argument("--top", type=int, default=10,
                       help="top-N nodes echoed in the report")
 
-    topk = sub.add_parser(
-        "topk",
+    topk = _command(
+        sub, _topk, "topk",
         help="space-saving heavy hitters over a column (bounded shuffle)",
     )
     topk.add_argument("--input", required=True, help="input parquet path")
@@ -318,8 +347,8 @@ def main(argv: list[str] | None = None) -> int:
         help="group column: per-group top-k instead of global",
     )
 
-    overlap = sub.add_parser(
-        "overlap",
+    overlap = _command(
+        sub, _overlap, "overlap",
         help="KMV sketch overlap/cardinality estimate between two tables",
     )
     overlap.add_argument("--a", required=True, help="first parquet path")
@@ -330,8 +359,9 @@ def main(argv: list[str] | None = None) -> int:
     )
     overlap.add_argument("--k", type=int, default=1024, help="sketch size")
 
-    layout = sub.add_parser(
-        "layout", help="re-cluster a table along the Z-order (Morton) curve"
+    layout = _command(
+        sub, _layout, "layout",
+        help="re-cluster a table along the Z-order (Morton) curve",
     )
     layout.add_argument("--input", required=True, help="input parquet path")
     layout.add_argument("--output", required=True, help="re-clustered parquet path")
@@ -345,8 +375,8 @@ def main(argv: list[str] | None = None) -> int:
         help="output file count (default: session shuffle parallelism)",
     )
 
-    ann = sub.add_parser(
-        "ann", help="similarity search over an embedding table"
+    ann = _command(
+        sub, _ann, "ann", help="similarity search over an embedding table"
     )
     ann.add_argument("--input", required=True, help="candidates parquet")
     ann.add_argument("--queries", required=True, help="query-vectors parquet")
@@ -372,8 +402,8 @@ def main(argv: list[str] | None = None) -> int:
         "loaded when it exists, else trained and saved there",
     )
 
-    anx = sub.add_parser(
-        "annindex",
+    anx = _command(
+        sub, _annindex, "annindex",
         help="incrementally maintained IVF-PQ index over a state dir",
     )
     anx.add_argument("--state", required=True, help="snapshot-state path")
@@ -390,11 +420,7 @@ def main(argv: list[str] | None = None) -> int:
     anx.add_argument("--k-codes", type=int, default=256)
     anx.add_argument("--id-col", default="vec_id")
     anx.add_argument("--vec-col", default="embedding")
-    anx.add_argument("--txn-id", default="cli-annindex", help="ledger app id")
-    anx.add_argument(
-        "--batch-id", type=int, default=None,
-        help="ledger batch number (required with --build/--add-batch)",
-    )
+    _ledger_flags(anx, "cli-annindex", "--build/--add-batch")
     anx.add_argument(
         "--queries", default=None,
         help="parquet path: run a top-k search (calibrated nprobe default)",
@@ -420,8 +446,8 @@ def main(argv: list[str] | None = None) -> int:
     anx.add_argument("--output", default=None, help="search results parquet")
     anx.add_argument("--show", type=int, default=5, help="print first N rows")
 
-    bj = sub.add_parser(
-        "bloomjoin",
+    bj = _command(
+        sub, _bloomjoin, "bloomjoin",
         help="join with the big side Bloom-pruned before the shuffle",
     )
     bj.add_argument("--big", required=True, help="fact-side parquet path")
@@ -440,8 +466,9 @@ def main(argv: list[str] | None = None) -> int:
         help="bitmap size (default 10x dim rows, ~0.9%% fp)",
     )
 
-    prof = sub.add_parser(
-        "profile", help="distribution profile of a numeric parquet column"
+    prof = _command(
+        sub, _profile, "profile",
+        help="distribution profile of a numeric parquet column",
     )
     prof.add_argument("--input", required=True, help="parquet path")
     prof.add_argument("--col", required=True, help="numeric column")
@@ -451,8 +478,8 @@ def main(argv: list[str] | None = None) -> int:
         help="second column: also report exact Pearson r",
     )
 
-    drift = sub.add_parser(
-        "drift", help="distribution drift between two parquet snapshots"
+    drift = _command(
+        sub, _drift, "drift", help="distribution drift between two parquet snapshots"
     )
     drift.add_argument("--reference", required=True, help="reference parquet")
     drift.add_argument("--current", required=True, help="current parquet")
@@ -463,8 +490,8 @@ def main(argv: list[str] | None = None) -> int:
     )
     drift.add_argument("--bins", type=int, default=10, help="PSI bin count")
 
-    tdiff = sub.add_parser(
-        "diff", help="keyed reconciliation of two parquet snapshots"
+    tdiff = _command(
+        sub, _diff, "diff", help="keyed reconciliation of two parquet snapshots"
     )
     tdiff.add_argument("--reference", required=True, help="reference parquet")
     tdiff.add_argument("--current", required=True, help="current parquet")
@@ -484,8 +511,8 @@ def main(argv: list[str] | None = None) -> int:
         help="optional parquet path for the per-row diff frame",
     )
 
-    outl = sub.add_parser(
-        "outliers", help="robust outlier flags over a parquet column"
+    outl = _command(
+        sub, _outliers, "outliers", help="robust outlier flags over a parquet column"
     )
     outl.add_argument("--input", required=True, help="parquet path")
     outl.add_argument("--col", required=True, help="numeric value column")
@@ -510,8 +537,8 @@ def main(argv: list[str] | None = None) -> int:
         help="optional parquet path for the flagged rows",
     )
 
-    tri = sub.add_parser(
-        "triangles",
+    tri = _command(
+        sub, _triangles, "triangles",
         help="triangle counts + clustering coefficients of an edge list",
     )
     tri.add_argument("--input", required=True, help="edge-list parquet")
@@ -526,8 +553,8 @@ def main(argv: list[str] | None = None) -> int:
         help="optional parquet path for the per-node frame",
     )
 
-    trn = sub.add_parser(
-        "transitions",
+    trn = _command(
+        sub, _transitions, "transitions",
         help="event transition matrix / path n-grams per actor",
     )
     trn.add_argument("--input", required=True, help="event parquet")
@@ -547,8 +574,8 @@ def main(argv: list[str] | None = None) -> int:
         help="optional parquet path for the full matrix/gram frame",
     )
 
-    smp = sub.add_parser(
-        "sample", help="deterministic hash-based sampling"
+    smp = _command(
+        sub, _sample, "sample", help="deterministic hash-based sampling"
     )
     smp.add_argument("--input", required=True, help="parquet path")
     smp.add_argument("--key", required=True, help="stable row key column")
@@ -568,8 +595,8 @@ def main(argv: list[str] | None = None) -> int:
     smp.add_argument("--salt", type=int, default=0)
     smp.add_argument("--output", required=True, help="sample parquet path")
 
-    bfs = sub.add_parser(
-        "bfs", help="minimum hop distances from a seed set over an edge list"
+    bfs = _command(
+        sub, _bfs, "bfs", help="minimum hop distances from a seed set over an edge list"
     )
     bfs.add_argument("--input", required=True, help="edge-list parquet")
     bfs.add_argument(
@@ -587,8 +614,8 @@ def main(argv: list[str] | None = None) -> int:
         help="optional parquet path for the (node, hop) frame",
     )
 
-    smo = sub.add_parser(
-        "smooth", help="exponential smoothing over an ordered series"
+    smo = _command(
+        sub, _smooth, "smooth", help="exponential smoothing over an ordered series"
     )
     smo.add_argument("--input", required=True, help="parquet path")
     smo.add_argument("--order-by", required=True, help="ordering column")
@@ -604,8 +631,9 @@ def main(argv: list[str] | None = None) -> int:
     smo.add_argument("--beta", type=float, default=0.2, help="holt trend gain")
     smo.add_argument("--output", required=True, help="smoothed parquet path")
 
-    sess = sub.add_parser(
-        "sessionize", help="gap-based session ids over an event parquet"
+    sess = _command(
+        sub, _sessionize, "sessionize",
+        help="gap-based session ids over an event parquet",
     )
     sess.add_argument("--input", required=True, help="event parquet")
     sess.add_argument("--key", required=True, help="actor column")
@@ -616,8 +644,8 @@ def main(argv: list[str] | None = None) -> int:
     )
     sess.add_argument("--output", required=True, help="output parquet path")
 
-    feat = sub.add_parser(
-        "features", help="ML feature prep: encode / scale / bucket"
+    feat = _command(
+        sub, _features, "features", help="ML feature prep: encode / scale / bucket"
     )
     feat.add_argument("--input", required=True, help="parquet path")
     feat.add_argument(
@@ -637,8 +665,8 @@ def main(argv: list[str] | None = None) -> int:
     feat.add_argument("--buckets", type=int, default=4)
     feat.add_argument("--output", required=True, help="output parquet path")
 
-    explain = sub.add_parser(
-        "explain", help="print the physical plan of a catalog query"
+    explain = _command(
+        sub, _explain, "explain", help="print the physical plan of a catalog query"
     )
     explain.add_argument("--query", required=True, help="catalog query name")
     explain.add_argument(
@@ -650,8 +678,8 @@ def main(argv: list[str] | None = None) -> int:
         help="explain mode: simple/extended/codegen/cost/formatted",
     )
 
-    evolve = sub.add_parser(
-        "evolve",
+    evolve = _command(
+        sub, _evolve, "evolve",
         help="read a parquet dir whose files span schema versions",
     )
     evolve.add_argument("--input", required=True, help="parquet table path")
@@ -660,8 +688,8 @@ def main(argv: list[str] | None = None) -> int:
         help="write the widened/normalized table here (else report only)",
     )
 
-    tpch = sub.add_parser(
-        "tpch", help="run the TPC-H parity-pack queries over an sf dir"
+    tpch = _command(
+        sub, _tpch, "tpch", help="run the TPC-H parity-pack queries over an sf dir"
     )
     tpch.add_argument(
         "--sf-dir", default="/root/testdata/sf0.01",
@@ -679,8 +707,9 @@ def main(argv: list[str] | None = None) -> int:
         help="print the first N result rows per query",
     )
 
-    lat = sub.add_parser(
-        "lattice", help="multi-level aggregation: rollup / cube / grouping sets"
+    lat = _command(
+        sub, _lattice, "lattice",
+        help="multi-level aggregation: rollup / cube / grouping sets",
     )
     lat.add_argument("--input", required=True, help="parquet path")
     lat.add_argument(
@@ -701,8 +730,8 @@ def main(argv: list[str] | None = None) -> int:
         "--show", type=int, default=20, help="print first N level rows"
     )
 
-    vid = sub.add_parser(
-        "video", help="probe an MJPG AVI and sample decoded frames"
+    vid = _command(
+        sub, _video, "video", help="probe an MJPG AVI and sample decoded frames"
     )
     vid.add_argument("--input", required=True, help="AVI file path")
     vid.add_argument(
@@ -712,8 +741,8 @@ def main(argv: list[str] | None = None) -> int:
         "--max-frames", type=int, default=8, help="cap on decoded frames"
     )
 
-    dmon = sub.add_parser(
-        "driftmon", help="incremental drift monitor over a state dir"
+    dmon = _command(
+        sub, _driftmon, "driftmon", help="incremental drift monitor over a state dir"
     )
     dmon.add_argument("--state", required=True, help="snapshot-state path")
     dmon.add_argument("--col", required=True, help="category column")
@@ -724,14 +753,10 @@ def main(argv: list[str] | None = None) -> int:
     dmon.add_argument(
         "--batch", default=None, help="parquet path: fold one current batch"
     )
-    dmon.add_argument("--txn-id", default="cli-driftmon", help="ledger app id")
-    dmon.add_argument(
-        "--batch-id", type=int, default=None,
-        help="ledger batch number (required with --batch/--set-reference)",
-    )
+    _ledger_flags(dmon, "cli-driftmon", "--batch/--set-reference")
 
-    kj = sub.add_parser(
-        "knnjoin", help="distributed kNN join of two embedding parquets"
+    kj = _command(
+        sub, _knnjoin, "knnjoin", help="distributed kNN join of two embedding parquets"
     )
     kj.add_argument("--left", required=True, help="left parquet (queries)")
     kj.add_argument("--right", required=True, help="right parquet (corpus)")
@@ -743,38 +768,20 @@ def main(argv: list[str] | None = None) -> int:
     kj.add_argument("--output", default=None, help="optional parquet sink")
     kj.add_argument("--show", type=int, default=5, help="print first N rows")
 
-    dl = sub.add_parser(
-        "delta",
-        help="read a Delta Lake table via the open log protocol (no jar)",
+    dl = _lake_table_parser(
+        sub, "delta",
+        "read a Delta Lake table via the open log protocol (no jar)",
+        commit="commit", since="version", since_type=int, time_travel=True,
     )
-    dl.add_argument("--path", required=True, help="Delta table root")
     dl.add_argument(
         "--version", type=int, default=None, help="time-travel version"
     )
     dl.add_argument(
-        "--timestamp-ms", type=int, default=None,
-        help="time travel to the newest commit at or before this epoch ms",
-    )
-    dl.add_argument(
         "--history", action="store_true", help="print the commit history"
     )
-    dl.add_argument("--output", default=None, help="export snapshot parquet")
-    dl.add_argument("--show", type=int, default=5, help="preview rows")
     dl.add_argument(
         "--delete-where", default=None,
         help="DELETE matching rows via deletion vectors (no rewrite)",
-    )
-    dl.add_argument(
-        "--write", default=None,
-        help="parquet path: write it INTO the table as one commit",
-    )
-    dl.add_argument(
-        "--mode", default="append", choices=["append", "overwrite"],
-        help="write mode for --write",
-    )
-    dl.add_argument(
-        "--partition-by", default=None,
-        help="comma-separated partition columns for --write",
     )
     dl.add_argument(
         "--update-where", default=None,
@@ -795,10 +802,6 @@ def main(argv: list[str] | None = None) -> int:
         help="comma-separated merge key columns for --merge",
     )
     dl.add_argument(
-        "--changes-since", type=int, default=None,
-        help="incremental read: rows changed after this version",
-    )
-    dl.add_argument(
         "--cdf", action="store_true",
         help="with --delete-where: also write the change data feed; "
              "with --changes-since: replay cdc actions as row-level "
@@ -814,38 +817,21 @@ def main(argv: list[str] | None = None) -> int:
              "older than this many hours",
     )
 
-    ib = sub.add_parser(
-        "iceberg",
-        help="read an Apache Iceberg table via the open spec (no jar)",
+    ib = _lake_table_parser(
+        sub, "iceberg",
+        "read an Apache Iceberg table via the open spec (no jar)",
+        commit="snapshot", since="snapshot id", since_type=int,
+        partition="identity partition", time_travel=True, change_rows=True,
     )
-    ib.add_argument("--path", required=True, help="Iceberg table root")
     ib.add_argument(
         "--snapshot-id", type=int, default=None, help="time-travel snapshot"
     )
     ib.add_argument(
-        "--timestamp-ms", type=int, default=None,
-        help="time travel to the newest snapshot at or before this epoch ms",
-    )
-    ib.add_argument(
         "--snapshots", action="store_true", help="print the snapshot log"
     )
-    ib.add_argument("--output", default=None, help="export snapshot parquet")
-    ib.add_argument("--show", type=int, default=5, help="preview rows")
     ib.add_argument(
         "--delete-where", default=None,
         help="DELETE matching rows via v2 position deletes (no rewrite)",
-    )
-    ib.add_argument(
-        "--write", default=None,
-        help="parquet path: write it INTO the table as one snapshot",
-    )
-    ib.add_argument(
-        "--mode", default="append", choices=["append", "overwrite"],
-        help="write mode for --write",
-    )
-    ib.add_argument(
-        "--partition-by", default=None,
-        help="comma-separated identity partition columns for --write",
     )
     ib.add_argument(
         "--compact", action="store_true",
@@ -864,21 +850,12 @@ def main(argv: list[str] | None = None) -> int:
         "--keys", default=None,
         help="comma-separated upsert key columns for --upsert",
     )
-    ib.add_argument(
-        "--changes-since", type=int, default=None,
-        help="incremental read: rows changed after this snapshot id",
-    )
-    ib.add_argument(
-        "--change-rows", action="store_true",
-        help="with --changes-since: replay upserts/deletes as labeled "
-             "change rows (_change_type/_commit_version)",
-    )
 
-    hu = sub.add_parser(
-        "hudi",
-        help="read an Apache Hudi CoW table via the open layout (no jar)",
+    hu = _lake_table_parser(
+        sub, "hudi",
+        "read an Apache Hudi CoW table via the open layout (no jar)",
+        commit="CoW commit", since="instant", change_rows=True,
     )
-    hu.add_argument("--path", required=True, help="Hudi table root")
     hu.add_argument(
         "--as-of", default=None, help="time-travel instant (yyyyMMddHHmmss)"
     )
@@ -888,18 +865,6 @@ def main(argv: list[str] | None = None) -> int:
     hu.add_argument(
         "--compact", action="store_true",
         help="MOR compaction: merge delta logs into new base slices",
-    )
-    hu.add_argument(
-        "--write", default=None,
-        help="parquet path: write it INTO the table as one CoW commit",
-    )
-    hu.add_argument(
-        "--mode", default="append", choices=["append", "overwrite"],
-        help="write mode for --write",
-    )
-    hu.add_argument(
-        "--partition-by", default=None,
-        help="comma-separated partition columns for --write",
     )
     hu.add_argument(
         "--clean-keep-last", type=int, default=None,
@@ -917,20 +882,9 @@ def main(argv: list[str] | None = None) -> int:
         "--key-col", default=None,
         help="record key column for --upsert",
     )
-    hu.add_argument(
-        "--changes-since", default=None,
-        help="incremental read: rows changed after this instant",
-    )
-    hu.add_argument(
-        "--change-rows", action="store_true",
-        help="with --changes-since: replay upserts/deletes as labeled "
-             "change rows (_change_type/_commit_version)",
-    )
-    hu.add_argument("--output", default=None, help="export snapshot parquet")
-    hu.add_argument("--show", type=int, default=5, help="preview rows")
 
-    pdfp = sub.add_parser(
-        "pdf", help="extract text from PDF payloads into a documents table"
+    pdfp = _command(
+        sub, _pdf, "pdf", help="extract text from PDF payloads into a documents table"
     )
     pdfp.add_argument(
         "--input", required=True,
@@ -941,8 +895,8 @@ def main(argv: list[str] | None = None) -> int:
     pdfp.add_argument("--output", default=None, help="documents parquet path")
     pdfp.add_argument("--show", type=int, default=3, help="preview rows")
 
-    lgr = sub.add_parser(
-        "linkgraph",
+    lgr = _command(
+        sub, _linkgraph, "linkgraph",
         help="incremental link graph: fold edge batches, warm-start "
         "pagerank/hits refresh over a state dir",
     )
@@ -956,11 +910,7 @@ def main(argv: list[str] | None = None) -> int:
     lgr.add_argument(
         "--weight", default=None, help="optional integer edge-weight column"
     )
-    lgr.add_argument("--txn-id", default="cli-linkgraph", help="ledger app id")
-    lgr.add_argument(
-        "--batch-id", type=int, default=None,
-        help="ledger batch number (required with --add-edges)",
-    )
+    _ledger_flags(lgr, "cli-linkgraph", "--add-edges")
     lgr.add_argument(
         "--pagerank", action="store_true",
         help="refresh PageRank (warm-started from the stored vector)",
@@ -984,8 +934,8 @@ def main(argv: list[str] | None = None) -> int:
     )
     lgr.add_argument("--show", type=int, default=10, help="print top-N nodes")
 
-    lk = sub.add_parser(
-        "lake",
+    lk = _command(
+        sub, _lake, "lake",
         help="format-agnostic lake table access: detect the layout "
         "(snaptable/delta/iceberg/hudi/avro/parquet) and read, "
         "consume changes, or write",
@@ -1017,8 +967,8 @@ def main(argv: list[str] | None = None) -> int:
     lk.add_argument("--output", default=None, help="export parquet path")
     lk.add_argument("--show", type=int, default=5, help="preview rows")
 
-    lvw = sub.add_parser(
-        "lakeview",
+    lvw = _command(
+        sub, _lakeview, "lakeview",
         help="incrementally-maintained rollup over any lake table "
         "(snaptable/delta/iceberg/hudi) via its change feed",
     )
@@ -1041,13 +991,206 @@ def main(argv: list[str] | None = None) -> int:
     )
     lvw.add_argument("--show", type=int, default=5, help="preview rows")
 
-    args = p.parse_args(argv)
+    return p
 
-    from harness_aws_etl_pipeline_spark.config import EngineConfig
+
+def _ledger_flags(sp, app: str, flags: str) -> None:
+    """``--txn-id`` / ``--batch-id``: the exactly-once ledger key that
+    :func:`_txn` reads for the incremental state-dir commands."""
+    sp.add_argument("--txn-id", default=app, help="ledger app id")
+    sp.add_argument(
+        "--batch-id", type=int, default=None,
+        help=f"ledger batch number (required with {flags})",
+    )
+
+
+def _lake_table_parser(
+    sub, name: str, help: str, *, commit: str, since: str, since_type=None,
+    partition: str = "partition", time_travel: bool = False,
+    change_rows: bool = False,
+) -> argparse.ArgumentParser:
+    """The ``delta`` / ``iceberg`` / ``hudi`` subparser with the flags
+    the three share; the caller adds the format's own flags."""
+    sp = _command(sub, functools.partial(_lake_table, name), name, help=help)
+    sp.add_argument(
+        "--path", required=True, help=f"{name.capitalize()} table root"
+    )
+    sp.add_argument(
+        "--write", default=None,
+        help=f"parquet path: write it INTO the table as one {commit}",
+    )
+    sp.add_argument(
+        "--mode", default="append", choices=["append", "overwrite"],
+        help="write mode for --write",
+    )
+    sp.add_argument(
+        "--partition-by", default=None,
+        help=f"comma-separated {partition} columns for --write",
+    )
+    sp.add_argument(
+        "--changes-since", type=since_type, default=None,
+        help=f"incremental read: rows changed after this {since}",
+    )
+    if time_travel:
+        sp.add_argument(
+            "--timestamp-ms", type=int, default=None,
+            help=f"time travel to the newest {commit} at or before this "
+                 "epoch ms",
+        )
+    if change_rows:
+        sp.add_argument(
+            "--change-rows", action="store_true",
+            help="with --changes-since: replay upserts/deletes as labeled "
+                 "change rows (_change_type/_commit_version)",
+        )
+    sp.add_argument("--output", default=None, help="export snapshot parquet")
+    sp.add_argument("--show", type=int, default=5, help="preview rows")
+    return sp
+
+
+# ---------------------------------------------------------------------
+# Shared handler helpers
+# ---------------------------------------------------------------------
+
+
+def _spark():
     from harness_aws_etl_pipeline_spark.session import get_spark
 
-    if args.cmd == "clean" and args.expired:
-        # no Spark session needed — pure FS metadata op
+    return get_spark("etl-cli")
+
+
+def _split(csv: str | None) -> list[str] | None:
+    return csv.split(",") if csv else None
+
+
+def _save(df, path: str | None, reread: bool = False):
+    """Overwrite ``path`` with ``df`` as parquet when a path is given.
+    With ``reread``, return the frame read back from the sink, so the
+    caller's counts come from the written files, not a recompute."""
+    if not path:
+        return df
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.parquet(path) if reread else df
+
+
+def _rows(df, n: int) -> list[dict]:
+    return [r.asDict() for r in df.limit(n).collect()]
+
+
+def _preview(df, n: int) -> dict:
+    return {"rows": df.count(), "preview": _rows(df, n)}
+
+
+def _counts(df, col: str) -> dict:
+    """Row count per value of ``col``."""
+    return {r[col]: r["count"] for r in df.groupBy(col).count().collect()}
+
+
+def _read_report(df, args, **head) -> dict:
+    """Report of a table read: export to ``--output``, count, and
+    preview ``--show`` rows."""
+    _save(df, args.output)
+    return {
+        "status": "success", **head, **_preview(df, args.show),
+        "output": args.output,
+    }
+
+
+def _txn(args, flag: str, suffix: str = "") -> tuple[str, int]:
+    """Ledger ``(app id, batch id)`` for a ``flag`` that folds a batch
+    into an incremental state dir; ``--batch-id`` is required."""
+    if args.batch_id is None:
+        raise UsageError(f"{flag} requires --batch-id")
+    return f"{args.txn_id}{suffix}", args.batch_id
+
+
+def _assignments(clauses: list[str]) -> dict[str, str]:
+    """``COL=EXPR`` clauses (``snap update --set``, ``delta --set``)
+    as ``{col: expr}``; a clause without its column or expression is a
+    usage error, caught before any table is touched."""
+    sets = {}
+    for s in clauses:
+        col, eq, expr = s.partition("=")
+        if not eq or not col.strip() or not expr.strip():
+            raise UsageError(f"--set needs COL=EXPR, got {s!r}")
+        sets[col.strip()] = expr.strip()
+    return sets
+
+
+# ---------------------------------------------------------------------
+# Handlers, in parser order
+# ---------------------------------------------------------------------
+
+
+def _etl(args, source_info: dict):
+    from harness_aws_etl_pipeline_spark.config import EngineConfig
+    from harness_aws_etl_pipeline_spark.meta import JobRuns
+    from harness_aws_etl_pipeline_spark.pipeline import run_job
+
+    spark = _spark()
+    overrides: dict = {"etl": {"load": {"format": args.format}}}
+    if args.null_handling:
+        overrides["etl"]["transform"] = {"null_handling": args.null_handling}
+    cfg = EngineConfig(overrides)
+    job_runs = JobRuns(spark, args.job_runs) if args.job_runs else None
+    try:
+        result = run_job(spark, source_info, args.output, cfg, job_runs=job_runs)
+    except Exception as exc:  # noqa: BLE001 - CLI boundary
+        return {"status": "failed", "error": str(exc)[:2000]}, 1
+    return result, 0 if result.get("status") in ("success", "skipped") else 1
+
+
+def _run(args):
+    return _etl(args, {"type": "direct", "path": args.source})
+
+
+def _sweep(args):
+    return _etl(args, {"type": "batch", "prefix": args.prefix})
+
+
+def _sql(args):
+    from harness_aws_etl_pipeline_spark.plans.sqlapi import sql as run_sql
+
+    df = run_sql(_spark(), args.sf_dir, args.query)
+    for row in df.limit(args.limit).collect():
+        print(json.dumps(row.asDict(), default=str))
+
+
+def _status(args):
+    from pyspark.sql import functions as F
+
+    from harness_aws_etl_pipeline_spark.meta import JobRuns
+    from harness_aws_etl_pipeline_spark.sinks.fs import get_fs
+
+    spark = _spark()
+    latest = JobRuns(spark, args.job_runs).latest()
+    by_status = _counts(latest, "status")
+    recent = [
+        {
+            "job_id": r["job_id"],
+            "status": r["status"],
+            "ts": str(r["ts"]),
+            "duration_seconds": float(r["duration_seconds"])
+            if r["duration_seconds"] is not None
+            else None,
+        }
+        for r in latest.orderBy(F.col("ts").desc()).limit(args.recent).collect()
+    ]
+    report = {"jobs_by_status": by_status, "recent_jobs": recent}
+    if args.output:
+        fs = get_fs(args.output, spark)
+        report["output"] = {
+            "path": args.output,
+            "exists": fs.exists(args.output),
+            "bytes": fs.tree_size(args.output) if fs.exists(args.output) else 0,
+        }
+    return report
+
+
+def _clean(args):
+    # no Spark session needed — pure FS metadata ops
+    if args.expired:
+        from harness_aws_etl_pipeline_spark.config import EngineConfig
         from harness_aws_etl_pipeline_spark.sinks.retention import (
             sweep_expired,
             sweep_lifecycle,
@@ -1063,1906 +1206,1511 @@ def main(argv: list[str] | None = None) -> int:
             report: dict = sweep_lifecycle(roots, EngineConfig(), dry_run=dry)
         elif args.path:
             if args.days is None:
-                p.error("clean --expired --path requires --days")
+                raise UsageError("clean --expired --path requires --days")
             report = sweep_expired(args.path, args.days, dry_run=dry)
         else:
-            p.error("clean --expired needs --path or tier roots (--raw/...)")
+            raise UsageError(
+                "clean --expired needs --path or tier roots (--raw/...)"
+            )
         if dry:
             report = {"hint": "dry run; re-run with --force to delete", **report}
-        print(json.dumps(report))
-        return 0
+        return report
+    if not args.path:
+        raise UsageError("clean requires --path")
+    from harness_aws_etl_pipeline_spark.sinks.fs import get_fs
 
-    if args.cmd == "clean":
-        if not args.path:
-            p.error("clean requires --path")
-        # no Spark session needed — pure FS metadata op
-        from harness_aws_etl_pipeline_spark.sinks.fs import get_fs
+    fs = get_fs(args.path)
+    if not fs.exists(args.path):
+        return {"path": args.path, "status": "absent"}
+    if not args.force:
+        return {
+            "path": args.path,
+            "status": "would_delete",
+            "bytes": fs.tree_size(args.path),
+            "hint": "re-run with --force to delete",
+        }, 1
+    fs.delete(args.path, recursive=True)
+    return {"path": args.path, "status": "deleted"}
 
-        fs = get_fs(args.path)
-        if not fs.exists(args.path):
-            print(json.dumps({"path": args.path, "status": "absent"}))
-            return 0
-        if not args.force:
-            print(
-                json.dumps(
-                    {
-                        "path": args.path,
-                        "status": "would_delete",
-                        "bytes": fs.tree_size(args.path),
-                        "hint": "re-run with --force to delete",
-                    }
-                )
-            )
-            return 1
-        fs.delete(args.path, recursive=True)
-        print(json.dumps({"path": args.path, "status": "deleted"}))
-        return 0
 
-    spark = get_spark("etl-cli")
+def _snap(args):
+    from harness_aws_etl_pipeline_spark.sinks.snaptable import SnapTable
 
-    if args.cmd == "snap":
-        from harness_aws_etl_pipeline_spark.sinks.snaptable import SnapTable
-
-        t = SnapTable(spark, args.path, fmt=args.snap_format)
-        if args.action == "history":
-            print(json.dumps({"history": t.history()}))
-        elif args.action == "compact":
-            print(json.dumps(t.compact(args.target_file_mb * 1024 * 1024)))
-        elif args.action == "vacuum":
-            print(
-                json.dumps(
-                    t.vacuum(
-                        dry_run=not args.force,
-                        min_age_seconds=args.min_age_hours * 3600,
-                    )
-                )
-            )
-        elif args.action == "optimize":
-            if not args.zorder_by:
-                p.error("snap optimize requires --zorder-by")
-            print(json.dumps(t.optimize(args.zorder_by.split(","))))
-        elif args.action == "restore":
-            if args.to_version is None:
-                p.error("snap restore requires --to-version")
-            print(json.dumps(t.restore(args.to_version)))
-        elif args.action == "changes":
-            if args.since is None:
-                p.error("snap changes requires --since")
-            ch = t.read_changes(
-                args.since, to_version=args.to_version, on_rewrite="error"
-            )
-            print(
-                json.dumps(
-                    {
-                        "since": args.since,
-                        "to": args.to_version
-                        if args.to_version is not None
-                        else t.current_version(),
-                        "rows_added": ch.count(),
-                    }
-                )
-            )
-        elif args.action == "export-delta":
-            from harness_aws_etl_pipeline_spark.sinks.deltaexport import (
-                export_delta_log,
-            )
-
-            print(json.dumps(export_delta_log(spark, args.path)))
-        elif args.action == "delete":
-            if not args.where:
-                p.error("snap delete requires --where")
-            print(json.dumps(t.delete_where(args.where)))
-        elif args.action == "update":
-            if not args.where or not args.set_exprs:
-                p.error("snap update requires --where and --set")
-            sets = {}
-            for s in args.set_exprs:
-                col, eq, expr = s.partition("=")
-                if not eq or not col.strip() or not expr.strip():
-                    p.error(f"--set needs COL=EXPR, got {s!r}")
-                sets[col.strip()] = expr.strip()
-            print(json.dumps(t.update_where(sets, args.where)))
-        else:  # expire
-            print(json.dumps(t.expire_snapshots(keep_last=args.keep_last)))
-        return 0
-
-    if args.cmd == "status":
-        from pyspark.sql import functions as F
-
-        from harness_aws_etl_pipeline_spark.meta import JobRuns
-        from harness_aws_etl_pipeline_spark.sinks.fs import get_fs
-
-        runs = JobRuns(spark, args.job_runs)
-        latest = runs.latest()
-        by_status = {
-            r["status"]: r["n"]
-            for r in latest.groupBy("status").agg(F.count(F.lit(1)).alias("n")).collect()
+    spark = _spark()
+    t = SnapTable(spark, args.path, fmt=args.snap_format)
+    if args.action == "history":
+        return {"history": t.history()}
+    if args.action == "compact":
+        return t.compact(args.target_file_mb * 1024 * 1024)
+    if args.action == "vacuum":
+        return t.vacuum(
+            dry_run=not args.force,
+            min_age_seconds=args.min_age_hours * 3600,
+        )
+    if args.action == "optimize":
+        if not args.zorder_by:
+            raise UsageError("snap optimize requires --zorder-by")
+        return t.optimize(args.zorder_by.split(","))
+    if args.action == "restore":
+        if args.to_version is None:
+            raise UsageError("snap restore requires --to-version")
+        return t.restore(args.to_version)
+    if args.action == "changes":
+        if args.since is None:
+            raise UsageError("snap changes requires --since")
+        ch = t.read_changes(
+            args.since, to_version=args.to_version, on_rewrite="error"
+        )
+        return {
+            "since": args.since,
+            "to": args.to_version
+            if args.to_version is not None
+            else t.current_version(),
+            "rows_added": ch.count(),
         }
-        recent = [
-            {
-                "job_id": r["job_id"],
-                "status": r["status"],
-                "ts": str(r["ts"]),
-                "duration_seconds": float(r["duration_seconds"])
-                if r["duration_seconds"] is not None
-                else None,
-            }
-            for r in latest.orderBy(F.col("ts").desc()).limit(args.recent).collect()
-        ]
-        report = {"jobs_by_status": by_status, "recent_jobs": recent}
-        if args.output:
-            fs = get_fs(args.output, spark)
-            report["output"] = {
-                "path": args.output,
-                "exists": fs.exists(args.output),
-                "bytes": fs.tree_size(args.output) if fs.exists(args.output) else 0,
-            }
-        print(json.dumps(report))
-        return 0
-
-    if args.cmd == "warc":
-        from pyspark.sql import functions as F
-
-        from harness_aws_etl_pipeline_spark.sources.warc import read_warc
-
-        df = read_warc(
-            spark, args.input,
-            record_types=() if args.all_records else ("response",),
-            glob=args.glob,
-        )
-        if args.extract_text:
-            from harness_aws_etl_pipeline_spark.operators.html import (
-                html_to_text,
-            )
-            from harness_aws_etl_pipeline_spark.operators.textclean import (
-                decode_text,
-            )
-
-            # charset-aware decode (BOM/header/meta-sniff chain), then
-            # markup -> text for text/* payloads only
-            df = decode_text(df, out_col="_decoded")
-            df = df.withColumn(
-                "text",
-                F.when(
-                    F.col("content_type").startswith("text/"),
-                    html_to_text(F.col("_decoded")),
-                ),
-            ).drop("_decoded")
-        df.write.mode("overwrite").parquet(args.output)
-        got = spark.read.parquet(args.output)
-        by_type = {
-            r["record_type"]: r["count"]
-            for r in got.groupBy("record_type").count().collect()
-        }
-        print(json.dumps({
-            "status": "success", "action": "warc",
-            "rows": sum(by_type.values()), "record_types": by_type,
-            "output": args.output,
-        }))
-        return 0
-
-    if args.cmd == "bloomjoin":
-        from harness_aws_etl_pipeline_spark.operators.bloomjoin import (
-            bloom_build,
-            bloom_join,
-            bloom_prune,
+    if args.action == "export-delta":
+        from harness_aws_etl_pipeline_spark.sinks.deltaexport import (
+            export_delta_log,
         )
 
-        big = spark.read.parquet(args.big)
-        small = spark.read.parquet(args.small)
-        on = (args.on, args.small_on) if args.small_on else args.on
-        bloom = bloom_build(
-            small, args.small_on or args.on,
-            num_hashes=args.num_hashes, num_bits=args.num_bits,
-        )
-        kept = bloom_prune(big, args.on, bloom).count()
-        out = bloom_join(
-            big, small, on, how=args.how,
-            num_hashes=args.num_hashes, num_bits=args.num_bits,
-        )
-        if args.output:
-            out.write.mode("overwrite").parquet(args.output)
-            joined = spark.read.parquet(args.output).count()
-        else:
-            joined = out.count()
-        big_rows = big.count()
-        print(json.dumps({
-            "status": "success", "action": "bloomjoin", "how": args.how,
-            "big_rows": big_rows, "kept_after_prune": kept,
-            "shuffle_reduction": round(1 - kept / max(big_rows, 1), 4),
-            "join_rows": joined, "num_bits": bloom.num_bits,
-            "output": args.output,
-        }))
-        return 0
+        return export_delta_log(spark, args.path)
+    if args.action == "delete":
+        if not args.where:
+            raise UsageError("snap delete requires --where")
+        return t.delete_where(args.where)
+    if args.action == "update":
+        if not args.where or not args.set_exprs:
+            raise UsageError("snap update requires --where and --set")
+        return t.update_where(_assignments(args.set_exprs), args.where)
+    return t.expire_snapshots(keep_last=args.keep_last)
 
-    if args.cmd == "profile":
+
+def _corpus(args):
+    spark = _spark()
+    df = spark.read.parquet(args.input)
+    if args.action == "dedup":
+        from harness_aws_etl_pipeline_spark.operators.dedup_api import (
+            deduplicate,
+        )
+
+        # corpus semantics: exact/hash dedup keys on CONTENT, not
+        # the whole row (doc ids differ between duplicate docs)
+        subset = (
+            [args.text_col] if args.method in ("exact", "hash") else None
+        )
+        out = deduplicate(
+            df, method=args.method, id_col=args.id_col,
+            text_col=args.text_col, threshold=args.threshold,
+            subset=subset,
+        )
+    elif args.action == "decontam":
+        if not args.benchmark:
+            return {"status": "failed", "error": "--benchmark required"}, 1
+        from harness_aws_etl_pipeline_spark.operators.decontam import (
+            decontaminate,
+        )
+
+        bench = spark.read.parquet(args.benchmark)
+        out = decontaminate(
+            df, bench, n=args.ngram, id_col=args.id_col,
+            text_col=args.text_col,
+        )
+    elif args.action == "span-dedup":
+        from harness_aws_etl_pipeline_spark.operators.spandedup import (
+            remove_duplicated_spans,
+        )
+
+        out = remove_duplicated_spans(
+            df, k=args.ngram, id_col=args.id_col, text_col=args.text_col
+        )
+    elif args.action == "filter":
+        from harness_aws_etl_pipeline_spark.operators.filters import (
+            apply_quality_filters,
+        )
+
+        out = apply_quality_filters(
+            df, args.preset, text_col=args.text_col, mode="filter"
+        )
+    elif args.action == "train-scorer":
+        return _corpus_train_scorer(spark, df, args)
+    elif args.action == "score":
+        from harness_aws_etl_pipeline_spark.operators.classifier import (
+            load_model,
+            score_quality,
+        )
+
+        if not args.model:
+            return {"status": "failed", "error": "--model required"}, 1
+        out = score_quality(
+            df, load_model(args.model, spark), text_col=args.text_col
+        )
+    elif args.action == "tokenize":
+        from harness_aws_etl_pipeline_spark.operators.bpe import (
+            apply_bpe,
+            train_bpe,
+        )
+
+        merges = train_bpe(df, num_merges=args.merges, text_col=args.text_col)
+        out = apply_bpe(df, merges, text_col=args.text_col)
+    elif args.action == "prepare":
+        return _corpus_prepare(spark, df, args)
+    elif args.action == "takedown":
+        return _corpus_takedown(spark, df, args)
+    else:  # report: corpus summary + per-rule gate counts, no write
+        from harness_aws_etl_pipeline_spark.operators.corpus_report import (
+            corpus_report,
+        )
+        from harness_aws_etl_pipeline_spark.operators.filters import (
+            quality_filter_report,
+        )
+
+        row = quality_filter_report(
+            df, args.preset, text_col=args.text_col
+        ).collect()[0]
+        summary = corpus_report(
+            df, text_col=args.text_col, filter_preset=None
+        )
+        return {"status": "success", **summary, **row.asDict()}
+    rows_in = df.count()
+    rows_out = _save(out, args.output, reread=True).count()
+    return {
+        "status": "success", "action": args.action,
+        "rows_in": rows_in, "rows_out": rows_out,
+        "rows_removed": rows_in - rows_out,
+        "output": args.output,
+    }
+
+
+def _corpus_train_scorer(spark, df, args):
+    from harness_aws_etl_pipeline_spark.operators.classifier import (
+        save_model,
+        train_quality_classifier,
+    )
+
+    if not args.model:
+        return {"status": "failed", "error": "--model required"}, 1
+    labeled = df
+    label_col = args.label_col
+    if label_col is None:
         from pyspark.sql import functions as SF
 
-        from harness_aws_etl_pipeline_spark.operators.histogram import (
-            corr_exact,
-            histogram,
+        from harness_aws_etl_pipeline_spark.operators.filters import (
+            apply_quality_filters,
         )
 
-        df = spark.read.parquet(args.input)
-        stats = df.agg(
-            SF.count(SF.col(args.col)).alias("n"),
-            SF.min(args.col).alias("min"),
-            SF.max(args.col).alias("max"),
-            SF.avg(args.col).alias("mean"),
-            SF.expr(f"percentile(`{args.col}`, 0.5)").alias("p50"),
-        ).first()
-        hist = [
-            {"bin": r["bin"], "lo": r["lo"], "hi": r["hi"], "cnt": r["cnt"]}
-            for r in histogram(df, args.col, bins=args.bins).collect()
-        ]
-        out = {
-            "status": "success", "action": "profile", "col": args.col,
-            "n": stats["n"], "min": stats["min"], "max": stats["max"],
-            "mean": stats["mean"], "p50": stats["p50"], "histogram": hist,
-        }
-        if args.corr_with:
-            c = corr_exact(df, args.col, args.corr_with).first()
-            out["corr"] = {"with": args.corr_with, "n": c["n"], "r": c["corr"]}
-        print(json.dumps(out))
-        return 0
+        labeled = apply_quality_filters(
+            df, args.preset, text_col=args.text_col
+        ).withColumn("__label", SF.col("_qf_pass").cast("int"))
+        label_col = "__label"
+    m = train_quality_classifier(
+        labeled, label_col, text_col=args.text_col, id_col=args.id_col
+    )
+    save_model(m, args.model, spark)
+    return {
+        "status": "success", "model": args.model,
+        "n": m["n"], "final_loss": m["losses"][-1],
+        "iterations": len(m["losses"]),
+    }
 
-    if args.cmd == "outliers":
-        from pyspark.sql import functions as F
 
-        from harness_aws_etl_pipeline_spark.operators.outliers import (
-            iqr_outliers,
-            mad_outliers,
-            rolling_zscore,
+def _corpus_prepare(spark, df, args):
+    from harness_aws_etl_pipeline_spark.operators.corpus_pipeline import (
+        prepare_corpus,
+    )
+
+    bench_df = (
+        spark.read.parquet(args.benchmark) if args.benchmark else None
+    )
+    rules = None
+    if args.suffix_list:
+        from harness_aws_etl_pipeline_spark.operators.urlops import (
+            load_suffix_list,
         )
 
-        df = spark.read.parquet(args.input)
-        groups = args.group_by.split(",") if args.group_by else None
-        if args.method == "zscore":
-            if not args.order_by:
-                print(
-                    json.dumps(
-                        {"status": "error",
-                         "message": "--method zscore requires --order-by"}
-                    )
-                )
-                return 2
-            flagged = rolling_zscore(
-                df, args.order_by, args.col, groups,
-                window=args.window, k=args.k,
-            )
-        elif args.method == "mad":
-            flagged = mad_outliers(df, args.col, groups, k=args.k)
+        rules = load_suffix_list(args.suffix_list, spark)
+    out, stage_report = prepare_corpus(
+        df,
+        id_col=args.id_col,
+        text_col=args.text_col,
+        normalize=args.normalize,
+        filter_preset=args.preset if args.gate else None,
+        line_dedup_min_count=args.line_min,
+        span_dedup_k=args.span_k,
+        benchmark=bench_df,
+        decontam_n=args.ngram,
+        dedup_method=args.method if args.method != "none" else None,
+        dedup_threshold=args.threshold,
+        url_col=args.url_col,
+        max_docs_per_host=args.max_docs_per_host,
+        url_columns=args.suffix_list is not None,
+        suffix_rules=rules,
+        html_col=args.html_col,
+        pdf_col=args.pdf_col,
+        office_col=args.office_col,
+    )
+    rows_in = df.count()
+    rows_out = _save(out, args.output, reread=True).count()
+    return {
+        "status": "success", "action": "prepare",
+        "rows_in": rows_in, "rows_out": rows_out,
+        "stages": stage_report, "output": args.output,
+    }
+
+
+def _corpus_takedown(spark, df, args):
+    from harness_aws_etl_pipeline_spark.operators.takedown import (
+        TakedownRules,
+        apply_takedown,
+        apply_takedown_ids,
+        takedown_report,
+    )
+
+    def _literal_ids(raw: str) -> tuple:
+        # string doc_ids are first-class: only an all-digit
+        # token compares as int (back-compat with long id
+        # columns), everything else stays a string
+        toks = [t.strip() for t in raw.split(",") if t.strip()]
+        return tuple(int(t) if t.isdigit() else t for t in toks)
+
+    block_ids: tuple = ()
+    out, report = df, {}
+    if args.block_ids_path:
+        # explicit parquet blocklist → bulk anti-join path;
+        # regex/hash rules (if any) run as a second pass
+        blocked = spark.read.parquet(args.block_ids_path)
+        pre = out.count()
+        out = apply_takedown_ids(out, blocked, id_col=args.id_col)
+        report = {"matched_ids_bulk": pre - out.count()}
+    if args.block_ids and not args.block_ids.replace(",", "").replace(
+        "-", ""
+    ).strip().isdigit():
+        # legacy heuristic: non-digit --block-ids used to mean
+        # "parquet path". Try that read, but fall back to the
+        # literal-string-id path so corpora with string doc_ids
+        # (e.g. 'abc123,def') are not misrouted to a
+        # confusing path error.
+        try:
+            blocked = spark.read.parquet(args.block_ids)
+        except Exception:
+            block_ids = _literal_ids(args.block_ids)
         else:
-            flagged = iqr_outliers(df, args.col, groups, k_halves=args.k)
-        agg = flagged.agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.col("is_outlier").cast("long")).alias("flagged"),
-        ).first()
-        if args.output:
-            flagged.filter(F.col("is_outlier")).write.mode(
-                "overwrite"
-            ).parquet(args.output)
-        print(json.dumps({
-            "status": "success", "action": "outliers",
-            "method": args.method, "col": args.col,
-            "rows": agg["rows"], "flagged": agg["flagged"],
-            "output": args.output,
-        }))
-        return 0
+            # per-pass count: snapshot BEFORE this apply so a
+            # preceding --block-ids-path pass isn't re-counted
+            pre = out.count()
+            out = apply_takedown_ids(out, blocked, id_col=args.id_col)
+            report["matched_ids_bulk"] = report.get(
+                "matched_ids_bulk", 0
+            ) + (pre - out.count())
+    elif args.block_ids:
+        block_ids = _literal_ids(args.block_ids)
+    if block_ids or args.block_url_pattern or args.block_hash:
+        rules = TakedownRules(
+            ids=block_ids,
+            url_patterns=tuple(args.block_url_pattern),
+            content_hashes=tuple(args.block_hash),
+        )
+        report.update(
+            takedown_report(
+                out, rules, id_col=args.id_col,
+                url_col=args.url_col, text_col=args.text_col,
+            ).collect()[0].asDict()
+        )
+        out = apply_takedown(
+            out, rules, id_col=args.id_col,
+            url_col=args.url_col, text_col=args.text_col,
+        )
+    elif not report:
+        return {"status": "failed", "error": "no takedown rules given"}, 1
+    _save(out, args.output)
+    return {
+        "status": "success", "action": "takedown",
+        "audit": report, "output": args.output,
+    }
 
-    if args.cmd == "triangles":
-        from pyspark.sql import functions as F
 
-        from harness_aws_etl_pipeline_spark.operators.linkgraph import (
-            clustering_coefficient,
+def _warc(args):
+    from pyspark.sql import functions as F
+
+    from harness_aws_etl_pipeline_spark.sources.warc import read_warc
+
+    df = read_warc(
+        _spark(), args.input,
+        record_types=() if args.all_records else ("response",),
+        glob=args.glob,
+    )
+    if args.extract_text:
+        from harness_aws_etl_pipeline_spark.operators.html import (
+            html_to_text,
+        )
+        from harness_aws_etl_pipeline_spark.operators.textclean import (
+            decode_text,
         )
 
-        edges = spark.read.parquet(args.input)
-        nodes = clustering_coefficient(edges, args.src, args.dst)
-        nodes = nodes.localCheckpoint(eager=True)
-        summary = nodes.agg(
-            F.count(F.lit(1)).alias("nodes"),
-            (F.sum("tri_cnt") / 3).cast("long").alias("triangles"),
-            F.avg("lcc").alias("avg_lcc"),
-        ).first()
+        # charset-aware decode (BOM/header/meta-sniff chain), then
+        # markup -> text for text/* payloads only
+        df = decode_text(df, out_col="_decoded")
+        df = df.withColumn(
+            "text",
+            F.when(
+                F.col("content_type").startswith("text/"),
+                html_to_text(F.col("_decoded")),
+            ),
+        ).drop("_decoded")
+    got = _save(df, args.output, reread=True)
+    by_type = _counts(got, "record_type")
+    return {
+        "status": "success", "action": "warc",
+        "rows": sum(by_type.values()), "record_types": by_type,
+        "output": args.output,
+    }
+
+
+def _probe(args):
+    from harness_aws_etl_pipeline_spark.operators.containers import (
+        probe_media_containers,
+    )
+
+    meta = probe_media_containers(
+        _spark().read.parquet(args.input),
+        payload_col=args.payload_col,
+        id_col=args.id_col,
+    )
+    meta = _save(meta, args.output, reread=True)
+    by_kind = _counts(meta, "container")
+    return {
+        "status": "success", "action": "probe",
+        "rows": sum(by_kind.values()), "containers": by_kind,
+        "output": args.output,
+    }
+
+
+def _rank(args):
+    from harness_aws_etl_pipeline_spark.operators.linkgraph import (
+        hits,
+        host_graph,
+        pagerank,
+    )
+
+    df = _spark().read.parquet(args.input)
+    if args.from_links:
+        edges = host_graph(df, url_col=args.url_col, links_col=args.links_col)
+        wcol = "weight"
+    else:
+        edges = df.withColumnsRenamed(
+            {args.src_col: "src", args.dst_col: "dst"}
+        )
+        wcol = args.weight_col
+    if args.algo == "hits":
+        if args.seed:
+            raise SystemExit("--seed is pagerank-only (personalized PR)")
+        ranks = hits(edges, weight=wcol, iterations=args.iterations)
+    else:
+        ranks = pagerank(
+            edges, weight=wcol,
+            iterations=args.iterations, damping_pct=args.damping_pct,
+            seeds=args.seed,
+        )
+    top = _top_nodes(ranks, args.algo, args.top)
+    _save(ranks, args.output)
+    return {
+        "status": "success", "action": "rank", "algo": args.algo,
+        "nodes": ranks.count(), "top": top, "output": args.output,
+    }
+
+
+# per rank algorithm: the ordering column and the reported columns
+_TOP_NODES = {
+    "pagerank": ("rank_scaled", ("node", "rank")),
+    "hits": ("auth_scaled", ("node", "hub", "auth")),
+}
+
+
+def _top_nodes(ranks, algo: str, n: int) -> list[dict]:
+    from pyspark.sql import functions as F
+
+    by, cols = _TOP_NODES[algo]
+    return [
+        {c: r[c] for c in cols}
+        for r in ranks.orderBy(F.desc(by), "node").limit(n).collect()
+    ]
+
+
+def _topk(args):
+    from harness_aws_etl_pipeline_spark.operators.sketches import (
+        heavy_hitters,
+        heavy_hitters_by,
+    )
+
+    df = _spark().read.parquet(args.input)
+    kw = {"k": args.k, "capacity": args.capacity, "weight": args.weight_col}
+    if args.by:
+        hits_df = heavy_hitters_by(df, args.by, args.col, **kw)
+    else:
+        hits_df = heavy_hitters(df, args.col, **kw)
+    return {
+        "status": "success", "action": "topk", "col": args.col,
+        "by": args.by,
+        "top": [
+            {
+                **({"group": r["grp"]} if args.by else {}),
+                "rank": r["rank"], "key": r["key"],
+                "count_min": r["count_min"], "count_max": r["count_max"],
+                "guaranteed": r["guaranteed"],
+            }
+            for r in hits_df.collect()
+        ],
+    }
+
+
+def _overlap(args):
+    from harness_aws_etl_pipeline_spark.operators.kmv import (
+        kmv_distinct_estimate,
+        kmv_jaccard,
+        kmv_sketch,
+    )
+
+    spark = _spark()
+    sk_a = kmv_sketch(spark.read.parquet(args.a), args.col, k=args.k)
+    sk_b = kmv_sketch(
+        spark.read.parquet(args.b), args.col_b or args.col, k=args.k
+    )
+    jac = kmv_jaccard(sk_a, sk_b, k=args.k).first()
+    est_a = kmv_distinct_estimate(sk_a, k=args.k).first()
+    est_b = kmv_distinct_estimate(sk_b, k=args.k).first()
+    return {
+        "status": "success", "action": "overlap", "k": args.k,
+        "jaccard_est": jac["jaccard_est"],
+        "union_basis": jac["union_basis"],
+        "inter_cnt": jac["inter_cnt"],
+        "distinct_a": {"est": est_a["distinct_est"], "exact": est_a["exact"]},
+        "distinct_b": {"est": est_b["distinct_est"], "exact": est_b["exact"]},
+    }
+
+
+def _layout(args):
+    from harness_aws_etl_pipeline_spark.operators.zorder import (
+        layout_stats,
+        zorder_by,
+    )
+
+    cols = [c.strip() for c in args.by.split(",") if c.strip()]
+    z = zorder_by(
+        _spark().read.parquet(args.input), cols,
+        bits=args.bits, partitions=args.partitions,
+    ).persist()  # write + stats read the shuffled layout once
+    _save(z, args.output)
+    # stats on the WRITE-side partitions (1 file each) — a re-read
+    # would pack small files together and inflate the boxes
+    srows = layout_stats(z, cols).collect()
+    z.unpersist()
+    spans = {
+        c: round(
+            sum(r[f"{c}_max"] - r[f"{c}_min"] for r in srows)
+            / max(len(srows), 1), 2,
+        )
+        for c in cols
+    }
+    return {
+        "status": "success", "action": "layout", "by": cols,
+        "rows": sum(r["rows"] for r in srows),
+        "avg_partition_span": spans, "output": args.output,
+    }
+
+
+def _ann(args):
+    from harness_aws_etl_pipeline_spark.operators.dedup_api import (
+        similarity_search,
+    )
+
+    spark = _spark()
+    cands = spark.read.parquet(args.input)
+    queries = spark.read.parquet(args.queries)
+    kw = (
+        {"rerank": True}
+        if (args.rerank and args.method in ("pq", "ivfpq"))
+        else {}
+    )
+    if args.method == "ivfpq":
+        kw["nprobe"] = args.nprobe
+    if args.model and args.method in ("ivf", "pq"):
+        from harness_aws_etl_pipeline_spark.sinks.fs import get_fs
+
+        if args.method == "ivf":
+            from harness_aws_etl_pipeline_spark.operators.similarity import (
+                ivf_centroids as train,
+                load_ivf as load,
+                save_ivf as save,
+            )
+
+            key = "centroids"
+        else:
+            from harness_aws_etl_pipeline_spark.operators.pq import (
+                load_pq as load,
+                save_pq as save,
+                train_pq as train,
+            )
+
+            key = "model"
+        if get_fs(args.model, spark).exists(args.model):
+            kw[key] = load(args.model, spark)
+        else:
+            kw[key] = train(cands, id_col=args.id_col, vec_col=args.vec_col)
+            save(kw[key], args.model, spark)
+    out = similarity_search(
+        cands, queries, method=args.method, k=args.k,
+        id_col=args.id_col, vec_col=args.vec_col, **kw,
+    )
+    n = out.count()
+    _save(out, args.output)
+    return {
+        "status": "success", "method": args.method, "k": args.k,
+        "result_rows": n, "output": args.output,
+    }
+
+
+def _annindex(args):
+    from harness_aws_etl_pipeline_spark.operators.incremental import (
+        IncrementalAnnIndex,
+    )
+
+    spark = _spark()
+    ann = IncrementalAnnIndex(
+        spark, args.state, id_col=args.id_col, vec_col=args.vec_col
+    )
+    steps = []
+    if args.build:
+        txn = _txn(args, "--build", "-build")
+        steps.append(("build", ann.build(
+            spark.read.parquet(args.build),
+            nlist=args.nlist, m=args.m, k=args.k_codes,
+            txn=txn,
+        )))
+    if args.add_batch:
+        txn = _txn(args, "--add-batch")
+        steps.append(("add_batch", ann.add_batch(
+            spark.read.parquet(args.add_batch),
+            txn=txn,
+        )))
+    if args.recalibrate:
+        if not args.corpus:
+            raise UsageError("--recalibrate requires --corpus (raw vectors)")
+        cal = ann.recalibrate(
+            spark.read.parquet(args.recalibrate),
+            spark.read.parquet(args.corpus),
+            target_recall=args.target_recall,
+            topk=args.topk,
+        )
+        steps.append(("recalibrate", {
+            "nprobe": cal["nprobe"],
+            "scan_fraction": round(cal["scan_fraction"], 4),
+            "queries": cal["queries"],
+        }))
+    rows = None
+    if args.queries:
+        res = ann.search(
+            spark.read.parquet(args.queries),
+            topk=args.topk,
+            rerank_with=(
+                spark.read.parquet(args.rerank_with)
+                if args.rerank_with else None
+            ),
+        )
+        rows = _rows(_save(res, args.output), args.show)
+    return {
+        "status": "success", "action": "annindex",
+        "steps": [{"step": n, **r} for n, r in steps],
+        "stats": ann.stats()
+        if ann.table.current_version() is not None else None,
+        "search_preview": rows, "output": args.output,
+    }
+
+
+def _bloomjoin(args):
+    from harness_aws_etl_pipeline_spark.operators.bloomjoin import (
+        bloom_build,
+        bloom_join,
+        bloom_prune,
+    )
+
+    spark = _spark()
+    big = spark.read.parquet(args.big)
+    small = spark.read.parquet(args.small)
+    on = (args.on, args.small_on) if args.small_on else args.on
+    sizing = {"num_hashes": args.num_hashes, "num_bits": args.num_bits}
+    bloom = bloom_build(small, args.small_on or args.on, **sizing)
+    kept = bloom_prune(big, args.on, bloom).count()
+    out = bloom_join(big, small, on, how=args.how, **sizing)
+    joined = _save(out, args.output, reread=True).count()
+    big_rows = big.count()
+    return {
+        "status": "success", "action": "bloomjoin", "how": args.how,
+        "big_rows": big_rows, "kept_after_prune": kept,
+        "shuffle_reduction": round(1 - kept / max(big_rows, 1), 4),
+        "join_rows": joined, "num_bits": bloom.num_bits,
+        "output": args.output,
+    }
+
+
+def _profile(args):
+    from pyspark.sql import functions as SF
+
+    from harness_aws_etl_pipeline_spark.operators.histogram import (
+        corr_exact,
+        histogram,
+    )
+
+    df = _spark().read.parquet(args.input)
+    stats = df.agg(
+        SF.count(SF.col(args.col)).alias("n"),
+        SF.min(args.col).alias("min"),
+        SF.max(args.col).alias("max"),
+        SF.avg(args.col).alias("mean"),
+        SF.expr(f"percentile(`{args.col}`, 0.5)").alias("p50"),
+    ).first()
+    hist = [
+        {"bin": r["bin"], "lo": r["lo"], "hi": r["hi"], "cnt": r["cnt"]}
+        for r in histogram(df, args.col, bins=args.bins).collect()
+    ]
+    out = {
+        "status": "success", "action": "profile", "col": args.col,
+        "n": stats["n"], "min": stats["min"], "max": stats["max"],
+        "mean": stats["mean"], "p50": stats["p50"], "histogram": hist,
+    }
+    if args.corr_with:
+        c = corr_exact(df, args.col, args.corr_with).first()
+        out["corr"] = {"with": args.corr_with, "n": c["n"], "r": c["corr"]}
+    return out
+
+
+def _drift(args):
+    from harness_aws_etl_pipeline_spark.operators.drift import (
+        chi2_drift,
+        ks_statistic,
+        psi,
+        psi_report,
+        tvd_drift,
+    )
+
+    spark = _spark()
+    ref = spark.read.parquet(args.reference)
+    cur = spark.read.parquet(args.current)
+    out = {"status": "success", "action": "drift", "col": args.col,
+           "kind": args.kind}
+    if args.kind == "numeric":
+        k = ks_statistic(ref, cur, args.col).first()
+        p = psi(ref, cur, args.col, bins=args.bins).first()
+        rep = psi_report(ref, cur, args.col, bins=args.bins).collect()
+        out.update(
+            n_ref=k["n_ref"], n_cur=k["n_cur"],
+            ks=k["ks"], ks_num=str(k["ks_num"]),
+            psi=p["psi"],
+            bins=[
+                {"bin": r["bin"], "lo": r["lo"], "hi": r["hi"],
+                 "ref_cnt": r["ref_cnt"], "cur_cnt": r["cur_cnt"]}
+                for r in rep
+            ],
+        )
+    else:
+        t = tvd_drift(ref, cur, args.col).first()
+        c = chi2_drift(ref, cur, args.col).first()
+        out.update(
+            n_ref=t["n_ref"], n_cur=t["n_cur"],
+            tvd=t["tvd"], tvd_num=str(t["tvd_num"]),
+            chi2=c["chi2"], dof=c["dof"], categories=c["categories"],
+        )
+    return out
+
+
+def _diff(args):
+    from harness_aws_etl_pipeline_spark.operators.diffing import (
+        diff_summary,
+        table_diff,
+    )
+
+    spark = _spark()
+    ref = spark.read.parquet(args.reference)
+    cur = spark.read.parquet(args.current)
+    keys = [k.strip() for k in args.keys.split(",") if k.strip()]
+    cmp_cols = (
+        [c.strip() for c in args.compare_cols.split(",") if c.strip()]
+        if args.compare_cols
+        else None
+    )
+    kw = {"compare_cols": cmp_cols, "float_tolerance": args.float_tolerance}
+    s = diff_summary(ref, cur, keys, **kw).first()
+    if args.output:
+        _save(table_diff(ref, cur, keys, **kw), args.output)
+    return {
+        "status": "success", "action": "diff", "keys": keys,
+        **s.asDict(), "output": args.output,
+    }
+
+
+def _outliers(args):
+    from pyspark.sql import functions as F
+
+    from harness_aws_etl_pipeline_spark.operators.outliers import (
+        iqr_outliers,
+        mad_outliers,
+        rolling_zscore,
+    )
+
+    df = _spark().read.parquet(args.input)
+    groups = _split(args.group_by)
+    if args.method == "zscore":
+        if not args.order_by:
+            return {"status": "error",
+                    "message": "--method zscore requires --order-by"}, 2
+        flagged = rolling_zscore(
+            df, args.order_by, args.col, groups,
+            window=args.window, k=args.k,
+        )
+    elif args.method == "mad":
+        flagged = mad_outliers(df, args.col, groups, k=args.k)
+    else:
+        flagged = iqr_outliers(df, args.col, groups, k_halves=args.k)
+    agg = flagged.agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.sum(F.col("is_outlier").cast("long")).alias("flagged"),
+    ).first()
+    _save(flagged.filter(F.col("is_outlier")), args.output)
+    return {
+        "status": "success", "action": "outliers",
+        "method": args.method, "col": args.col,
+        "rows": agg["rows"], "flagged": agg["flagged"],
+        "output": args.output,
+    }
+
+
+def _triangles(args):
+    from pyspark.sql import functions as F
+
+    from harness_aws_etl_pipeline_spark.operators.linkgraph import (
+        clustering_coefficient,
+    )
+
+    edges = _spark().read.parquet(args.input)
+    nodes = clustering_coefficient(edges, args.src, args.dst)
+    nodes = nodes.localCheckpoint(eager=True)
+    summary = nodes.agg(
+        F.count(F.lit(1)).alias("nodes"),
+        (F.sum("tri_cnt") / 3).cast("long").alias("triangles"),
+        F.avg("lcc").alias("avg_lcc"),
+    ).first()
+    top = [
+        {"node": str(r["node"]), "deg": r["deg"],
+         "tri_cnt": r["tri_cnt"], "lcc": r["lcc"]}
+        for r in nodes.orderBy(
+            F.desc("tri_cnt"), F.col("node")
+        ).limit(args.top).collect()
+    ]
+    _save(nodes, args.output)
+    return {
+        "status": "success", "action": "triangles",
+        "nodes": summary["nodes"], "triangles": summary["triangles"],
+        "avg_lcc": summary["avg_lcc"], "top": top,
+        "output": args.output,
+    }
+
+
+def _transitions(args):
+    from pyspark.sql import functions as F
+
+    from harness_aws_etl_pipeline_spark.operators.eventseq import (
+        event_ngrams,
+        transition_counts,
+    )
+
+    df = _spark().read.parquet(args.input)
+    ties = _split(args.tie)
+    if args.n == 2:
+        out = transition_counts(
+            df, args.key, args.order_by, args.state, tie_cols=ties
+        )
+        label = F.concat_ws(">", "prev_state", "state")
+        ordered = out.orderBy(F.desc("cnt"), label)
         top = [
-            {"node": str(r["node"]), "deg": r["deg"],
-             "tri_cnt": r["tri_cnt"], "lcc": r["lcc"]}
-            for r in nodes.orderBy(
-                F.desc("tri_cnt"), F.col("node")
+            {"gram": r[0], "cnt": r["cnt"], "p": r["p"]}
+            for r in ordered.select(
+                label.alias("g"), "cnt", "p"
             ).limit(args.top).collect()
         ]
-        if args.output:
-            nodes.write.mode("overwrite").parquet(args.output)
-        print(json.dumps({
-            "status": "success", "action": "triangles",
-            "nodes": summary["nodes"], "triangles": summary["triangles"],
-            "avg_lcc": summary["avg_lcc"], "top": top,
-            "output": args.output,
-        }))
-        return 0
-
-    if args.cmd == "transitions":
-        from pyspark.sql import functions as F
-
-        from harness_aws_etl_pipeline_spark.operators.eventseq import (
-            event_ngrams,
-            transition_counts,
+    else:
+        out = event_ngrams(
+            df, args.key, args.order_by, args.state,
+            n=args.n, tie_cols=ties,
         )
+        top = [
+            {"gram": r["gram"], "cnt": r["cnt"]}
+            for r in out.orderBy(
+                F.desc("cnt"), "gram"
+            ).limit(args.top).collect()
+        ]
+    _save(out, args.output)
+    total = out.agg(F.count(F.lit(1))).first()[0]
+    return {
+        "status": "success", "action": "transitions", "n": args.n,
+        "distinct": total, "top": top, "output": args.output,
+    }
 
-        df = spark.read.parquet(args.input)
-        ties = args.tie.split(",") if args.tie else None
-        if args.n == 2:
-            out = transition_counts(
-                df, args.key, args.order_by, args.state, tie_cols=ties
-            )
-            label = F.concat_ws(">", "prev_state", "state")
-            ordered = out.orderBy(F.desc("cnt"), label)
-            top = [
-                {"gram": r[0], "cnt": r["cnt"], "p": r["p"]}
-                for r in ordered.select(
-                    label.alias("g"), "cnt", "p"
-                ).limit(args.top).collect()
-            ]
-        else:
-            out = event_ngrams(
-                df, args.key, args.order_by, args.state,
-                n=args.n, tie_cols=ties,
-            )
-            top = [
-                {"gram": r["gram"], "cnt": r["cnt"]}
-                for r in out.orderBy(
-                    F.desc("cnt"), "gram"
-                ).limit(args.top).collect()
-            ]
-        if args.output:
-            out.write.mode("overwrite").parquet(args.output)
-        total = out.agg(F.count(F.lit(1))).first()[0]
-        print(json.dumps({
-            "status": "success", "action": "transitions", "n": args.n,
-            "distinct": total, "top": top, "output": args.output,
-        }))
-        return 0
 
-    if args.cmd == "sample":
-        from harness_aws_etl_pipeline_spark.operators.sampling import (
-            sample_exact_n,
-            sample_fraction,
-            sample_weighted_n,
+def _sample(args):
+    from harness_aws_etl_pipeline_spark.operators.sampling import (
+        sample_exact_n,
+        sample_fraction,
+        sample_weighted_n,
+    )
+
+    df = _spark().read.parquet(args.input)
+    if args.method == "fraction":
+        out = sample_fraction(df, args.key, args.fraction, salt=args.salt)
+    elif args.method == "exact":
+        out = sample_exact_n(df, args.n, args.key, salt=args.salt)
+    else:
+        if not args.weight_col:
+            return {
+                "status": "error",
+                "message": "--method weighted requires --weight-col",
+            }, 2
+        out = sample_weighted_n(
+            df, args.n, args.weight_col, args.key,
+            salt=args.salt, group_cols=_split(args.group_by),
         )
+    kept = _save(out, args.output, reread=True).count()
+    return {
+        "status": "success", "action": "sample",
+        "method": args.method, "rows": kept, "output": args.output,
+    }
 
-        df = spark.read.parquet(args.input)
-        if args.method == "fraction":
-            out = sample_fraction(df, args.key, args.fraction, salt=args.salt)
-        elif args.method == "exact":
-            out = sample_exact_n(df, args.n, args.key, salt=args.salt)
-        else:
-            if not args.weight_col:
-                print(json.dumps({
-                    "status": "error",
-                    "message": "--method weighted requires --weight-col",
-                }))
-                return 2
-            groups = args.group_by.split(",") if args.group_by else None
-            out = sample_weighted_n(
-                df, args.n, args.weight_col, args.key,
-                salt=args.salt, group_cols=groups,
-            )
-        out.write.mode("overwrite").parquet(args.output)
-        kept = spark.read.parquet(args.output).count()
-        print(json.dumps({
-            "status": "success", "action": "sample",
-            "method": args.method, "rows": kept, "output": args.output,
-        }))
-        return 0
 
-    if args.cmd == "bfs":
-        from pyspark.sql import functions as F
+def _bfs(args):
+    from harness_aws_etl_pipeline_spark.operators.linkgraph import (
+        bfs_distances,
+    )
 
-        from harness_aws_etl_pipeline_spark.operators.linkgraph import (
-            bfs_distances,
+    spark = _spark()
+    edges = spark.read.parquet(args.input)
+    seed_type = dict(edges.dtypes)[args.src]
+    seeds = spark.createDataFrame(
+        [(s.strip(),) for s in args.seeds.split(",")], "node string"
+    ).selectExpr(f"CAST(node AS {seed_type}) AS node")
+    dist = bfs_distances(
+        edges, seeds, src=args.src, dst=args.dst,
+        max_hops=args.max_hops, directed=not args.undirected,
+    )
+    dist = dist.localCheckpoint(eager=True)
+    per_hop = _counts(dist, "hop")
+    _save(dist, args.output)
+    return {
+        "status": "success", "action": "bfs",
+        "reached": sum(per_hop.values()),
+        "per_hop": {str(k): per_hop[k] for k in sorted(per_hop)},
+        "output": args.output,
+    }
+
+
+def _smooth(args):
+    from harness_aws_etl_pipeline_spark.operators.timeseries import (
+        ewma,
+        holt_linear,
+    )
+
+    df = _spark().read.parquet(args.input)
+    groups = _split(args.group_by)
+    if args.method == "ewma":
+        out = ewma(
+            df, args.order_by, args.value, groups, alpha=args.alpha
         )
-
-        edges = spark.read.parquet(args.input)
-        seed_type = dict(edges.dtypes)[args.src]
-        seeds = spark.createDataFrame(
-            [(s.strip(),) for s in args.seeds.split(",")], "node string"
-        ).selectExpr(f"CAST(node AS {seed_type}) AS node")
-        dist = bfs_distances(
-            edges, seeds, src=args.src, dst=args.dst,
-            max_hops=args.max_hops, directed=not args.undirected,
+    else:
+        out = holt_linear(
+            df, args.order_by, args.value, groups,
+            alpha=args.alpha, beta=args.beta,
         )
-        dist = dist.localCheckpoint(eager=True)
-        per_hop = {
-            r["hop"]: r["n"]
-            for r in dist.groupBy("hop").agg(
-                F.count(F.lit(1)).alias("n")
-            ).collect()
+    rows = _save(out, args.output, reread=True).count()
+    return {
+        "status": "success", "action": "smooth",
+        "method": args.method, "rows": rows, "output": args.output,
+    }
+
+
+def _sessionize(args):
+    from pyspark.sql import functions as F
+
+    from harness_aws_etl_pipeline_spark.operators.eventseq import (
+        sessionize,
+    )
+
+    df = _spark().read.parquet(args.input)
+    out = sessionize(df, args.key, args.ts, args.gap, tie_cols=_split(args.tie))
+    back = _save(out, args.output, reread=True)
+    stats = back.groupBy(args.key).agg(
+        F.max("session_id").alias("n")
+    ).agg(
+        F.count(F.lit(1)).alias("actors"),
+        F.sum("n").alias("sessions"),
+        F.max("n").alias("max_sessions_per_actor"),
+    ).first()
+    return {
+        "status": "success", "action": "sessionize",
+        "rows": back.count(), "actors": stats["actors"],
+        "sessions": stats["sessions"],
+        "max_sessions_per_actor": stats["max_sessions_per_actor"],
+        "output": args.output,
+    }
+
+
+def _features(args):
+    from harness_aws_etl_pipeline_spark.operators.features import (
+        hash_features,
+        minmax_scale,
+        one_hot,
+        standard_scale,
+    )
+    from harness_aws_etl_pipeline_spark.operators.quantiles import (
+        quantile_bucket,
+    )
+
+    df = _spark().read.parquet(args.input)
+    cols = args.cols.split(",")
+    groups = _split(args.group_by)
+    if args.op == "onehot":
+        out = df
+        for c in cols:
+            out = one_hot(out, c)
+    elif args.op == "hash":
+        out = hash_features(df, cols, dims=args.dims)
+    elif args.op == "scale":
+        out = standard_scale(df, cols, groups)
+    elif args.op == "minmax":
+        out = minmax_scale(df, cols, groups)
+    else:
+        out = df
+        for c in cols:
+            out = quantile_bucket(out, c, buckets=args.buckets)
+    back = _save(out, args.output, reread=True)
+    return {
+        "status": "success", "action": "features", "op": args.op,
+        "rows": back.count(),
+        "added_cols": sorted(set(back.columns) - set(df.columns)),
+        "output": args.output,
+    }
+
+
+def _explain(args):
+    from harness_aws_etl_pipeline_spark.plans.catalog import CATALOG
+
+    if args.query not in CATALOG:
+        return {
+            "status": "failed",
+            "error": f"unknown query {args.query!r}; see COVERAGE.md",
+            "available": sorted(CATALOG),
+        }, 1
+    CATALOG[args.query].builder(_spark(), args.sf_dir).explain(args.mode)
+
+
+def _evolve(args):
+    from harness_aws_etl_pipeline_spark.sinks.fs import get_fs, join_path
+    from harness_aws_etl_pipeline_spark.sources.evolve import (
+        read_parquet_evolved,
+        scan_parquet_schemas,
+    )
+
+    spark = _spark()
+    fs = get_fs(args.input, spark)
+    files = [
+        join_path(args.input, rel)
+        for rel, _m, size in fs.list_files(args.input)
+        if rel.endswith(".parquet") and size > 0
+    ]
+    if not files:
+        return {"status": "failed",
+                "error": f"no parquet files under {args.input}"}, 1
+    distinct = {
+        sch.simpleString() for _p, sch in scan_parquet_schemas(spark, files)
+    }
+    try:
+        df = read_parquet_evolved(spark, files)
+    except ValueError as exc:
+        return {"status": "failed", "error": str(exc),
+                "files": len(files), "schema_versions": len(distinct)}, 1
+    rows = df.count()
+    _save(df, args.output)
+    return {
+        "status": "success", "action": "evolve",
+        "files": len(files), "schema_versions": len(distinct),
+        "rows": rows,
+        "evolved_schema": {c: t for c, t in df.dtypes},
+        "output": args.output,
+    }
+
+
+def _tpch(args):
+    import time
+
+    from harness_aws_etl_pipeline_spark.plans import catalog_tpch as _T
+
+    spark = _spark()
+    builders = {
+        tag.replace("tq", "q"): fn for tag, fn, _sql, _cols in _T._PACK
+    }
+    names = (
+        [args.query] if args.query else sorted(builders, key=lambda n: int(n[1:]))
+    )
+    report = {}
+    for name in names:
+        if name not in builders:
+            return {
+                "status": "failed",
+                "error": f"unknown query {name!r}; choose from "
+                f"{sorted(builders)}",
+            }, 1
+        start = time.perf_counter()
+        rows = builders[name](spark, args.sf_dir).collect()
+        report[name] = {
+            "rows": len(rows),
+            "sec": round(time.perf_counter() - start, 3),
         }
-        if args.output:
-            dist.write.mode("overwrite").parquet(args.output)
-        print(json.dumps({
-            "status": "success", "action": "bfs",
-            "reached": sum(per_hop.values()),
-            "per_hop": {str(k): per_hop[k] for k in sorted(per_hop)},
-            "output": args.output,
-        }))
-        return 0
-
-    if args.cmd == "smooth":
-        from harness_aws_etl_pipeline_spark.operators.timeseries import (
-            ewma,
-            holt_linear,
-        )
-
-        df = spark.read.parquet(args.input)
-        groups = args.group_by.split(",") if args.group_by else None
-        if args.method == "ewma":
-            out = ewma(
-                df, args.order_by, args.value, groups, alpha=args.alpha
-            )
-        else:
-            out = holt_linear(
-                df, args.order_by, args.value, groups,
-                alpha=args.alpha, beta=args.beta,
-            )
-        out.write.mode("overwrite").parquet(args.output)
-        rows = spark.read.parquet(args.output).count()
-        print(json.dumps({
-            "status": "success", "action": "smooth",
-            "method": args.method, "rows": rows, "output": args.output,
-        }))
-        return 0
-
-    if args.cmd == "sessionize":
-        from pyspark.sql import functions as F
-
-        from harness_aws_etl_pipeline_spark.operators.eventseq import (
-            sessionize,
-        )
-
-        df = spark.read.parquet(args.input)
-        ties = args.tie.split(",") if args.tie else None
-        out = sessionize(df, args.key, args.ts, args.gap, tie_cols=ties)
-        out.write.mode("overwrite").parquet(args.output)
-        back = spark.read.parquet(args.output)
-        stats = back.groupBy(args.key).agg(
-            F.max("session_id").alias("n")
-        ).agg(
-            F.count(F.lit(1)).alias("actors"),
-            F.sum("n").alias("sessions"),
-            F.max("n").alias("max_sessions_per_actor"),
-        ).first()
-        print(json.dumps({
-            "status": "success", "action": "sessionize",
-            "rows": back.count(), "actors": stats["actors"],
-            "sessions": stats["sessions"],
-            "max_sessions_per_actor": stats["max_sessions_per_actor"],
-            "output": args.output,
-        }))
-        return 0
-
-    if args.cmd == "features":
-        from harness_aws_etl_pipeline_spark.operators.features import (
-            hash_features,
-            minmax_scale,
-            one_hot,
-            standard_scale,
-        )
-        from harness_aws_etl_pipeline_spark.operators.quantiles import (
-            quantile_bucket,
-        )
-
-        df = spark.read.parquet(args.input)
-        cols = args.cols.split(",")
-        groups = args.group_by.split(",") if args.group_by else None
-        if args.op == "onehot":
-            out = df
-            for c in cols:
-                out = one_hot(out, c)
-        elif args.op == "hash":
-            out = hash_features(df, cols, dims=args.dims)
-        elif args.op == "scale":
-            out = standard_scale(df, cols, groups)
-        elif args.op == "minmax":
-            out = minmax_scale(df, cols, groups)
-        else:
-            out = df
-            for c in cols:
-                out = quantile_bucket(out, c, buckets=args.buckets)
-        out.write.mode("overwrite").parquet(args.output)
-        back = spark.read.parquet(args.output)
-        print(json.dumps({
-            "status": "success", "action": "features", "op": args.op,
-            "rows": back.count(),
-            "added_cols": sorted(set(back.columns) - set(df.columns)),
-            "output": args.output,
-        }))
-        return 0
-
-    if args.cmd == "knnjoin":
-        from harness_aws_etl_pipeline_spark.operators.similarity import (
-            knn_join,
-        )
-
-        out_df = knn_join(
-            spark.read.parquet(args.left),
-            spark.read.parquet(args.right),
-            k=args.k,
-            n_centroids=args.n_centroids,
-            nprobe=args.nprobe,
-            id_col=args.id_col,
-            vec_col=args.vec_col,
-        )
-        if args.output:
-            out_df.write.mode("overwrite").parquet(args.output)
-        head = [r.asDict() for r in out_df.limit(args.show).collect()]
-        pairs = out_df.count()
-        print(json.dumps({
-            "status": "success", "action": "knnjoin", "pairs": pairs,
-            "k": args.k, "nprobe": args.nprobe, "head": head,
-            "output": args.output,
-        }))
-        return 0
-
-    if args.cmd == "lattice":
-        from pyspark.sql import functions as F
-
-        from harness_aws_etl_pipeline_spark.operators.grouping import (
-            cube_agg,
-            grouping_sets_agg,
-            rollup_agg,
-        )
-
-        df = spark.read.parquet(args.input)
-        keys = [k for k in args.keys.split(",") if k]
-        aggs = [F.count(F.lit(1)).alias("cnt")]
-        if args.sum_col:
-            aggs.append(
-                F.sum(
-                    F.round(F.col(args.sum_col).cast("double") * 10000)
-                    .cast("decimal(38,0)")
-                ).alias(f"{args.sum_col}_sum_scaled")
-            )
-        if args.mode == "rollup":
-            out_df = rollup_agg(df, keys, *aggs)
-        elif args.mode == "cube":
-            out_df = cube_agg(df, keys, *aggs)
-        else:
-            if not args.sets:
-                p.error("mode=sets requires --sets")
-            sets = [
-                [k for k in s.split(",") if k]
-                for s in args.sets.split(";")
+        if args.show:
+            report[name]["head"] = [
+                {k: str(v) for k, v in r.asDict().items()}
+                for r in rows[: args.show]
             ]
-            out_df = grouping_sets_agg(df, sets, *aggs)
-        rows = out_df.orderBy("_gid", *keys).limit(args.show).collect()
-        print(json.dumps({
-            "status": "success", "action": "lattice", "mode": args.mode,
-            "levels": out_df.count(),
-            "rows": [
-                {k: (str(v) if v is not None and not isinstance(
-                    v, (int, float, bool, str)) else v)
-                 for k, v in r.asDict().items()}
-                for r in rows
-            ],
-        }))
-        return 0
+    return {
+        "status": "success", "action": "tpch", "sf_dir": args.sf_dir,
+        "queries": report,
+    }
 
-    if args.cmd == "video":
-        from harness_aws_etl_pipeline_spark.operators.video import (
-            decode_avi_frames,
-            probe_avi,
+
+def _lattice(args):
+    from pyspark.sql import functions as F
+
+    from harness_aws_etl_pipeline_spark.operators.grouping import (
+        cube_agg,
+        grouping_sets_agg,
+        rollup_agg,
+    )
+
+    df = _spark().read.parquet(args.input)
+    keys = [k for k in args.keys.split(",") if k]
+    aggs = [F.count(F.lit(1)).alias("cnt")]
+    if args.sum_col:
+        aggs.append(
+            F.sum(
+                F.round(F.col(args.sum_col).cast("double") * 10000)
+                .cast("decimal(38,0)")
+            ).alias(f"{args.sum_col}_sum_scaled")
         )
+    if args.mode == "rollup":
+        out_df = rollup_agg(df, keys, *aggs)
+    elif args.mode == "cube":
+        out_df = cube_agg(df, keys, *aggs)
+    else:
+        if not args.sets:
+            raise UsageError("mode=sets requires --sets")
+        sets = [
+            [k for k in s.split(",") if k]
+            for s in args.sets.split(";")
+        ]
+        out_df = grouping_sets_agg(df, sets, *aggs)
+    rows = out_df.orderBy("_gid", *keys).limit(args.show).collect()
+    return {
+        "status": "success", "action": "lattice", "mode": args.mode,
+        "levels": out_df.count(),
+        "rows": [r.asDict() for r in rows],
+    }
 
-        with open(args.input, "rb") as fh:
-            payload = fh.read()
-        meta = probe_avi(payload)
-        frames = decode_avi_frames(
-            payload, every_n=args.sample_every, max_frames=args.max_frames
-        )
-        print(json.dumps({
-            "status": "success", "action": "video", "probe": meta,
-            "sampled_frames": [
-                {"frame_index": i * args.sample_every,
-                 "width": int(a.shape[1]), "height": int(a.shape[0]),
-                 "mean": round(float(a.mean()), 4)}
-                for i, a in enumerate(frames)
-            ],
-        }))
-        return 0
 
-    if args.cmd == "driftmon":
-        from harness_aws_etl_pipeline_spark.operators.incremental import (
-            IncrementalDrift,
-        )
+def _video(args):
+    # pure-Python decode of a local file: no Spark session
+    from harness_aws_etl_pipeline_spark.operators.video import (
+        decode_avi_frames,
+        probe_avi,
+    )
 
-        mon = IncrementalDrift(spark, args.state, args.col)
-        actions = []
-        if args.set_reference:
-            if args.batch_id is None:
-                p.error("--set-reference requires --batch-id")
-            # own ledger namespace: one invocation may pin the
-            # reference AND fold a batch under the same --batch-id
-            actions.append(("set_reference", mon.set_reference(
-                spark.read.parquet(args.set_reference),
-                txn=(f"{args.txn_id}-ref", args.batch_id),
-            )))
-        if args.batch:
-            if args.batch_id is None:
-                p.error("--batch requires --batch-id")
-            actions.append(("process_batch", mon.process_batch(
-                spark.read.parquet(args.batch),
-                txn=(args.txn_id, args.batch_id),
-            )))
-        rep = mon.report().first() if mon.state_summary() is not None else None
-        print(json.dumps({
-            "status": "success", "action": "driftmon",
-            "steps": [{"step": n, **r} for n, r in actions],
-            "report": None if rep is None else {
-                "n_ref": rep["n_ref"], "n_cur": rep["n_cur"],
-                "categories": rep["categories"],
-                "tvd_num": str(rep["tvd_num"]), "tvd": rep["tvd"],
-                "chi2": rep["chi2"],
-            },
-        }))
-        return 0
+    with open(args.input, "rb") as fh:
+        payload = fh.read()
+    meta = probe_avi(payload)
+    frames = decode_avi_frames(
+        payload, every_n=args.sample_every, max_frames=args.max_frames
+    )
+    return {
+        "status": "success", "action": "video", "probe": meta,
+        "sampled_frames": [
+            {"frame_index": i * args.sample_every,
+             "width": int(a.shape[1]), "height": int(a.shape[0]),
+             "mean": round(float(a.mean()), 4)}
+            for i, a in enumerate(frames)
+        ],
+    }
 
-    if args.cmd == "delta":
-        from harness_aws_etl_pipeline_spark.sources.deltaread import (
-            delta_history,
-            delta_snapshot,
-            delta_version_at,
-            read_delta,
-        )
 
-        if args.write:
-            from harness_aws_etl_pipeline_spark.sinks.deltawrite import (
-                write_delta,
+def _driftmon(args):
+    from harness_aws_etl_pipeline_spark.operators.incremental import (
+        IncrementalDrift,
+    )
+
+    spark = _spark()
+    mon = IncrementalDrift(spark, args.state, args.col)
+    actions = []
+    if args.set_reference:
+        # own ledger namespace: one invocation may pin the
+        # reference AND fold a batch under the same --batch-id
+        txn = _txn(args, "--set-reference", "-ref")
+        actions.append(("set_reference", mon.set_reference(
+            spark.read.parquet(args.set_reference),
+            txn=txn,
+        )))
+    if args.batch:
+        txn = _txn(args, "--batch")
+        actions.append(("process_batch", mon.process_batch(
+            spark.read.parquet(args.batch),
+            txn=txn,
+        )))
+    rep = mon.report().first() if mon.state_summary() is not None else None
+    return {
+        "status": "success", "action": "driftmon",
+        "steps": [{"step": n, **r} for n, r in actions],
+        "report": None if rep is None else {
+            "n_ref": rep["n_ref"], "n_cur": rep["n_cur"],
+            "categories": rep["categories"],
+            "tvd_num": str(rep["tvd_num"]), "tvd": rep["tvd"],
+            "chi2": rep["chi2"],
+        },
+    }
+
+
+def _knnjoin(args):
+    from harness_aws_etl_pipeline_spark.operators.similarity import (
+        knn_join,
+    )
+
+    spark = _spark()
+    out_df = knn_join(
+        spark.read.parquet(args.left),
+        spark.read.parquet(args.right),
+        k=args.k,
+        n_centroids=args.n_centroids,
+        nprobe=args.nprobe,
+        id_col=args.id_col,
+        vec_col=args.vec_col,
+    )
+    _save(out_df, args.output)
+    head = _rows(out_df, args.show)
+    return {
+        "status": "success", "action": "knnjoin", "pairs": out_df.count(),
+        "k": args.k, "nprobe": args.nprobe, "head": head,
+        "output": args.output,
+    }
+
+
+class _LakeFormat(NamedTuple):
+    """What the ``delta`` / ``iceberg`` / ``hudi`` commands need to know
+    about one format. Library functions are ``"module:function"`` refs
+    under the package, imported on use."""
+
+    # (shape, flag dest, report action, function, shape kwarg), in the
+    # order the flags win when several are given
+    ops: tuple
+    cursor: str  # flag dest of the time-travel cursor
+    cursor_at: str | None  # --timestamp-ms → cursor; None: no such flag
+    snapshot: str
+    read: str
+    summary: tuple  # snapshot fields the read report keeps
+
+
+_LAKE_FORMATS = {
+    "delta": _LakeFormat(
+        ops=(
+            ("write", "write", "delta_write",
+             "sinks.deltawrite:write_delta", None),
+            ("delete", "delete_where", "delta_delete",
+             "sinks.deltadml:delta_delete_where", None),
+            ("update", "update_where", "delta_update",
+             "sinks.deltadml:delta_update_where", None),
+            ("upsert", "merge", "delta_merge",
+             "sinks.deltadml:delta_merge", "keys"),
+            ("changes", "changes_since", "delta_changes",
+             "sources.deltaread:delta_changes", "cdf"),
+            ("compact", "optimize", "delta_optimize",
+             "sinks.compact:delta_optimize", None),
+            ("retention", "vacuum_hours", "delta_vacuum",
+             "sinks.compact:delta_vacuum", "retain_hours"),
+            ("history", "history", "delta",
+             "sources.deltaread:delta_history", None),
+        ),
+        cursor="version",
+        cursor_at="sources.deltaread:delta_version_at",
+        snapshot="sources.deltaread:delta_snapshot",
+        read="sources.deltaread:read_delta",
+        summary=("version", "live_files", "partition_columns"),
+    ),
+    "iceberg": _LakeFormat(
+        ops=(
+            ("write", "write", "iceberg_write",
+             "sinks.icebergwrite:write_iceberg", None),
+            ("delete", "delete_where", "iceberg_delete",
+             "sinks.icebergdml:iceberg_delete_where", None),
+            ("upsert", "upsert", "iceberg_upsert",
+             "sinks.icebergdml:iceberg_upsert", "keys"),
+            ("changes", "changes_since", "iceberg_changes",
+             "sources.icebergread:iceberg_changes", "change_rows"),
+            ("compact", "compact", "iceberg_compact",
+             "sinks.compact:iceberg_compact", None),
+            ("retention", "expire_keep_last", "iceberg_expire",
+             "sinks.compact:iceberg_expire_snapshots", "keep_last"),
+            ("history", "snapshots", "iceberg",
+             "sources.icebergread:iceberg_snapshots", None),
+        ),
+        cursor="snapshot_id",
+        cursor_at="sources.icebergread:iceberg_snapshot_at",
+        snapshot="sources.icebergread:iceberg_snapshot",
+        read="sources.icebergread:read_iceberg",
+        summary=("snapshot_id", "format_version", "live_files"),
+    ),
+    "hudi": _LakeFormat(
+        ops=(
+            ("write", "write", "hudi_write",
+             "sinks.hudiwrite:write_hudi", None),
+            ("compact", "compact", "hudi_compact",
+             "sinks.compact:hudi_compact", None),
+            ("retention", "clean_keep_last", "hudi_clean",
+             "sinks.compact:hudi_clean", "keep_last"),
+            ("upsert", "upsert", "hudi_upsert",
+             "sinks.hudiwrite:hudi_upsert", "key_col"),
+            ("changes", "changes_since", "hudi_changes",
+             "sources.hudiread:hudi_changes", "change_rows"),
+            ("history", "timeline", "hudi",
+             "sources.hudiread:hudi_timeline", None),
+        ),
+        cursor="as_of",
+        cursor_at=None,
+        snapshot="sources.hudiread:hudi_snapshot",
+        read="sources.hudiread:read_hudi",
+        summary=("instant", "file_groups"),
+    ),
+}
+
+
+def _lib(ref: str):
+    module, _, name = ref.partition(":")
+    return getattr(
+        importlib.import_module(f"harness_aws_etl_pipeline_spark.{module}"),
+        name,
+    )
+
+
+def _lake_table(name: str, args):
+    """``delta`` / ``iceberg`` / ``hudi``: run the first command shape
+    whose flag was given, else read (and preview) a snapshot."""
+    fmt = _LAKE_FORMATS[name]
+    spark = _spark()
+    # only delta has --cdf: its DML then also writes the change feed
+    cdc = {"change_data": True} if getattr(args, "cdf", False) else {}
+    for shape, flag, action, ref, kw in fmt.ops:
+        given = getattr(args, flag)
+        # a cursor or a retention count may be 0
+        if shape in ("changes", "retention"):
+            if given is None:
+                continue
+        elif not given:
+            continue
+        fn = _lib(ref)
+        if shape == "write":
+            rep = fn(
+                spark, spark.read.parquet(given), args.path, mode=args.mode,
+                partition_by=_split(args.partition_by),
             )
-
-            rep = write_delta(
-                spark,
-                spark.read.parquet(args.write),
-                args.path,
-                mode=args.mode,
-                partition_by=(
-                    args.partition_by.split(",") if args.partition_by else None
-                ),
-            )
-            print(json.dumps({
-                "status": "success", "action": "delta_write", **rep,
-            }))
-            return 0
-        if args.delete_where:
-            from harness_aws_etl_pipeline_spark.sinks.deltadml import (
-                delta_delete_where,
-            )
-
-            rep = delta_delete_where(
-                spark, args.path, args.delete_where,
-                change_data=True if args.cdf else None,
-            )
-            print(json.dumps({
-                "status": "success", "action": "delta_delete", **rep,
-            }))
-            return 0
-        if args.update_where:
-            from harness_aws_etl_pipeline_spark.sinks.deltadml import (
-                delta_update_where,
-            )
-
+        elif shape == "delete":
+            rep = fn(spark, args.path, given, **cdc)
+        elif shape == "update":
             if not args.set:
                 raise SystemExit("--update-where needs at least one --set")
-            set_exprs = {}
-            for s in args.set:
-                c, _, e = s.partition("=")
-                if not _ or not c.strip():
-                    raise SystemExit(f"bad --set clause {s!r} (COL=EXPR)")
-                set_exprs[c.strip()] = e
-            rep = delta_update_where(
-                spark, args.path, args.update_where, set_exprs,
-                change_data=True if args.cdf else None,
+            rep = fn(spark, args.path, given, _assignments(args.set), **cdc)
+        elif shape == "upsert":
+            keys = getattr(args, kw)
+            if not keys:
+                raise SystemExit(f"--{flag} needs --{kw.replace('_', '-')}")
+            if kw == "keys":  # delta/iceberg: a key list; hudi: one column
+                keys = keys.split(",")
+            rep = fn(
+                spark, df=spark.read.parquet(given), path=args.path,
+                **{kw: keys}, **cdc,
             )
-            print(json.dumps({
-                "status": "success", "action": "delta_update", **rep,
-            }))
-            return 0
-        if args.merge:
-            from harness_aws_etl_pipeline_spark.sinks.deltadml import (
-                delta_merge,
-            )
-
-            if not args.keys:
-                raise SystemExit("--merge needs --keys")
-            rep = delta_merge(
-                spark,
-                spark.read.parquet(args.merge),
-                args.path,
-                keys=args.keys.split(","),
-                change_data=True if args.cdf else None,
-            )
-            print(json.dumps({
-                "status": "success", "action": "delta_merge", **rep,
-            }))
-            return 0
-        if args.changes_since is not None:
-            from harness_aws_etl_pipeline_spark.sources.deltaread import (
-                delta_changes,
-            )
-
-            df = delta_changes(
-                spark, args.path, args.changes_since, cdf=args.cdf
-            )
-            print(json.dumps({
-                "status": "success", "action": "delta_changes",
-                "cdf": bool(args.cdf),
-                "rows": df.count(),
-                "preview": [
-                    r.asDict() for r in df.limit(args.show).collect()
-                ],
-            }, default=str))
-            return 0
-        if args.optimize:
-            from harness_aws_etl_pipeline_spark.sinks.compact import (
-                delta_optimize,
-            )
-
-            rep = delta_optimize(spark, args.path)
-            print(json.dumps({
-                "status": "success", "action": "delta_optimize", **rep,
-            }))
-            return 0
-        if args.vacuum_hours is not None:
-            from harness_aws_etl_pipeline_spark.sinks.compact import (
-                delta_vacuum,
-            )
-
-            rep = delta_vacuum(
-                spark, args.path, retain_hours=args.vacuum_hours
-            )
+        elif shape == "changes":
+            df = fn(spark, args.path, given, **{kw: getattr(args, kw)})
+            return {
+                "status": "success", "action": action,
+                kw: bool(getattr(args, kw)), **_preview(df, args.show),
+            }
+        elif shape == "compact":
+            rep = fn(spark, args.path)
+        elif shape == "retention":
+            rep = fn(spark, args.path, **{kw: given})
             rep.pop("candidates", None)
-            print(json.dumps({
-                "status": "success", "action": "delta_vacuum", **rep,
-            }))
-            return 0
-        if args.history:
-            print(json.dumps({
-                "status": "success", "action": "delta",
-                "history": delta_history(spark, args.path),
-            }))
-            return 0
-        version = args.version
-        if args.timestamp_ms is not None:
-            version = delta_version_at(spark, args.path, args.timestamp_ms)
-        snap = delta_snapshot(spark, args.path, version)
-        df = read_delta(spark, args.path, version)
-        if args.output:
-            df.write.mode("overwrite").parquet(args.output)
-        print(json.dumps({
-            "status": "success", "action": "delta",
-            "version": snap["version"],
-            "live_files": len(snap["files"]),
-            "partition_columns": snap["partition_columns"],
-            "rows": df.count(),
-            "preview": [r.asDict() for r in df.limit(args.show).collect()],
-            "output": args.output,
-        }, default=str))
-        return 0
+        else:  # history
+            return {
+                "status": "success", "action": action,
+                flag: fn(spark, args.path),
+            }
+        # write_hudi reports its timeline action; the command's wins
+        rep.pop("action", None)
+        return {"status": "success", "action": action, **rep}
+    cursor = getattr(args, fmt.cursor)
+    if fmt.cursor_at and args.timestamp_ms is not None:
+        cursor = _lib(fmt.cursor_at)(spark, args.path, args.timestamp_ms)
+    snap = _lib(fmt.snapshot)(spark, args.path, cursor)
+    extra = {"drop_meta": args.drop_meta} if "drop_meta" in args else {}
+    df = _lib(fmt.read)(spark, args.path, cursor, **extra)
+    return _read_report(df, args, action=name, **{
+        k: len(snap["files"]) if k == "live_files" else snap[k]
+        for k in fmt.summary
+    })
 
-    if args.cmd == "iceberg":
-        from harness_aws_etl_pipeline_spark.sources.icebergread import (
-            iceberg_snapshot,
-            iceberg_snapshots,
-            read_iceberg,
+
+def _pdf(args):
+    from pyspark.sql import functions as F
+
+    from harness_aws_etl_pipeline_spark.operators.pdf import (
+        pdf_to_documents,
+    )
+
+    src = _spark().read.parquet(args.input)
+    docs = pdf_to_documents(
+        src, id_col=args.id_col, payload_col=args.payload_col
+    )
+    docs = _save(docs, args.output, reread=True)
+    n = docs.count()
+    failed = docs.filter(
+        F.col("text").isNull() & (F.col("page") == 0)
+    ).count()
+    preview = [
+        {"doc_id": r[args.id_col], "page": r["page"],
+         "text": (r["text"] or "")[:80]}
+        for r in docs.orderBy(args.id_col, "page")
+        .limit(args.show).collect()
+    ]
+    return {
+        "status": "success", "action": "pdf",
+        "pages": n - failed, "failed_docs": failed,
+        "preview": preview, "output": args.output,
+    }
+
+
+def _linkgraph(args):
+    from harness_aws_etl_pipeline_spark.operators.incremental import (
+        IncrementalLinkGraph,
+    )
+
+    spark = _spark()
+    g = IncrementalLinkGraph(
+        spark, args.state, src=args.src, dst=args.dst, weight=args.weight
+    )
+    steps = []
+    if args.add_edges:
+        txn = _txn(args, "--add-edges")
+        steps.append(("add_edges", g.add_edges(
+            spark.read.parquet(args.add_edges),
+            txn=txn,
+        )))
+    tol = args.tol if args.tol and args.tol > 0 else None
+    ranks = []
+    if args.pagerank:
+        pr = g.pagerank(
+            iterations=args.iterations, tol=tol,
+            warm_start=not args.cold,
         )
-
-        if args.write:
-            from harness_aws_etl_pipeline_spark.sinks.icebergwrite import (
-                write_iceberg,
-            )
-
-            rep = write_iceberg(
-                spark,
-                spark.read.parquet(args.write),
-                args.path,
-                mode=args.mode,
-                partition_by=(
-                    args.partition_by.split(",") if args.partition_by else None
-                ),
-            )
-            print(json.dumps({
-                "status": "success", "action": "iceberg_write", **rep,
-            }))
-            return 0
-        if args.delete_where:
-            from harness_aws_etl_pipeline_spark.sinks.icebergdml import (
-                iceberg_delete_where,
-            )
-
-            rep = iceberg_delete_where(spark, args.path, args.delete_where)
-            print(json.dumps({
-                "status": "success", "action": "iceberg_delete", **rep,
-            }))
-            return 0
-        if args.upsert:
-            from harness_aws_etl_pipeline_spark.sinks.icebergdml import (
-                iceberg_upsert,
-            )
-
-            if not args.keys:
-                raise SystemExit("--upsert needs --keys")
-            rep = iceberg_upsert(
-                spark,
-                args.path,
-                spark.read.parquet(args.upsert),
-                keys=args.keys.split(","),
-            )
-            print(json.dumps({
-                "status": "success", "action": "iceberg_upsert", **rep,
-            }))
-            return 0
-        if args.changes_since is not None:
-            from harness_aws_etl_pipeline_spark.sources.icebergread import (
-                iceberg_changes,
-            )
-
-            df = iceberg_changes(
-                spark, args.path, args.changes_since,
-                change_rows=args.change_rows,
-            )
-            print(json.dumps({
-                "status": "success", "action": "iceberg_changes",
-                "change_rows": bool(args.change_rows),
-                "rows": df.count(),
-                "preview": [
-                    r.asDict() for r in df.limit(args.show).collect()
-                ],
-            }, default=str))
-            return 0
-        if args.compact:
-            from harness_aws_etl_pipeline_spark.sinks.compact import (
-                iceberg_compact,
-            )
-
-            rep = iceberg_compact(spark, args.path)
-            print(json.dumps({
-                "status": "success", "action": "iceberg_compact", **rep,
-            }))
-            return 0
-        if args.expire_keep_last is not None:
-            from harness_aws_etl_pipeline_spark.sinks.compact import (
-                iceberg_expire_snapshots,
-            )
-
-            rep = iceberg_expire_snapshots(
-                spark, args.path, keep_last=args.expire_keep_last
-            )
-            print(json.dumps({
-                "status": "success", "action": "iceberg_expire", **rep,
-            }))
-            return 0
-        if args.snapshots:
-            print(json.dumps({
-                "status": "success", "action": "iceberg",
-                "snapshots": iceberg_snapshots(spark, args.path),
-            }))
-            return 0
-        snapshot_id = args.snapshot_id
-        if args.timestamp_ms is not None:
-            from harness_aws_etl_pipeline_spark.sources.icebergread import (
-                iceberg_snapshot_at,
-            )
-
-            snapshot_id = iceberg_snapshot_at(
-                spark, args.path, args.timestamp_ms
-            )
-        snap = iceberg_snapshot(spark, args.path, snapshot_id)
-        df = read_iceberg(spark, args.path, snapshot_id)
-        if args.output:
-            df.write.mode("overwrite").parquet(args.output)
-        print(json.dumps({
-            "status": "success", "action": "iceberg",
-            "snapshot_id": snap["snapshot_id"],
-            "format_version": snap["format_version"],
-            "live_files": len(snap["files"]),
-            "rows": df.count(),
-            "preview": [r.asDict() for r in df.limit(args.show).collect()],
-            "output": args.output,
-        }, default=str))
-        return 0
-
-    if args.cmd == "hudi":
-        from harness_aws_etl_pipeline_spark.sources.hudiread import (
-            hudi_snapshot,
-            hudi_timeline,
-            read_hudi,
-        )
-
-        if args.write:
-            from harness_aws_etl_pipeline_spark.sinks.hudiwrite import (
-                write_hudi,
-            )
-
-            rep = write_hudi(
-                spark,
-                spark.read.parquet(args.write),
-                args.path,
-                mode=args.mode,
-                partition_by=(
-                    args.partition_by.split(",") if args.partition_by else None
-                ),
-            )
-            print(json.dumps({
-                "status": "success", **rep, "action": "hudi_write",
-            }))
-            return 0
-        if args.compact:
-            from harness_aws_etl_pipeline_spark.sinks.compact import (
-                hudi_compact,
-            )
-
-            rep = hudi_compact(spark, args.path)
-            print(json.dumps({
-                "status": "success", "action": "hudi_compact", **rep,
-            }))
-            return 0
-        if args.clean_keep_last is not None:
-            from harness_aws_etl_pipeline_spark.sinks.compact import (
-                hudi_clean,
-            )
-
-            rep = hudi_clean(
-                spark, args.path, keep_last=args.clean_keep_last
-            )
-            print(json.dumps({
-                "status": "success", "action": "hudi_clean", **rep,
-            }))
-            return 0
-        if args.upsert:
-            from harness_aws_etl_pipeline_spark.sinks.hudiwrite import (
-                hudi_upsert,
-            )
-
-            if not args.key_col:
-                raise SystemExit("--upsert needs --key-col")
-            rep = hudi_upsert(
-                spark,
-                spark.read.parquet(args.upsert),
-                args.path,
-                key_col=args.key_col,
-            )
-            print(json.dumps({
-                "status": "success", "action": "hudi_upsert", **rep,
-            }))
-            return 0
-        if args.changes_since is not None:
-            from harness_aws_etl_pipeline_spark.sources.hudiread import (
-                hudi_changes,
-            )
-
-            df = hudi_changes(
-                spark, args.path, args.changes_since,
-                change_rows=args.change_rows,
-            )
-            print(json.dumps({
-                "status": "success", "action": "hudi_changes",
-                "change_rows": bool(args.change_rows),
-                "rows": df.count(),
-                "preview": [
-                    r.asDict() for r in df.limit(args.show).collect()
-                ],
-            }, default=str))
-            return 0
-        if args.timeline:
-            print(json.dumps({
-                "status": "success", "action": "hudi",
-                "timeline": hudi_timeline(spark, args.path),
-            }))
-            return 0
-        snap = hudi_snapshot(spark, args.path, args.as_of)
-        df = read_hudi(
-            spark, args.path, args.as_of, drop_meta=args.drop_meta
-        )
-        if args.output:
-            df.write.mode("overwrite").parquet(args.output)
-        print(json.dumps({
-            "status": "success", "action": "hudi",
-            "instant": snap["instant"],
-            "file_groups": snap["file_groups"],
-            "rows": df.count(),
-            "preview": [r.asDict() for r in df.limit(args.show).collect()],
-            "output": args.output,
-        }, default=str))
-        return 0
-
-    if args.cmd == "pdf":
-        from pyspark.sql import functions as F
-
-        from harness_aws_etl_pipeline_spark.operators.pdf import (
-            pdf_to_documents,
-        )
-
-        src = spark.read.parquet(args.input)
-        docs = pdf_to_documents(
-            src, id_col=args.id_col, payload_col=args.payload_col
-        )
-        if args.output:
-            docs.write.mode("overwrite").parquet(args.output)
-            docs = spark.read.parquet(args.output)
-        n = docs.count()
-        failed = docs.filter(
-            F.col("text").isNull() & (F.col("page") == 0)
-        ).count()
-        preview = [
-            {"doc_id": r[args.id_col], "page": r["page"],
-             "text": (r["text"] or "")[:80]}
-            for r in docs.orderBy(args.id_col, "page")
-            .limit(args.show).collect()
-        ]
-        print(json.dumps({
-            "status": "success", "action": "pdf",
-            "pages": n - failed, "failed_docs": failed,
-            "preview": preview, "output": args.output,
+        top = _top_nodes(pr, "pagerank", args.show)
+        steps.append(("pagerank", {
+            "iterations_run": getattr(pr, "_pr_iterations", None),
+            "nodes": pr.count(),
         }))
-        return 0
-
-    if args.cmd == "lake":
-        from harness_aws_etl_pipeline_spark.sources.lakeread import (
-            detect_lake_format,
-            lake_changes,
-            read_lake,
-            write_lake,
+        ranks.append(("pagerank_top", top))
+    if args.hits:
+        h = g.hits(
+            iterations=args.iterations, tol=tol,
+            warm_start=not args.cold,
         )
+        top = _top_nodes(h, "hits", args.show)
+        steps.append(("hits", {
+            "iterations_run": getattr(h, "_hits_iterations", None),
+            "nodes": h.count(),
+        }))
+        ranks.append(("hits_top_auth", top))
+    if args.maintain:
+        steps.append(("maintain", g.maintain()))
+    return {
+        "status": "success", "action": "linkgraph",
+        "steps": [{"step": n, **r} for n, r in steps],
+        **dict(ranks),
+    }
 
-        if args.write:
-            kind = args.format
-            if kind is None:
-                try:
-                    kind = detect_lake_format(spark, args.path)
-                except ValueError:
-                    raise SystemExit(
-                        "--write into a new path needs --format"
-                    )
-            rep = write_lake(
-                spark,
-                spark.read.parquet(args.write),
-                args.path,
-                format=kind,
-                mode=args.mode,
-            )
-            print(json.dumps({
-                "status": "success", "action": "lake_write", **rep,
-            }, default=str))
-            return 0
-        kind = detect_lake_format(spark, args.path)
-        if args.changes_since is not None:
-            df = lake_changes(
-                spark, args.path, args.changes_since,
-                change_rows=args.change_rows,
-            )
-        else:
-            df = read_lake(spark, args.path)
-        if args.output:
-            df.write.mode("overwrite").parquet(args.output)
-        print(json.dumps({
-            "status": "success", "action": "lake", "format": kind,
-            "rows": df.count(),
-            "preview": [r.asDict() for r in df.limit(args.show).collect()],
-            "output": args.output,
-        }, default=str))
-        return 0
 
-    if args.cmd == "lakeview":
-        from pyspark.sql import functions as F
+def _lake(args):
+    from harness_aws_etl_pipeline_spark.sources.lakeread import (
+        detect_lake_format,
+        lake_changes,
+        read_lake,
+        write_lake,
+    )
 
-        from harness_aws_etl_pipeline_spark.plans.lakeview import LakeRollup
-
-        aggs = {}
-        for spec in args.agg:
-            out_name, _, rest = spec.partition("=")
-            kind, _, expr = rest.partition(":")
-            if not out_name.strip() or not kind.strip() or not expr:
-                raise SystemExit(f"bad --agg spec {spec!r} (OUT=KIND:EXPR)")
-            aggs[out_name.strip()] = (kind.strip(), F.expr(expr))
-        v = LakeRollup(
+    spark = _spark()
+    if args.write:
+        kind = args.format
+        if kind is None:
+            try:
+                kind = detect_lake_format(spark, args.path)
+            except ValueError:
+                raise SystemExit(
+                    "--write into a new path needs --format"
+                )
+        rep = write_lake(
             spark,
-            args.source,
-            args.view,
-            args.name,
-            group_cols=args.group_cols.split(","),
-            aggs=aggs,
+            spark.read.parquet(args.write),
+            args.path,
+            format=kind,
+            mode=args.mode,
+        )
+        return {"status": "success", "action": "lake_write", **rep}
+    kind = detect_lake_format(spark, args.path)
+    if args.changes_since is not None:
+        df = lake_changes(
+            spark, args.path, args.changes_since,
             change_rows=args.change_rows,
         )
-        rep = v.refresh()
-        view = v.read()
-        print(json.dumps({
-            "status": "success", "action": "lakeview",
-            **{k: rep[k] for k in ("folded_to", "skipped") if k in rep},
-            "rows": view.count(),
-            "preview": [
-                r.asDict()
-                for r in view.orderBy(*v.group_cols)
-                .limit(args.show)
-                .collect()
-            ],
-        }, default=str))
-        return 0
+    else:
+        df = read_lake(spark, args.path)
+    return _read_report(df, args, action="lake", format=kind)
 
-    if args.cmd == "linkgraph":
-        from pyspark.sql import functions as F
 
-        from harness_aws_etl_pipeline_spark.operators.incremental import (
-            IncrementalLinkGraph,
-        )
+def _lakeview(args):
+    from pyspark.sql import functions as F
 
-        g = IncrementalLinkGraph(
-            spark, args.state, src=args.src, dst=args.dst, weight=args.weight
-        )
-        steps = []
-        if args.add_edges:
-            if args.batch_id is None:
-                p.error("--add-edges requires --batch-id")
-            steps.append(("add_edges", g.add_edges(
-                spark.read.parquet(args.add_edges),
-                txn=(args.txn_id, args.batch_id),
-            )))
-        tol = args.tol if args.tol and args.tol > 0 else None
-        ranks = []
-        if args.pagerank:
-            pr = g.pagerank(
-                iterations=args.iterations, tol=tol,
-                warm_start=not args.cold,
-            )
-            top = pr.orderBy(F.col("rank_scaled").desc(), "node").limit(
-                args.show
-            ).collect()
-            steps.append(("pagerank", {
-                "iterations_run": getattr(pr, "_pr_iterations", None),
-                "nodes": pr.count(),
-            }))
-            ranks.append(("pagerank_top", [
-                {"node": r["node"], "rank": r["rank"]} for r in top
-            ]))
-        if args.hits:
-            h = g.hits(
-                iterations=args.iterations, tol=tol,
-                warm_start=not args.cold,
-            )
-            top = h.orderBy(F.col("auth_scaled").desc(), "node").limit(
-                args.show
-            ).collect()
-            steps.append(("hits", {
-                "iterations_run": getattr(h, "_hits_iterations", None),
-                "nodes": h.count(),
-            }))
-            ranks.append(("hits_top_auth", [
-                {"node": r["node"], "hub": r["hub"], "auth": r["auth"]}
-                for r in top
-            ]))
-        if args.maintain:
-            steps.append(("maintain", g.maintain()))
-        print(json.dumps({
-            "status": "success", "action": "linkgraph",
-            "steps": [{"step": n, **r} for n, r in steps],
-            **dict(ranks),
-        }))
-        return 0
+    from harness_aws_etl_pipeline_spark.plans.lakeview import LakeRollup
 
-    if args.cmd == "drift":
-        from harness_aws_etl_pipeline_spark.operators.drift import (
-            chi2_drift,
-            ks_statistic,
-            psi,
-            psi_report,
-            tvd_drift,
-        )
-
-        ref = spark.read.parquet(args.reference)
-        cur = spark.read.parquet(args.current)
-        out = {"status": "success", "action": "drift", "col": args.col,
-               "kind": args.kind}
-        if args.kind == "numeric":
-            k = ks_statistic(ref, cur, args.col).first()
-            p = psi(ref, cur, args.col, bins=args.bins).first()
-            rep = psi_report(ref, cur, args.col, bins=args.bins).collect()
-            out.update(
-                n_ref=k["n_ref"], n_cur=k["n_cur"],
-                ks=k["ks"], ks_num=str(k["ks_num"]),
-                psi=p["psi"],
-                bins=[
-                    {"bin": r["bin"], "lo": r["lo"], "hi": r["hi"],
-                     "ref_cnt": r["ref_cnt"], "cur_cnt": r["cur_cnt"]}
-                    for r in rep
-                ],
-            )
-        else:
-            t = tvd_drift(ref, cur, args.col).first()
-            c = chi2_drift(ref, cur, args.col).first()
-            out.update(
-                n_ref=t["n_ref"], n_cur=t["n_cur"],
-                tvd=t["tvd"], tvd_num=str(t["tvd_num"]),
-                chi2=c["chi2"], dof=c["dof"], categories=c["categories"],
-            )
-        print(json.dumps(out))
-        return 0
-
-    if args.cmd == "diff":
-        from harness_aws_etl_pipeline_spark.operators.diffing import (
-            diff_summary,
-            table_diff,
-        )
-
-        ref = spark.read.parquet(args.reference)
-        cur = spark.read.parquet(args.current)
-        keys = [k.strip() for k in args.keys.split(",") if k.strip()]
-        cmp_cols = (
-            [c.strip() for c in args.compare_cols.split(",") if c.strip()]
-            if args.compare_cols
-            else None
-        )
-        s = diff_summary(
-            ref, cur, keys, compare_cols=cmp_cols,
-            float_tolerance=args.float_tolerance,
-        ).first()
-        if args.output:
-            table_diff(
-                ref, cur, keys, compare_cols=cmp_cols,
-                float_tolerance=args.float_tolerance,
-            ).write.mode("overwrite").parquet(args.output)
-        print(json.dumps({
-            "status": "success", "action": "diff", "keys": keys,
-            **{k: (bool(v) if isinstance(v, bool) else v)
-               for k, v in s.asDict().items()},
-            "output": args.output,
-        }))
-        return 0
-
-    if args.cmd == "explain":
-        from harness_aws_etl_pipeline_spark.plans.catalog import CATALOG
-
-        if args.query not in CATALOG:
-            print(json.dumps({
-                "status": "failed",
-                "error": f"unknown query {args.query!r}; see COVERAGE.md",
-                "available": sorted(CATALOG),
-            }))
-            return 1
-        df = CATALOG[args.query].builder(spark, args.sf_dir)
-        df.explain(args.mode)
-        return 0
-
-    if args.cmd == "evolve":
-        from harness_aws_etl_pipeline_spark.sources.evolve import (
-            read_parquet_evolved,
-            scan_parquet_schemas,
-        )
-        from harness_aws_etl_pipeline_spark.sinks.fs import get_fs, join_path
-
-        fs = get_fs(args.input, spark)
-        files = [
-            join_path(args.input, rel)
-            for rel, _m, size in fs.list_files(args.input)
-            if rel.endswith(".parquet") and size > 0
-        ]
-        if not files:
-            print(json.dumps({"status": "failed",
-                              "error": f"no parquet files under {args.input}"}))
-            return 1
-        distinct = {
-            sch.simpleString() for _p, sch in scan_parquet_schemas(spark, files)
-        }
-        try:
-            df = read_parquet_evolved(spark, files)
-        except ValueError as exc:
-            print(json.dumps({"status": "failed", "error": str(exc),
-                              "files": len(files),
-                              "schema_versions": len(distinct)}))
-            return 1
-        rows = df.count()
-        if args.output:
-            df.write.mode("overwrite").parquet(args.output)
-        print(json.dumps({
-            "status": "success", "action": "evolve",
-            "files": len(files), "schema_versions": len(distinct),
-            "rows": rows,
-            "evolved_schema": {c: t for c, t in df.dtypes},
-            "output": args.output,
-        }))
-        return 0
-
-    if args.cmd == "tpch":
-        import time as _time
-
-        from harness_aws_etl_pipeline_spark.plans import catalog_tpch as _T
-
-        builders = {
-            tag.replace("tq", "q"): fn for tag, fn, _sql, _cols in _T._PACK
-        }
-        names = (
-            [args.query] if args.query else sorted(builders, key=lambda n: int(n[1:]))
-        )
-        report = {}
-        for name in names:
-            if name not in builders:
-                print(json.dumps({
-                    "status": "failed",
-                    "error": f"unknown query {name!r}; choose from "
-                    f"{sorted(builders)}",
-                }))
-                return 1
-            start = _time.perf_counter()
-            df = builders[name](spark, args.sf_dir)
-            rows = df.collect()
-            report[name] = {
-                "rows": len(rows),
-                "sec": round(_time.perf_counter() - start, 3),
-            }
-            if args.show:
-                report[name]["head"] = [
-                    {k: str(v) for k, v in r.asDict().items()}
-                    for r in rows[: args.show]
-                ]
-        print(json.dumps({
-            "status": "success", "action": "tpch", "sf_dir": args.sf_dir,
-            "queries": report,
-        }))
-        return 0
-
-    if args.cmd == "topk":
-        from harness_aws_etl_pipeline_spark.operators.sketches import (
-            heavy_hitters,
-            heavy_hitters_by,
-        )
-
-        if args.by:
-            hits_df = heavy_hitters_by(
-                spark.read.parquet(args.input), args.by, args.col,
-                k=args.k, capacity=args.capacity, weight=args.weight_col,
-            )
-        else:
-            hits_df = heavy_hitters(
-                spark.read.parquet(args.input), args.col,
-                k=args.k, capacity=args.capacity, weight=args.weight_col,
-            )
-        print(json.dumps({
-            "status": "success", "action": "topk", "col": args.col,
-            "by": args.by,
-            "top": [
-                {
-                    **({"group": r["grp"]} if args.by else {}),
-                    "rank": r["rank"], "key": r["key"],
-                    "count_min": r["count_min"], "count_max": r["count_max"],
-                    "guaranteed": r["guaranteed"],
-                }
-                for r in hits_df.collect()
-            ],
-        }))
-        return 0
-
-    if args.cmd == "overlap":
-        from harness_aws_etl_pipeline_spark.operators.kmv import (
-            kmv_distinct_estimate,
-            kmv_jaccard,
-            kmv_sketch,
-        )
-
-        sk_a = kmv_sketch(spark.read.parquet(args.a), args.col, k=args.k)
-        sk_b = kmv_sketch(
-            spark.read.parquet(args.b), args.col_b or args.col, k=args.k
-        )
-        jac = kmv_jaccard(sk_a, sk_b, k=args.k).first()
-        est_a = kmv_distinct_estimate(sk_a, k=args.k).first()
-        est_b = kmv_distinct_estimate(sk_b, k=args.k).first()
-        print(json.dumps({
-            "status": "success", "action": "overlap", "k": args.k,
-            "jaccard_est": jac["jaccard_est"],
-            "union_basis": jac["union_basis"],
-            "inter_cnt": jac["inter_cnt"],
-            "distinct_a": {"est": est_a["distinct_est"], "exact": est_a["exact"]},
-            "distinct_b": {"est": est_b["distinct_est"], "exact": est_b["exact"]},
-        }))
-        return 0
-
-    if args.cmd == "layout":
-        from harness_aws_etl_pipeline_spark.operators.zorder import (
-            layout_stats,
-            zorder_by,
-        )
-
-        cols = [c.strip() for c in args.by.split(",") if c.strip()]
-        z = zorder_by(
-            spark.read.parquet(args.input), cols,
-            bits=args.bits, partitions=args.partitions,
-        ).persist()  # write + stats read the shuffled layout once
-        z.write.mode("overwrite").parquet(args.output)
-        # stats on the WRITE-side partitions (1 file each) — a re-read
-        # would pack small files together and inflate the boxes
-        srows = layout_stats(z, cols).collect()
-        z.unpersist()
-        spans = {
-            c: round(
-                sum(r[f"{c}_max"] - r[f"{c}_min"] for r in srows)
-                / max(len(srows), 1), 2,
-            )
-            for c in cols
-        }
-        print(json.dumps({
-            "status": "success", "action": "layout", "by": cols,
-            "rows": sum(r["rows"] for r in srows),
-            "avg_partition_span": spans, "output": args.output,
-        }))
-        return 0
-
-    if args.cmd == "probe":
-        from harness_aws_etl_pipeline_spark.operators.containers import (
-            probe_media_containers,
-        )
-
-        meta = probe_media_containers(
-            spark.read.parquet(args.input),
-            payload_col=args.payload_col,
-            id_col=args.id_col,
-        )
-        if args.output:
-            meta.write.mode("overwrite").parquet(args.output)
-            meta = spark.read.parquet(args.output)
-        by_kind = {
-            r["container"]: r["count"]
-            for r in meta.groupBy("container").count().collect()
-        }
-        print(json.dumps({
-            "status": "success", "action": "probe",
-            "rows": sum(by_kind.values()), "containers": by_kind,
-            "output": args.output,
-        }))
-        return 0
-
-    if args.cmd == "rank":
-        from pyspark.sql import functions as F
-
-        from harness_aws_etl_pipeline_spark.operators.linkgraph import (
-            hits,
-            host_graph,
-            pagerank,
-        )
-
-        df = spark.read.parquet(args.input)
-        if args.from_links:
-            edges = host_graph(df, url_col=args.url_col, links_col=args.links_col)
-            wcol = "weight"
-        else:
-            edges = df.withColumnsRenamed(
-                {args.src_col: "src", args.dst_col: "dst"}
-            )
-            wcol = args.weight_col
-        if args.algo == "hits":
-            if args.seed:
-                raise SystemExit("--seed is pagerank-only (personalized PR)")
-            ranks = hits(edges, weight=wcol, iterations=args.iterations)
-            top = [
-                {"node": r["node"], "hub": r["hub"], "auth": r["auth"]}
-                for r in ranks.orderBy(
-                    F.desc("auth_scaled"), "node"
-                ).limit(args.top).collect()
-            ]
-        else:
-            ranks = pagerank(
-                edges, weight=wcol,
-                iterations=args.iterations, damping_pct=args.damping_pct,
-                seeds=args.seed,
-            )
-            top = [
-                {"node": r["node"], "rank": r["rank"]}
-                for r in ranks.orderBy(
-                    F.desc("rank_scaled"), "node"
-                ).limit(args.top).collect()
-            ]
-        if args.output:
-            ranks.write.mode("overwrite").parquet(args.output)
-        print(json.dumps({
-            "status": "success", "action": "rank", "algo": args.algo,
-            "nodes": ranks.count(), "top": top, "output": args.output,
-        }))
-        return 0
-
-    if args.cmd == "annindex":
-        from harness_aws_etl_pipeline_spark.operators.incremental import (
-            IncrementalAnnIndex,
-        )
-
-        ann = IncrementalAnnIndex(
-            spark, args.state, id_col=args.id_col, vec_col=args.vec_col
-        )
-        steps = []
-        if args.build:
-            if args.batch_id is None:
-                p.error("--build requires --batch-id")
-            steps.append(("build", ann.build(
-                spark.read.parquet(args.build),
-                nlist=args.nlist, m=args.m, k=args.k_codes,
-                txn=(f"{args.txn_id}-build", args.batch_id),
-            )))
-        if args.add_batch:
-            if args.batch_id is None:
-                p.error("--add-batch requires --batch-id")
-            steps.append(("add_batch", ann.add_batch(
-                spark.read.parquet(args.add_batch),
-                txn=(args.txn_id, args.batch_id),
-            )))
-        if args.recalibrate:
-            if not args.corpus:
-                p.error("--recalibrate requires --corpus (raw vectors)")
-            cal = ann.recalibrate(
-                spark.read.parquet(args.recalibrate),
-                spark.read.parquet(args.corpus),
-                target_recall=args.target_recall,
-                topk=args.topk,
-            )
-            steps.append(("recalibrate", {
-                "nprobe": cal["nprobe"],
-                "scan_fraction": round(cal["scan_fraction"], 4),
-                "queries": cal["queries"],
-            }))
-        rows = None
-        if args.queries:
-            res = ann.search(
-                spark.read.parquet(args.queries),
-                topk=args.topk,
-                rerank_with=(
-                    spark.read.parquet(args.rerank_with)
-                    if args.rerank_with else None
-                ),
-            )
-            if args.output:
-                res.write.mode("overwrite").parquet(args.output)
-            rows = [r.asDict() for r in res.limit(args.show).collect()]
-        print(json.dumps({
-            "status": "success", "action": "annindex",
-            "steps": [{"step": n, **r} for n, r in steps],
-            "stats": ann.stats()
-            if ann.table.current_version() is not None else None,
-            "search_preview": rows, "output": args.output,
-        }))
-        return 0
-
-    if args.cmd == "ann":
-        from harness_aws_etl_pipeline_spark.operators.dedup_api import (
-            similarity_search,
-        )
-
-        cands = spark.read.parquet(args.input)
-        queries = spark.read.parquet(args.queries)
-        kw = (
-            {"rerank": True}
-            if (args.rerank and args.method in ("pq", "ivfpq"))
-            else {}
-        )
-        if args.method == "ivfpq":
-            kw["nprobe"] = args.nprobe
-        if args.model and args.method == "ivf":
-            from harness_aws_etl_pipeline_spark.operators.similarity import (
-                ivf_centroids,
-                load_ivf,
-                save_ivf,
-            )
-            from harness_aws_etl_pipeline_spark.sinks.fs import get_fs
-
-            if get_fs(args.model, spark).exists(args.model):
-                kw["centroids"] = load_ivf(args.model, spark)
-            else:
-                kw["centroids"] = ivf_centroids(
-                    cands, id_col=args.id_col, vec_col=args.vec_col
-                )
-                save_ivf(kw["centroids"], args.model, spark)
-        if args.model and args.method == "pq":
-            from harness_aws_etl_pipeline_spark.operators.pq import (
-                load_pq,
-                save_pq,
-                train_pq,
-            )
-            from harness_aws_etl_pipeline_spark.sinks.fs import get_fs
-
-            if get_fs(args.model, spark).exists(args.model):
-                kw["model"] = load_pq(args.model, spark)
-            else:
-                kw["model"] = train_pq(
-                    cands, vec_col=args.vec_col, id_col=args.id_col
-                )
-                save_pq(kw["model"], args.model, spark)
-        out = similarity_search(
-            cands, queries, method=args.method, k=args.k,
-            id_col=args.id_col, vec_col=args.vec_col, **kw,
-        )
-        n = out.count()
-        if args.output:
-            out.write.mode("overwrite").parquet(args.output)
-        print(json.dumps({
-            "status": "success", "method": args.method, "k": args.k,
-            "result_rows": n, "output": args.output,
-        }))
-        return 0
-
-    if args.cmd == "corpus":
-        df = spark.read.parquet(args.input)
-        if args.action == "dedup":
-            from harness_aws_etl_pipeline_spark.operators.dedup_api import (
-                deduplicate,
-            )
-
-            # corpus semantics: exact/hash dedup keys on CONTENT, not
-            # the whole row (doc ids differ between duplicate docs)
-            subset = (
-                [args.text_col] if args.method in ("exact", "hash") else None
-            )
-            out = deduplicate(
-                df, method=args.method, id_col=args.id_col,
-                text_col=args.text_col, threshold=args.threshold,
-                subset=subset,
-            )
-        elif args.action == "decontam":
-            if not args.benchmark:
-                print(json.dumps({"status": "failed",
-                                  "error": "--benchmark required"}))
-                return 1
-            from harness_aws_etl_pipeline_spark.operators.decontam import (
-                decontaminate,
-            )
-
-            bench = spark.read.parquet(args.benchmark)
-            out = decontaminate(
-                df, bench, n=args.ngram, id_col=args.id_col,
-                text_col=args.text_col,
-            )
-        elif args.action == "span-dedup":
-            from harness_aws_etl_pipeline_spark.operators.spandedup import (
-                remove_duplicated_spans,
-            )
-
-            out = remove_duplicated_spans(
-                df, k=args.ngram, id_col=args.id_col, text_col=args.text_col
-            )
-        elif args.action == "filter":
-            from harness_aws_etl_pipeline_spark.operators.filters import (
-                apply_quality_filters,
-            )
-
-            out = apply_quality_filters(
-                df, args.preset, text_col=args.text_col, mode="filter"
-            )
-        elif args.action == "train-scorer":
-            from harness_aws_etl_pipeline_spark.operators.classifier import (
-                save_model,
-                train_quality_classifier,
-            )
-
-            if not args.model:
-                print(json.dumps({"status": "failed",
-                                  "error": "--model required"}))
-                return 1
-            labeled = df
-            label_col = args.label_col
-            if label_col is None:
-                from pyspark.sql import functions as SF
-
-                from harness_aws_etl_pipeline_spark.operators.filters import (
-                    apply_quality_filters,
-                )
-
-                labeled = apply_quality_filters(
-                    df, args.preset, text_col=args.text_col
-                ).withColumn("__label", SF.col("_qf_pass").cast("int"))
-                label_col = "__label"
-            m = train_quality_classifier(
-                labeled, label_col, text_col=args.text_col, id_col=args.id_col
-            )
-            save_model(m, args.model, spark)
-            print(json.dumps({
-                "status": "success", "model": args.model,
-                "n": m["n"], "final_loss": m["losses"][-1],
-                "iterations": len(m["losses"]),
-            }))
-            return 0
-        elif args.action == "score":
-            from harness_aws_etl_pipeline_spark.operators.classifier import (
-                load_model,
-                score_quality,
-            )
-
-            if not args.model:
-                print(json.dumps({"status": "failed",
-                                  "error": "--model required"}))
-                return 1
-            out = score_quality(
-                df, load_model(args.model, spark), text_col=args.text_col
-            )
-        elif args.action == "tokenize":
-            from harness_aws_etl_pipeline_spark.operators.bpe import (
-                apply_bpe,
-                train_bpe,
-            )
-
-            merges = train_bpe(df, num_merges=args.merges, text_col=args.text_col)
-            out = apply_bpe(df, merges, text_col=args.text_col)
-        elif args.action == "prepare":
-            from harness_aws_etl_pipeline_spark.operators.corpus_pipeline import (
-                prepare_corpus,
-            )
-
-            bench_df = (
-                spark.read.parquet(args.benchmark) if args.benchmark else None
-            )
-            rules = None
-            if args.suffix_list:
-                from harness_aws_etl_pipeline_spark.operators.urlops import (
-                    load_suffix_list,
-                )
-
-                rules = load_suffix_list(args.suffix_list, spark)
-            out, stage_report = prepare_corpus(
-                df,
-                id_col=args.id_col,
-                text_col=args.text_col,
-                normalize=args.normalize,
-                filter_preset=args.preset if args.gate else None,
-                line_dedup_min_count=args.line_min,
-                span_dedup_k=args.span_k,
-                benchmark=bench_df,
-                decontam_n=args.ngram,
-                dedup_method=args.method if args.method != "none" else None,
-                dedup_threshold=args.threshold,
-                url_col=args.url_col,
-                max_docs_per_host=args.max_docs_per_host,
-                url_columns=args.suffix_list is not None,
-                suffix_rules=rules,
-                html_col=args.html_col,
-                pdf_col=args.pdf_col,
-                office_col=args.office_col,
-            )
-            rows_in = df.count()
-            if args.output:
-                out.write.mode("overwrite").parquet(args.output)
-                rows_out = spark.read.parquet(args.output).count()
-            else:
-                rows_out = out.count()
-            print(json.dumps({
-                "status": "success", "action": "prepare",
-                "rows_in": rows_in, "rows_out": rows_out,
-                "stages": stage_report, "output": args.output,
-            }))
-            return 0
-        elif args.action == "takedown":
-            from harness_aws_etl_pipeline_spark.operators.takedown import (
-                TakedownRules,
-                apply_takedown,
-                apply_takedown_ids,
-                takedown_report,
-            )
-
-            def _literal_ids(raw: str) -> tuple:
-                # string doc_ids are first-class: only an all-digit
-                # token compares as int (back-compat with long id
-                # columns), everything else stays a string
-                toks = [t.strip() for t in raw.split(",") if t.strip()]
-                return tuple(int(t) if t.isdigit() else t for t in toks)
-
-            block_ids: tuple = ()
-            out, report = df, {}
-            if args.block_ids_path:
-                # explicit parquet blocklist → bulk anti-join path;
-                # regex/hash rules (if any) run as a second pass
-                blocked = spark.read.parquet(args.block_ids_path)
-                pre = out.count()
-                out = apply_takedown_ids(out, blocked, id_col=args.id_col)
-                report = {"matched_ids_bulk": pre - out.count()}
-            if args.block_ids and not args.block_ids.replace(",", "").replace(
-                "-", ""
-            ).strip().isdigit():
-                # legacy heuristic: non-digit --block-ids used to mean
-                # "parquet path". Try that read, but fall back to the
-                # literal-string-id path so corpora with string doc_ids
-                # (e.g. 'abc123,def') are not misrouted to a
-                # confusing path error.
-                try:
-                    blocked = spark.read.parquet(args.block_ids)
-                except Exception:
-                    block_ids = _literal_ids(args.block_ids)
-                else:
-                    # per-pass count: snapshot BEFORE this apply so a
-                    # preceding --block-ids-path pass isn't re-counted
-                    pre = out.count()
-                    out = apply_takedown_ids(out, blocked, id_col=args.id_col)
-                    report["matched_ids_bulk"] = report.get(
-                        "matched_ids_bulk", 0
-                    ) + (pre - out.count())
-            elif args.block_ids:
-                block_ids = _literal_ids(args.block_ids)
-            if block_ids or args.block_url_pattern or args.block_hash:
-                rules = TakedownRules(
-                    ids=block_ids,
-                    url_patterns=tuple(args.block_url_pattern),
-                    content_hashes=tuple(args.block_hash),
-                )
-                report.update(
-                    takedown_report(
-                        out, rules, id_col=args.id_col,
-                        url_col=args.url_col, text_col=args.text_col,
-                    ).collect()[0].asDict()
-                )
-                out = apply_takedown(
-                    out, rules, id_col=args.id_col,
-                    url_col=args.url_col, text_col=args.text_col,
-                )
-            elif not report:
-                print(json.dumps({"status": "failed",
-                                  "error": "no takedown rules given"}))
-                return 1
-            if args.output:
-                out.write.mode("overwrite").parquet(args.output)
-            print(json.dumps({
-                "status": "success", "action": "takedown",
-                "audit": report, "output": args.output,
-            }))
-            return 0
-        else:  # report: corpus summary + per-rule gate counts, no write
-            from harness_aws_etl_pipeline_spark.operators.corpus_report import (
-                corpus_report,
-            )
-            from harness_aws_etl_pipeline_spark.operators.filters import (
-                quality_filter_report,
-            )
-
-            row = quality_filter_report(
-                df, args.preset, text_col=args.text_col
-            ).collect()[0]
-            summary = corpus_report(
-                df, text_col=args.text_col, filter_preset=None
-            )
-            print(json.dumps({"status": "success", **summary, **row.asDict()}))
-            return 0
-        rows_in = df.count()
-        if args.output:
-            out.write.mode("overwrite").parquet(args.output)
-            rows_out = spark.read.parquet(args.output).count()  # no recompute
-        else:
-            rows_out = out.count()
-        print(json.dumps({
-            "status": "success", "action": args.action,
-            "rows_in": rows_in, "rows_out": rows_out,
-            "rows_removed": rows_in - rows_out,
-            "output": args.output,
-        }))
-        return 0
-
-    if args.cmd == "sql":
-        from harness_aws_etl_pipeline_spark.plans.sqlapi import sql as run_sql
-
-        df = run_sql(spark, args.sf_dir, args.query)
-        for row in df.limit(args.limit).collect():
-            print(json.dumps(row.asDict(), default=str))
-        return 0
-
-    from harness_aws_etl_pipeline_spark.meta import JobRuns
-    from harness_aws_etl_pipeline_spark.pipeline import run_job
-
-    overrides: dict = {"etl": {"load": {"format": args.format}}}
-    if args.null_handling:
-        overrides["etl"]["transform"] = {"null_handling": args.null_handling}
-    cfg = EngineConfig(overrides)
-    job_runs = JobRuns(spark, args.job_runs) if args.job_runs else None
-
-    source_info = (
-        {"type": "direct", "path": args.source}
-        if args.cmd == "run"
-        else {"type": "batch", "prefix": args.prefix}
+    aggs = {}
+    for spec in args.agg:
+        out_name, _, rest = spec.partition("=")
+        kind, _, expr = rest.partition(":")
+        if not out_name.strip() or not kind.strip() or not expr:
+            raise SystemExit(f"bad --agg spec {spec!r} (OUT=KIND:EXPR)")
+        aggs[out_name.strip()] = (kind.strip(), F.expr(expr))
+    v = LakeRollup(
+        _spark(),
+        args.source,
+        args.view,
+        args.name,
+        group_cols=args.group_cols.split(","),
+        aggs=aggs,
+        change_rows=args.change_rows,
     )
-    try:
-        result = run_job(spark, source_info, args.output, cfg, job_runs=job_runs)
-    except Exception as exc:  # noqa: BLE001 - CLI boundary
-        print(json.dumps({"status": "failed", "error": str(exc)[:2000]}))
-        return 1
-    print(json.dumps(result, default=str))
-    return 0 if result.get("status") in ("success", "skipped") else 1
+    rep = v.refresh()
+    view = v.read()
+    return {
+        "status": "success", "action": "lakeview",
+        **{k: rep[k] for k in ("folded_to", "skipped") if k in rep},
+        "rows": view.count(),
+        "preview": _rows(view.orderBy(*v.group_cols), args.show),
+    }
 
 
 if __name__ == "__main__":

@@ -43,20 +43,6 @@ _SIG_MEMO = PlanMemo()
 _SKETCH_MEMO = PlanMemo()
 
 
-def shingle_sets(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 5
-) -> DataFrame:
-    """(id, shingles array, set size) — distinct shingles per doc."""
-    return (
-        df.select(F.col(id_col).alias("doc_id"), tokens(text_col).alias("__toks"))
-        .select(
-            "doc_id",
-            shingles("__toks", n, pretokenized=True).alias("shingles"),
-        )
-        .withColumn("set_size", F.size("shingles"))
-    )
-
-
 def hashed_shingle_sets(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -88,10 +88,6 @@ def quality_score(text_col: str = "text") -> Column:
     return F.round(length_score * 0.4 + punct_penalty * 0.3 + sw_score * 0.3, 6)
 
 
-def add_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn("quality", quality_score(text_col))
-
-
 def exact_fingerprint(col: Column | str) -> Column:
     """Exact content fingerprint: md5 hex of the raw text."""
     c = F.col(col) if isinstance(col, str) else col
@@ -108,12 +104,6 @@ def rolling_fingerprint(col: Column | str, base: int = 31, mod: int = 1_000_000_
         toks,
         F.lit(0).cast("long"),
         lambda acc, t: (acc * base + F.length(t)) % mod,
-    )
-
-
-def add_fingerprints(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn("fp_md5", exact_fingerprint(text_col)).withColumn(
-        "fp_rolling", rolling_fingerprint(text_col)
     )
 
 

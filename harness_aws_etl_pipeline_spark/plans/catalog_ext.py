@@ -1610,7 +1610,7 @@ def q_near_dup_clusters(
     # survivor_cnt. And when the pair graph fits the driver gate the
     # clustering already collects every edge (union-find), so the two
     # counts come straight off the union-find structure
-    # (near_dup_cluster_stats) instead of round-tripping N label rows
+    # (near_dup_panel_stats) instead of round-tripping N label rows
     # through createDataFrame + an aggregation job (guide §1.2/§5:
     # don't re-distribute data the driver already holds). Over the
     # gate, the distributed labels + aggregation run as before.
